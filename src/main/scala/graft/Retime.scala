@@ -24,7 +24,8 @@ object Retime {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark.range(1000).selectExpr("sum(id)")
+      .write.mode("overwrite").format("noop").save()
     val qs = SparkEntry.all.filter(q => names.contains(q.name))
     val unknown = names.filterNot(qs.map(_.name).contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

@@ -1,7 +1,8 @@
 package graft.catalog
 
+import graft.sources.{GraftDeltaSlice, GraftScan, GraftSnapshot, GraftTable}
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -418,10 +419,8 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
   }
 
   /** Base parquet files minus dropped range partitions — the ONE listing
-    * every path-level base reader (connector planning, aligned insert,
-    * SHOW PARTITIONS) must use, or dropped rows resurrect on that path.
-    * The DataFrame read path applies the same exclusion as a partition
-    * filter in [[rawTable]].
+    * every base reader (the read [[snapshot]], aligned insert, SHOW
+    * PARTITIONS) must use, or dropped rows resurrect on that path.
     */
   private[graft] def liveBaseFiles(name: String): Seq[String] = {
     val files = graft.sources.GraftScan.listParquet(dataDir(name))
@@ -459,8 +458,8 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     * 100-TB table is one metadata write (no rewrite, no tombstones, no
     * shuffle; Kudu deletes the tablets). Mechanics here: the value joins
     * `dropped_ranges` (tmp+ATOMIC_MOVE), every read path excludes it (the
-    * DataFrame path via a partition filter that prunes at planning, the
-    * file-listing paths via [[liveBaseFiles]]), and the NEXT compact/
+    * read snapshot and every file-listing path take base files from
+    * [[liveBaseFiles]]), and the NEXT compact/
     * overwrite rebuilds the base without those directories and clears the
     * list — the displaced generation (including the dropped dirs) is
     * reclaimed by the existing litter sweep / VACUUM.
@@ -1048,24 +1047,68 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
       storage.writeString(dst.resolve("_meta.json"), storage.readString(meta))
   }
 
-  /** Current table contents. Fast path with no pending mutations reads the
-    * base directly; with pending delta layers (merge-on-read, see [[upsert]])
-    * the effective row per key is the highest-sequence version, tombstones
-    * removed.
+  /** Current table contents: the connector's merge-on-read scan
+    * ([[graft.sources.GraftScan]]) over a snapshot resolved NOW — base
+    * files plus every committed delta layer, merged per hash bucket with no
+    * shuffle (Kudu merges DiskRowSets and DeltaFiles inside the tablet
+    * scan the same way). The snapshot is pinned in the frame: every action
+    * on it reads the same files, across later writes and across ONE later
+    * overwrite/compact (the displaced generation stays on disk until the
+    * next one's sweep). A task whose bucket holds more than
+    * `spark.graft.connector.maxOverlayRows` pending mutation rows fails
+    * with "compact the table".
     */
-  def table(name: String): DataFrame =
-    effective(name).drop(internalCols(name): _*)
+  def table(name: String): DataFrame = read(snapshot(name))
 
   /** Snapshot read at a mutation version (Kudu READ_AT_SNAPSHOT analog):
     * version 0 = the compacted base, version v = base + delta layers ≤ v.
     * Free with merge-on-read — the overlay just stops at the version.
     * Note [[compact]] folds layers into the base, advancing what version 0
-    * means; snapshots are stable between compactions.
+    * means; snapshots are stable between compactions. Pinned like
+    * [[table]].
     */
-  def tableAsOf(name: String, version: Int): DataFrame = {
-    requireVersionReadable(name, version)
-    effective(name, Some(version)).drop(internalCols(name): _*)
+  def tableAsOf(name: String, version: Int): DataFrame =
+    read(snapshot(name, Some(version)))
+
+  /** The snapshot a read of `name` (at `asOf`, else live) plans from:
+    * resolved with THIS catalog's storage — its manifest, its
+    * dropped-range list and its layer-visibility rule — so a crashed,
+    * uncommitted layer stays invisible on every backend.
+    */
+  private[graft] def snapshot(name: String, asOf: Option[Int] = None): GraftSnapshot = {
+    if (!exists(name)) throw new CatalogException(s"table $name does not exist")
+    asOf.foreach(requireVersionReadable(name, _))
+    val live = deltaLayers(name)
+    val deltas = live.filter { case (seq, _) => asOf.forall(seq <= _) }
+      .map { case (seq, dir) => GraftDeltaSlice(seq, GraftScan.listParquet(dir)) }
+      .filter(_.files.nonEmpty)
+    val keys = keyColsOf(name)
+    // the _sort marker must PROVE key order; only a delta-free read can use it
+    val keySorted = deltas.isEmpty && {
+      val marker = Paths.get(dataDir(name)).resolve("_sort")
+      try storage.exists(marker) && storage.readString(marker) == keys.mkString(",")
+      catch { case _: Exception => false }
+    }
+    GraftSnapshot(name, keys, bucketsOf(name), hashColsOf(name),
+      rangeColOf(name), rangeBoundsOf(name),
+      // pre-zone legacy tables wrote their __range values under UTC
+      zoneOf(name).getOrElse("UTC"), rangePattern(name),
+      liveBaseFiles(name), deltas, asOf, keySorted,
+      if (asOf.isDefined) None
+      else Some(fingerprintOf(name, live.lastOption.map(_._1).getOrElse(0))))
   }
+
+  /** A frame over the connector scan of `snap`, pinned in the relation.
+    * Columns are reported nullable, as parquet reads report them; the
+    * declared key non-nullness is enforced on write.
+    */
+  private def read(snap: GraftSnapshot): DataFrame =
+    org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftTable(this, snap.table,
+          StructType(readSchema(snap.table).fields.map(_.copy(nullable = true))),
+          pinned = Some(snap)),
+        None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
 
   /** A snapshot version is readable iff it is not stale on either side:
     * above the delta floor (compact/overwrite folded older layers into the
@@ -1157,10 +1200,12 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     * version — exactly the changelog-staleness hole `base_epoch` exists
     * to close, and stats would fall into the same hole without it.
     */
-  def statsFingerprint(name: String): String = {
+  def statsFingerprint(name: String): String = fingerprintOf(name, currentVersion(name))
+
+  private def fingerprintOf(name: String, version: Int): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(storage.readAllBytes(metaFile(name)))
-    md.update(s":${currentVersion(name)}:${baseEpoch(name)}".getBytes("UTF-8"))
+    md.update(s":$version:${baseEpoch(name)}".getBytes("UTF-8"))
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -1340,12 +1385,18 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     * (fingerprint match) — None when absent or stale, so planners can never
     * consume statistics from before a mutation, DDL, or maintenance op.
     */
-  def statsOf(name: String): Option[TableStats] = {
-    if (!exists(name) || !storage.exists(statsFile(name))) return None
+  def statsOf(name: String): Option[TableStats] =
+    if (!exists(name)) None else statsAt(name, statsFingerprint(name))
+
+  /** The persisted statistics record IF it was stamped with `fingerprint`
+    * — how a pinned snapshot finds the record describing exactly it.
+    */
+  private[graft] def statsAt(name: String, fingerprint: String): Option[TableStats] = {
+    if (!storage.exists(statsFile(name))) return None
     val parsed =
       try TableStats.fromJson(storage.readString(statsFile(name)))
       catch { case _: Exception => return None }
-    if (parsed.fingerprint == statsFingerprint(name)) Some(parsed) else None
+    if (parsed.fingerprint == fingerprint) Some(parsed) else None
   }
 
   /** Change feed (CDC): every mutation row applied in versions
@@ -1372,118 +1423,31 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Base+delta overlay with internal columns retained (for pruned lookups).
-    * Kudu's read path does exactly this merge across DiskRowSets and
-    * DeltaFiles; [[compact]] folds it down again.
-    */
-  private def effective(name: String, asOf: Option[Int] = None): DataFrame = {
-    val seqs = deltaSeqs(name).filter(q => asOf.forall(q <= _))
-    if (seqs.isEmpty) rawTable(name)
-    else {
-      val keys = keyColsOf(name)
-      val base = rawTable(name)
-        .withColumn(OpCol, lit("upsert")).withColumn(SeqCol, lit(0))
-      val layers = seqs.map(q => readDelta(name, q).withColumn(SeqCol, lit(q)))
-      val unioned = layers.foldLeft(base)((acc, d) => acc.unionByName(d))
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(col(SeqCol).desc)
-      unioned
-        .withColumn("__v", row_number().over(w))
-        .filter(col("__v") === 1 && col(OpCol) === "upsert")
-        .drop("__v", OpCol, SeqCol)
-    }
-  }
-
-  /** Point/short-key lookup on a bucketed table: the key hash selects the
-    * bucket, so the scan prunes to ONE directory partition out of N (the
-    * Kudu "route to owning tablet" read path). Falls back to a plain filter
-    * on unbucketed tables.
+  /** Point/short-key lookup: a key-equality filter over [[table]]. The
+    * connector routes it to the ONE hash bucket that can hold the key (the
+    * Kudu "route to owning tablet" read path) on bucketed tables, and
+    * parquet row-group statistics prune inside it.
     */
   def lookup(name: String, keyValues: Any*): DataFrame = {
     val keys = keyColsOf(name)
     require(keyValues.length == keys.length, s"expected ${keys.length} key values")
-    // Literals MUST be cast to the declared key types before hashing: hash()
-    // of an Int literal differs from hash() of the stored Long, which would
-    // route the bucket filter to the wrong partition and return empty.
+    // Literals are cast to the declared key types, so the pushed equality
+    // carries the stored type and the bucket hash matches the writer's
+    // (hash() of an Int differs from hash() of the same value as a Long).
     val schema = readSchema(name)
-    val typedLits = keys.zip(keyValues).map { case (k, v) =>
-      lit(v).cast(schema(k).dataType)
-    }
-    val keyFilter = keys.zip(typedLits)
-      .map { case (k, v) => col(k) === v }.reduce(_ && _)
-    val b = bucketsOf(name)
-    // bucket + key filters push through the delta-overlay union into every
-    // layer's parquet scan, so pruning survives pending mutations. The
-    // bucket hash covers the DECLARED hash columns only (a PK subset when
-    // one was declared) — typed literals selected by position.
-    val hashLits = {
-      val byKey = keys.zip(typedLits).toMap
-      hashColsOf(name).map(byKey)
-    }
-    val base =
-      if (b > 0) effective(name)
-        .filter(col(BucketCol) === pmod(hash(hashLits: _*), lit(b)))
-      else effective(name)
-    base.filter(keyFilter).drop(internalCols(name): _*)
+    table(name).filter(keys.zip(keyValues)
+      .map { case (k, v) => col(k) === lit(v).cast(schema(k).dataType) }.reduce(_ && _))
   }
 
-  /** Time-range scan on a range-partitioned table: prunes to the month
-    * directories overlapping [from, to) before the row-level filter (the
-    * analog of Kudu range-partition pruning).
+  /** Time-range scan on a range-partitioned table: a [from, to) filter
+    * over [[table]]; the connector prunes base files to the `__range`
+    * partitions overlapping it before any row is read (the analog of Kudu
+    * range-partition pruning).
     */
   def lookupRange(name: String, from: java.sql.Timestamp, to: java.sql.Timestamp): DataFrame = {
     val rc = rangeColOf(name).getOrElse(
       throw new CatalogException(s"table $name is not range-partitioned"))
-    // both sides of the pruning derive from ONE clock: __range partition
-    // values were written by date_format under the zone recorded at CREATE
-    // time (writes assert the session still matches it — [[assertZone]]),
-    // so bounds format under that recorded zone no matter what zone the
-    // READING session runs in. Tables created before zones were recorded
-    // had their __range values written under UTC (the round-1 convention),
-    // so the fallback is UTC — NOT the reading session's zone, which could
-    // format boundary months under the wrong clock. ZoneId.of (not
-    // TimeZone.getTimeZone, which silently falls back to GMT) so
-    // offset-style ids like "+08:00" work.
-    val zone = java.time.ZoneId.of(zoneOf(name).getOrElse("UTC"))
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern(rangePattern(name)).withZone(zone)
-    val fromMonth = fmt.format(from.toInstant)
-    val toMonth = fmt.format(to.toInstant)
-    effective(name)
-      .filter(col(RangeCol) >= fromMonth && col(RangeCol) <= toMonth)
-      .filter(col(rc) >= lit(from) && col(rc) < lit(to))
-      .drop(internalCols(name): _*)
-  }
-
-  /** Internal layout columns a logical read must shed: directory-partition
-    * levels plus the composite-range sub-levels (`drop` ignores absentees,
-    * so this is safe on every table shape).
-    */
-  private def internalCols(name: String): Seq[String] =
-    Seq(BucketCol, RangeCol) ++
-      rangeSubColsOf(name).indices.map(i => s"$RangeCol${i + 2}")
-
-  private def rawTable(name: String): DataFrame = {
-    if (!exists(name)) throw new CatalogException(s"table $name does not exist")
-    var schema = readSchema(name)
-    val subs = rangeSubColsOf(name)
-    if (rangeColOf(name).isDefined) {
-      schema = schema.add(StructField(RangeCol, StringType))
-      subs.indices.foreach(i =>
-        schema = schema.add(StructField(s"$RangeCol${i + 2}", StringType)))
-    }
-    if (bucketsOf(name) > 0) schema = schema.add(StructField(BucketCol, IntegerType))
-    val df = spark.read.schema(schema).parquet(dataDir(name))
-    // dropped range partitions: the filter is on DIRECTORY columns, so
-    // Spark prunes those partitions at planning — the DataFrame twin of
-    // liveBaseFiles' path exclusion (composite entries match each level)
-    val dropped = droppedRangesOf(name)
-    if (dropped.isEmpty) df
-    else df.filter(!dropped.map { entry =>
-      val parts = entry.split("/", -1).toSeq
-      val head = col(RangeCol) === parts.head
-      parts.tail.zipWithIndex.map { case (v, i) => col(s"$RangeCol${i + 2}") === v }
-        .foldLeft(head)(_ && _)
-    }.reduce(_ || _))
+    table(name).filter(col(rc) >= lit(from) && col(rc) < lit(to))
   }
 
   /** Shared partitioned-write path: range dirs (month granularity) outer,
@@ -1699,10 +1663,10 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     *     generation (zero data movement, the [[addRangePartition]]
     *     mechanic); dropped subtrees are excluded, so retention folds
     *     physically at O(file-count) instead of O(table).
-    *  3. Touched ranges rewrite from the connector's merge-on-read scan,
-    *     base files pruned to those ranges at PLANNING time
-    *     (`graft.include_ranges`) — the fold reads touched data + deltas,
-    *     never the 100-TB untouched remainder.
+    *  3. Touched ranges rewrite from the connector's merge-on-read scan
+    *     of a snapshot whose base files are restricted to those ranges —
+    *     the fold reads touched data + deltas, never the 100-TB untouched
+    *     remainder.
     *  4. Same one-swap commit as [[compact]]: base repoint + delta floor +
     *     cleared drop list in one atomic meta move (cut points
     *     `icompact.staged` / `icompact.committed`).
@@ -1772,15 +1736,15 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
       val rid = concat_ws("/",
         rangeIdExpr(name, rc) +:
           subCols.map(c => col(c).cast("string")): _*)
-      val merged = spark.read.format("graft")
-        .option("root", root)
-        .option("graft.include_ranges",
-          touched.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(","))
-        .load(name)
-        .select(readSchema(name).fieldNames.map(col).toSeq: _*)
-        // belt-and-braces residual: the planning-time base pruning already
-        // restricts to touched ranges; this keeps any overlay row outside
-        // them (impossible under the exclusive lock) out of the rewrite
+      // deltas stay whole (the overlay owns suppression); only the base is
+      // restricted — sound because every range column is a key column
+      val snap = snapshot(name)
+      val merged = read(snap.copy(fingerprint = None,
+        baseFiles = snap.baseFiles.filter(f => rangeIdOfPath(f, nSub)
+          .exists(id => touched.exists(droppedCovers(_, id))))))
+        // belt-and-braces residual: the base restriction already keeps to
+        // the touched ranges; this keeps any overlay row outside them
+        // (impossible under the exclusive lock) out of the rewrite
         .where(rid.isin(touched: _*))
       writePartitioned(merged, keys, bucketsOf(name), rangeColOf(name),
         staged.toString, SaveMode.Append, hashCols = hashColsOf(name),
@@ -1806,16 +1770,10 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     // fold applies harmlessly twice). Computing the floor at commit time
     // would retire such a layer unfolded — a lost write.
     val floor = rawDeltaSeqs(name).lastOption.getOrElse(0).max(deltaFloorOf(name))
-    // Fold through the CONNECTOR scan, not [[table]]: the DSv2 reader
-    // merges base+deltas as a per-bucket hash probe (overlay map sized by
-    // pending mutations, zero shuffle), where [[effective]]'s row_number
-    // window would SORT-SHUFFLE the entire base to fold deltas that are
-    // tiny by construction — the difference between a background
-    // maintenance pass and a full-table job at 100 TB. Column order is
-    // re-asserted because the connector returns the declared schema.
-    val merged = spark.read.format("graft")
-      .option("root", root).load(name)
-      .select(readSchema(name).fieldNames.map(col).toSeq: _*)
+    // [[table]] is the connector's per-bucket merge (overlay map sized by
+    // pending mutations, zero shuffle): the fold never sort-shuffles the
+    // base to apply deltas that are tiny by construction
+    val merged = table(name)
     // partitioned tables reshuffle inside writePartitioned anyway (by
     // range/bucket dirs) — only unpartitioned tables need the explicit
     // key-clustered repartition to control file count
@@ -1970,7 +1928,7 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
           // clock at the first write under the zone guard, so later writes
           // from a different session zone fail loudly instead of mixing
           // month-directory conventions (reads prune under the stamped zone
-          // via [[lookupRange]]).
+          // via the snapshot's rangeZone).
           stampZone(name, sessionZone)
       }
 
@@ -2313,9 +2271,7 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     // [[compactImpl]] (in-process, the write lock already fences mutation
     // writers; this also covers a writer in ANOTHER process)
     val floor = rawDeltaSeqs(name).lastOption.getOrElse(0).max(deltaFloorOf(name))
-    val merged = spark.read.format("graft").option("root", root).load(name)
-      .select(schema.fieldNames.map(col).toSeq: _*)
-      .withColumnRenamed(from, to) // position preserved
+    val merged = table(name).withColumnRenamed(from, to) // position preserved
     bumpBaseEpoch(name)
     val oldDataName = dataDirNameOf(name)
     val newDataName = s"data_${baseEpoch(name)}"
@@ -2802,6 +2758,14 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     storage.supportsAtomicRename ||
       storage.exists(dir.resolve(KuduLikeCatalog.LayerCommitMarker))
 
+  /** Internal layout columns a logical read of a delta layer must shed:
+    * directory-partition levels plus the composite-range sub-levels
+    * (`drop` ignores absentees, so this is safe on every table shape).
+    */
+  private def internalCols(name: String): Seq[String] =
+    Seq(BucketCol, RangeCol) ++
+      rangeSubColsOf(name).indices.map(i => s"$RangeCol${i + 2}")
+
   private def readDelta(name: String, seq: Int): DataFrame = {
     var schema = readSchema(name).add(StructField(OpCol, StringType))
     if (rangeColOf(name).isDefined) {
@@ -2878,7 +2842,6 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
   private val BucketCol = KuduLikeCatalog.BucketCol
   private val RangeCol = KuduLikeCatalog.RangeCol
   private val OpCol = KuduLikeCatalog.OpCol
-  private val SeqCol = KuduLikeCatalog.SeqCol
 
   /** @param zone the `__range` formatting zone to record — the session zone
     *   at CREATE, and the table's EXISTING zone on any later meta rewrite
@@ -3001,7 +2964,6 @@ object KuduLikeCatalog {
   private[graft] val BucketCol = "__bucket"
   private[graft] val RangeCol = "__range"
   private[graft] val OpCol = "__op"
-  private[graft] val SeqCol = "__seq"
   private[graft] val PrioCol = "__prio"
 
   /** Rename-less layer-commit marker: on a backend without atomic rename

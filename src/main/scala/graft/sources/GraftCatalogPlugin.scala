@@ -62,7 +62,7 @@ final class GraftCatalogPlugin extends TableCatalog
     if (ident.namespace().nonEmpty || !cat.exists(n))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         (Seq(catalogName) ++ ident.namespace() :+ n).toSeq)
-    new GraftTable(root, n, cat.schemaOf(n))
+    new GraftTable(cat, n, cat.schemaOf(n))
   }
 
   /** SQL time travel: `SELECT … FROM graft.t VERSION AS OF v` — the Kudu
@@ -101,7 +101,7 @@ final class GraftCatalogPlugin extends TableCatalog
 
   private def asOfTable(ident: Identifier, v: Int): Table = {
     val n = requireFlat(ident)
-    new GraftTable(root, n, cat.schemaOf(n), asOf = Some(v))
+    new GraftTable(cat, n, cat.schemaOf(n), asOf = Some(v))
   }
 
   override def tableExists(ident: Identifier): Boolean =

@@ -41,6 +41,14 @@ import scala.jdk.CollectionConverters._
   *
   *  - `spark.read.format("graft").option("root", r).load("t")` — the table
   *    name is the load path, exactly like `kudu.table_name`.
+  *  - It is also the ONE read path of the catalog: `KuduLikeCatalog.table`,
+  *    `tableAsOf`, `lookup` and `lookupRange` return frames over this scan,
+  *    built on a [[GraftSnapshot]] the catalog resolved with its own
+  *    storage when the frame was created and pinned in the relation, so
+  *    every action on such a frame reads the same files. A `format("graft")`
+  *    load resolves its snapshot per scan instead; both plan partitions
+  *    through [[GraftScan.planPartitions]]. Catalog reads therefore carry
+  *    the overlay cap `spark.graft.connector.maxOverlayRows` too.
   *  - One `InputPartition` per hash bucket (the tablet analog): the
   *    catalog writes base AND delta layers directory-partitioned by the
   *    same key-hash (`__bucket=N`), so every version of a key lives in one
@@ -140,7 +148,8 @@ final class GraftDataSource extends TableProvider
     val asOf = GraftDataSource.asOfOf(props)
     require(asOf.isEmpty || !GraftDataSource.isChangelog(props),
       "asOf and changelog are mutually exclusive: a changelog IS the version history")
-    new GraftTable(root, name, schema, GraftDataSource.isChangelog(props), asOf)
+    new GraftTable(new KuduLikeCatalog(SparkSession.active, root), name, schema,
+      GraftDataSource.isChangelog(props), asOf)
   }
 }
 
@@ -220,14 +229,23 @@ object GraftDataSource {
   }
 }
 
-private[sources] final class GraftTable(root: String, tableName: String,
+/** A graft table as Spark sees it. `pinned` set = a catalog read
+  * ([[KuduLikeCatalog.table]] and friends): the snapshot was resolved once
+  * with the catalog's own storage when the frame was created, every scan
+  * of the relation plans from it, and the relation is read-only. Unset =
+  * a `format("graft")` / `graft.t` load, which resolves a fresh snapshot
+  * per scan through the same planning code.
+  */
+private[graft] final class GraftTable(cat: KuduLikeCatalog, tableName: String,
     tableSchema: StructType, changelog: Boolean = false,
-    asOf: Option[Int] = None) extends Table with SupportsRead
+    asOf: Option[Int] = None, pinned: Option[GraftSnapshot] = None)
+    extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
   override def name(): String =
     if (changelog) s"graft.$tableName.changelog"
-    else asOf.fold(s"graft.$tableName")(v => s"graft.$tableName@v$v")
+    else asOf.orElse(pinned.flatMap(_.asOf))
+      .fold(s"graft.$tableName")(v => s"graft.$tableName@v$v")
   override def schema(): StructType = tableSchema
 
   /** Declared layout: `bucket(n, keys…)` for hash-bucketed tables — the V2
@@ -236,11 +254,11 @@ private[sources] final class GraftTable(root: String, tableName: String,
     */
   override def partitioning(): Array[Transform] = {
     if (changelog) return Array.empty
-    val cat = new KuduLikeCatalog(SparkSession.active, root)
-    val b = cat.bucketsOf(tableName)
+    val (b, hashCols) = pinned.fold(
+      (cat.bucketsOf(tableName), cat.hashColsOf(tableName)))(s => (s.buckets, s.hashCols))
     if (b <= 0) Array.empty
     else Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-      b, cat.hashColsOf(tableName): _*))
+      b, hashCols: _*))
   }
   override def capabilities(): java.util.Set[TableCapability] =
     // BATCH_WRITE admits the v2 write plan (DataFrameWriter requires the
@@ -248,11 +266,11 @@ private[sources] final class GraftTable(root: String, tableName: String,
     // route execution through the batch-relational fallback exec.
     // changelog mode is read-only: batch (all retained layers) or
     // micro-batch streaming (offsets = delta sequence numbers).
-    // Time-travel (asOf) tables are read-only: a write cannot target a
-    // historical snapshot.
+    // Time-travel (asOf) tables and pinned catalog reads are read-only: a
+    // write cannot target a fixed snapshot.
     if (changelog)
       java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-    else if (asOf.isDefined)
+    else if (asOf.isDefined || pinned.isDefined)
       java.util.EnumSet.of(TableCapability.BATCH_READ)
     else
       java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -262,23 +280,17 @@ private[sources] final class GraftTable(root: String, tableName: String,
     // reaches getTable via properties AND the scan via options); a
     // VERSION AS OF table from the catalog plugin has it only in the field
     val optAsOf = GraftDataSource.asOfOf(options.asCaseSensitiveMap().asScala.toMap)
-    // graft.include_ranges (INTERNAL, maintenance plumbing): URL-encoded
-    // comma-joined composite range ids restricting which BASE files plan —
-    // deltas are never pruned (the overlay owns suppression). Sound only
-    // when range columns are key columns; the one producer
-    // (KuduLikeCatalog.compactIncremental) enforces that loudly.
-    val includeRanges = Option(options.get("graft.include_ranges"))
-      .map(_.split(",").iterator.map(_.trim).filter(_.nonEmpty)
-        .map(java.net.URLDecoder.decode(_, "UTF-8")).toSeq)
-      .filter(_.nonEmpty)
-    new GraftScanBuilder(root, tableName, tableSchema, changelog,
-      asOf.orElse(optAsOf), includeRanges)
+    val snap =
+      if (changelog) None
+      else Some(pinned.getOrElse(cat.snapshot(tableName, asOf.orElse(optAsOf))))
+    new GraftScanBuilder(cat, tableName, tableSchema, snap)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(asOf.isEmpty, s"${name()} is a read-only snapshot — writes target the live table")
-    new GraftWriteBuilder(root, tableName, tableSchema, info)
+    require(asOf.isEmpty && pinned.isEmpty,
+      s"${name()} is a read-only snapshot — writes target the live table")
+    new GraftWriteBuilder(cat, tableName, tableSchema, info)
   }
 
   /** SQL `DELETE FROM graft.t WHERE …` through the V2 catalog — the write
@@ -290,8 +302,8 @@ private[sources] final class GraftTable(root: String, tableName: String,
     * semantics for the SQL router, the Scala API, and the connector.
     */
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
-    require(asOf.isEmpty, s"${name()} is a read-only snapshot — deletes target the live table")
-    val cat = new KuduLikeCatalog(SparkSession.active, root)
+    require(asOf.isEmpty && pinned.isEmpty,
+      s"${name()} is a read-only snapshot — deletes target the live table")
     val cond = filters.map(GraftFilters.toColumn).reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
     cat.delete(tableName, cond)
@@ -379,7 +391,7 @@ private[sources] final class GraftSink(root: String, tableName: String,
   * incoming columns against `schema()` (positionally for the writer API,
   * by-name for SQL INSERT) before the V1 fallback hands over the frame.
   */
-private[sources] final class GraftWriteBuilder(root: String, tableName: String,
+private[sources] final class GraftWriteBuilder(cat: KuduLikeCatalog, tableName: String,
     tableSchema: StructType,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -399,7 +411,6 @@ private[sources] final class GraftWriteBuilder(root: String, tableName: String,
         new org.apache.spark.sql.sources.InsertableRelation {
           override def insert(data: org.apache.spark.sql.DataFrame,
               overwrite: Boolean): Unit = {
-            val cat = new KuduLikeCatalog(data.sparkSession, root)
             // columns are already aligned/cast by the analyzer; restore the
             // table's names (the writer API aligns positionally and may
             // carry source-side names)
@@ -412,13 +423,20 @@ private[sources] final class GraftWriteBuilder(root: String, tableName: String,
     }
 }
 
-private[sources] final class GraftScanBuilder(root: String, tableName: String,
-    fullSchema: StructType, changelog: Boolean = false,
-    asOf: Option[Int] = None,
-    includeRanges: Option[Seq[String]] = None) extends ScanBuilder
+/** @param snap the snapshot every decision and the scan plan from; None
+  *   for the changelog view, which reads retained layers, not a snapshot
+  */
+private[sources] final class GraftScanBuilder(cat: KuduLikeCatalog, tableName: String,
+    fullSchema: StructType, snap: Option[GraftSnapshot]) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN {
+
+  private val changelog = snap.isEmpty
+  /** The snapshot's base files are the whole truth: no pending delta layer
+    * (at or below its version) can suppress or add a row.
+    */
+  private val deltaFree = snap.exists(_.deltas.isEmpty)
 
   private var required: StructType = fullSchema
   private var pushed: Array[sources.Filter] = Array.empty
@@ -449,10 +467,7 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
     * under-planning is impossible (the prefix is chosen to cover n).
     */
   override def pushLimit(limit: Int): Boolean = {
-    if (changelog || asOf.isDefined || includeRanges.isDefined ||
-      aggSpec.nonEmpty || limit <= 0) return false
-    val cat = new KuduLikeCatalog(SparkSession.active, root)
-    if (cat.deltaLayers(tableName).nonEmpty) return false
+    if (!deltaFree || aggSpec.nonEmpty || limit <= 0) return false
     pushedLimit = Some(limit)
     true
   }
@@ -475,8 +490,7 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-    if (changelog || asOf.isDefined || includeRanges.isDefined ||
-      aggSpec.nonEmpty || limit <= 0 || orders.isEmpty) return false
+    if (!deltaFree || aggSpec.nonEmpty || limit <= 0 || orders.isEmpty) return false
     val first = orders.head
     val col = first.expression() match {
       case r: NamedReference if r.fieldNames.length == 1 =>
@@ -485,8 +499,6 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
     }
     col match {
       case Some(f) if statExact(f.dataType) =>
-        val cat = new KuduLikeCatalog(SparkSession.active, root)
-        if (cat.deltaLayers(tableName).nonEmpty) return false
         pushedLimit = Some(limit)
         topNCol = Some((f.name, first.direction() == SortDirection.ASCENDING))
         true
@@ -502,7 +514,8 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
     *  - no pending delta layers (merge-on-read would change counts/values
     *    — compaction re-enables the pushdown),
     *  - no pushed filters and no grouping (footer totals are table-level),
-    *  - no time travel, not the changelog view,
+    *  - not the changelog view (a time-travel snapshot qualifies when no
+    *    layer at or below its version is pending),
     *  - MIN/MAX only over types whose parquet statistics are exact
     *    (integral/floating/boolean/date/timestamp — never string/binary,
     *    whose stats may be truncated).
@@ -515,10 +528,7 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
   override def pushAggregation(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (changelog || asOf.isDefined || pushed.nonEmpty ||
-      agg.groupByExpressions.nonEmpty) return false
-    val cat = new KuduLikeCatalog(SparkSession.active, root)
-    if (cat.deltaLayers(tableName).nonEmpty) return false
+    if (!deltaFree || pushed.nonEmpty || agg.groupByExpressions.nonEmpty) return false
     def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
         case r: NamedReference if r.fieldNames.length == 1 =>
@@ -533,8 +543,10 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
         // stat, which parquet-mr records for every primitive chunk (the
         // reader still proves isNumNullsSet per chunk, failing loudly on
         // a foreign writer). Any stat-bearing type qualifies — the VALUES
-        // are never read.
-        fieldOf(c.column).map(f => GraftCountCol(f.name))
+        // are never read. Not arrays: a list column's leaf null count
+        // counts null ELEMENTS, not null arrays.
+        fieldOf(c.column).filterNot(_.dataType.isInstanceOf[ArrayType])
+          .map(f => GraftCountCol(f.name))
       case m: Min =>
         fieldOf(m.column).filter(f => statExact(f.dataType))
           .map(f => GraftMinOf(f.name, f.dataType))
@@ -555,8 +567,7 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
       case GraftCountCol(f) => f // needs per-chunk null counts, absent on INT96
     }.distinct
     if (minMaxCols.nonEmpty) {
-      val files = cat.liveBaseFiles(tableName)
-      files.headOption.foreach { f =>
+      snap.get.baseFiles.headOption.foreach { f =>
         val footer = ParquetFileReader.readFooter(
           HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), new Configuration()),
           org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
@@ -595,9 +606,9 @@ private[sources] final class GraftScanBuilder(root: String, tableName: String,
   override def pushedFilters(): Array[sources.Filter] = pushed
 
   override def build(): Scan =
-    new GraftScan(root, tableName, fullSchema,
+    new GraftScan(cat, tableName, fullSchema,
       if (aggSpec.nonEmpty) GraftAggFunc.schema(aggSpec) else required,
-      pushed, changelog, asOf, aggSpec, includeRanges, pushedLimit, topNCol)
+      pushed, snap, aggSpec, pushedLimit, topNCol)
 }
 
 /** A pushed footer-answerable aggregate function. */
@@ -620,16 +631,17 @@ private[sources] object GraftAggFunc {
     })
 }
 
-private[sources] final class GraftScan(root: String, tableName: String,
+private[sources] final class GraftScan(cat: KuduLikeCatalog, tableName: String,
     fullSchema: StructType, required: StructType,
-    pushed: Array[sources.Filter], changelog: Boolean = false,
-    asOf: Option[Int] = None, aggSpec: Seq[GraftAggFunc] = Seq.empty,
-    includeRanges: Option[Seq[String]] = None,
+    pushed: Array[sources.Filter], snap: Option[GraftSnapshot],
+    aggSpec: Seq[GraftAggFunc] = Seq.empty,
     pushedLimit: Option[Int] = None,
     topNCol: Option[(String, Boolean)] = None)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsReportPartitioning with SupportsRuntimeFiltering
   with SupportsReportOrdering {
+
+  private val changelog = snap.isEmpty
 
   override def readSchema(): StructType = required
 
@@ -656,10 +668,10 @@ private[sources] final class GraftScan(root: String, tableName: String,
         case _ => false
       }
     if (perBucket) {
-      val cat = new KuduLikeCatalog(SparkSession.active, root)
+      val s = snap.get
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-          cat.bucketsOf(tableName), cat.hashColsOf(tableName): _*)),
+          s.buckets, s.hashCols: _*)),
         parts.length)
     } else
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
@@ -679,10 +691,10 @@ private[sources] final class GraftScan(root: String, tableName: String,
     * Row count and per-column stats (NDV, null count, min/max, lengths)
     * come from the catalog's persisted ANALYZE record
     * ([[graft.catalog.KuduLikeCatalog.analyze]]) — but ONLY for a
-    * whole-table scan of the live version with no pushed predicates: any
-    * pushdown makes the scan's output a subset the record does not
-    * describe, and `statsOf` itself returns nothing once the table moved
-    * past the analyzed fingerprint. Catalyst CBO picks these up through
+    * whole-table scan of a live-version snapshot with no pushed
+    * predicates: any pushdown makes the scan's output a subset the record
+    * does not describe, and the record is used only while its fingerprint
+    * is the snapshot's own. Catalyst CBO picks these up through
     * `DataSourceV2Relation.transformV2Stats`, turning join reorder and
     * filter selectivity from defaultSizeInBytes guesses into estimates a
     * 1000-executor plan can stand on.
@@ -711,10 +723,9 @@ private[sources] final class GraftScan(root: String, tableName: String,
     // Any other pushed predicate makes the record not describe the scan.
     val notNullCols = pushed.collect { case sources.IsNotNull(c) => c }.toSet
     val analyzed =
-      if (changelog || asOf.nonEmpty || aggSpec.nonEmpty ||
-          includeRanges.nonEmpty || pushedLimit.nonEmpty ||
+      if (aggSpec.nonEmpty || pushedLimit.nonEmpty ||
           !pushed.forall(_.isInstanceOf[sources.IsNotNull])) None
-      else new KuduLikeCatalog(SparkSession.active, root).statsOf(tableName)
+      else snap.flatMap(_.fingerprint).flatMap(cat.statsAt(tableName, _))
         .map { st =>
           if (notNullCols.isEmpty) st
           else {
@@ -792,7 +803,7 @@ private[sources] final class GraftScan(root: String, tableName: String,
 
   override def description(): String =
     s"GraftScan table=$tableName${if (changelog) " changelog" else ""}" +
-      asOf.fold("")(v => s" asOf=$v") + " " +
+      snap.flatMap(_.asOf).fold("")(v => s" asOf=$v") + " " +
       s"PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
       (if (aggSpec.nonEmpty) s"PushedAggregates: ${aggSpec.mkString("[", ", ", "]")}, "
        else "") +
@@ -814,7 +825,7 @@ private[sources] final class GraftScan(root: String, tableName: String,
     require(changelog,
       "streaming reads need the changelog view: " +
         """spark.readStream.format("graft").option("changelog","true").load(t)""")
-    new GraftMicroBatchStream(root, tableName)
+    new GraftMicroBatchStream(cat, tableName)
   }
 
   // memoized so planInputPartitions() and createReaderFactory() see ONE
@@ -860,40 +871,35 @@ private[sources] final class GraftScan(root: String, tableName: String,
         case p: GraftInputPartition => p.baseFiles.size <= 1 && p.deltas.isEmpty
         case _ => false
       }
-    if (!singleSortedFiles) return Array.empty
-    val cat = new KuduLikeCatalog(SparkSession.active, root)
-    val keys = cat.keyColsOf(tableName)
     // the _sort marker must PROVE the files were sorted by exactly the
     // keys — a clustered/z-ordered base, or a pre-marker legacy base,
     // claims nothing (safe default: plan keeps its sorts)
-    val marker = Paths.get(cat.dataLocation(tableName)).resolve("_sort")
-    val proven =
-      try Files.exists(marker) && Files.readString(marker) == keys.mkString(",")
-      catch { case _: Exception => false }
-    if (!proven) return Array.empty
-    keys.map { k =>
+    if (!singleSortedFiles || !snap.get.keySorted) return Array.empty
+    snap.get.keyCols.map { k =>
       org.apache.spark.sql.connector.expressions.Expressions.sort(
         org.apache.spark.sql.connector.expressions.Expressions.column(k),
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)
     }.toArray
   }
 
+  /** Only columns the scan OUTPUTS: Spark resolves each attribute against
+    * the scan's output, so a hash or range column that column pruning
+    * dropped (an anti-join projecting only the keys) must not be offered.
+    */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     if (changelog || aggSpec.nonEmpty) return Array.empty
-    val catalog = new KuduLikeCatalog(SparkSession.active, root)
-    val hashCols = catalog.hashColsOf(tableName)
-    val keyAttr =
-      if (catalog.bucketsOf(tableName) > 0 && hashCols.size == 1) hashCols
-      else Seq.empty
-    (keyAttr ++ catalog.rangeColOf(tableName).toSeq).distinct
+    val s = snap.get
+    val keyAttr = if (s.buckets > 0 && s.hashCols.size == 1) s.hashCols else Seq.empty
+    (keyAttr ++ s.rangeCol.toSeq).distinct
+      .filter(required.fieldNames.contains)
       .map(c => org.apache.spark.sql.connector.expressions.Expressions.column(c))
       .toArray
   }
 
   override def filter(runtimeFilters: Array[sources.Filter]): Unit = {
-    val catalog = new KuduLikeCatalog(SparkSession.active, root)
-    val hashCols = catalog.hashColsOf(tableName)
-    val buckets = catalog.bucketsOf(tableName)
+    val s = snap.get
+    val hashCols = s.hashCols
+    val buckets = s.buckets
 
     // bucket routing from runtime IN/EQ sets on the single hash column
     var allowedBuckets: Option[Set[Int]] = None
@@ -915,7 +921,7 @@ private[sources] final class GraftScan(root: String, tableName: String,
     }
 
     // range-window tightening from runtime time predicates
-    val keepFile = GraftScan.rangePruner(catalog, tableName, runtimeFilters)
+    val keepFile = GraftScan.rangePruner(s, runtimeFilters)
 
     runtimeKept = plannedPartitions.flatMap {
       case p: GraftInputPartition =>
@@ -929,146 +935,30 @@ private[sources] final class GraftScan(root: String, tableName: String,
     }
   }
 
-  private def planPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val catalog = new KuduLikeCatalog(spark, root)
-    require(catalog.exists(tableName), s"graft table $tableName does not exist under $root")
-    if (changelog)
+  private def planPartitions(): Array[InputPartition] = snap match {
+    case None =>
       // batch changelog read: every retained layer (floor, latest]
-      return GraftChangelog.partitions(catalog, tableName, Int.MinValue, Int.MaxValue)
-    if (aggSpec.nonEmpty) {
+      GraftChangelog.partitions(cat, tableName, Int.MinValue, Int.MaxValue)
+    case Some(s) if aggSpec.nonEmpty =>
       // footer-only aggregate scan: no deltas by contract (pushAggregation
       // declines when any are pending), so the base files ARE the table.
       // Files chunk into ~defaultParallelism groups — footer reads
       // parallelize like any scan, each task emitting one partial row.
-      val files = catalog.liveBaseFiles(tableName).sorted
-      if (files.isEmpty)
-        return Array(GraftAggPartition(Seq.empty, aggSpec))
-      val chunk = math.max(1, math.ceil(
-        files.size.toDouble / spark.sparkContext.defaultParallelism).toInt)
-      return files.grouped(chunk)
-        .map(fs => GraftAggPartition(fs, aggSpec): InputPartition).toArray
-    }
-    val keys = catalog.keyColsOf(tableName)
-    val buckets = catalog.bucketsOf(tableName)
-    // Planning-time __range directory pruning (the connector analog of the
-    // reference's scan-range bounds, HiveKuduTableInputFormat.java:466-467,
-    // and of KuduLikeCatalog.lookupRange): pushed range predicates on the
-    // table's range column become month bounds over the __range= partition
-    // dirs, so a time-predicated scan never lists (or reads) out-of-range
-    // BASE files. Deltas are NEVER pruned: an upsert may MOVE a key to
-    // another month — its base row (old month) is only suppressed because
-    // the overlay saw the superseding delta row (new month); pruning deltas
-    // by range would resurrect the old version.
-    // liveBaseFiles excludes dropped range partitions — the connector must
-    // agree with the catalog read path or dropped rows resurrect here
-    val baseFiles0 = catalog.liveBaseFiles(tableName)
-      .filter(GraftScan.rangePruner(catalog, tableName, pushed))
-    // maintenance-plumbing base restriction (graft.include_ranges): keep
-    // only base files whose composite range id one of the ids covers
-    // (exact or prefix — the dropped-range matching contract). Deltas
-    // below stay unpruned, as always.
-    val baseFiles = includeRanges match {
-      case Some(ids) =>
-        val nSub = catalog.rangeSubColsOf(tableName).size
-        baseFiles0.filter(f => catalog.rangeIdOfPath(f, nSub)
-          .exists(id => ids.exists(catalog.droppedCovers(_, id))))
-      case None => baseFiles0
-    }
-    // snapshot read: plan only layers ≤ asOf — free with merge-on-read,
-    // the overlay just stops at the version. Validated against the delta
-    // floor (compacted-away history fails loudly) and the current version.
-    asOf.foreach(v => catalog.requireVersionReadable(tableName, v))
-    val deltaLayers = catalog.deltaLayers(tableName)
-      .filter { case (seq, _) => asOf.forall(seq <= _) }
-      .map { case (seq, dir) => (seq, GraftScan.listParquet(dir)) }
-      .filter(_._2.nonEmpty)
-
-    // LIMIT / TopN file pruning. The pushdown was accepted on a delta-free
-    // table, but a writer may have raced a layer in since — re-proven here:
-    // any pending delta disables the pruning (merge-on-read suppression
-    // could shrink a truncated prefix below n rows) and the scan degrades
-    // to a planning no-op, with Spark's retained Limit/Sort keeping the
-    // result exact either way (partial-pushdown contract).
-    val prunedBase: Seq[String] =
-      if (deltaLayers.nonEmpty) baseFiles
-      else (pushedLimit, topNCol) match {
-        case (Some(n), None) =>
-          GraftScan.limitFilePrefix(baseFiles.sorted, n)
-        case (Some(n), Some((c, asc))) =>
-          GraftScan.topNFilePrune(baseFiles, c, asc, n)
-        case _ => baseFiles
-      }
-
-    // tablet routing: equality on EVERY hash column (the declared PK
-    // subset, or the full key) pins the one bucket that can hold the key
-    // (planning-time partition pruning)
-    val hashCols = catalog.hashColsOf(tableName)
-    val routedBucket: Option[Int] =
-      if (buckets <= 0) None
+      val files = s.baseFiles.sorted
+      if (files.isEmpty) Array(GraftAggPartition(Seq.empty, aggSpec))
       else {
-        val eqs = GraftFilters.flattenAnd(pushed).collect {
-          case sources.EqualTo(a, v) if v != null => a -> v
-        }.toMap
-        if (hashCols.forall(eqs.contains)) {
-          val typed = hashCols.map(k => (eqs(k), fullSchema(k).dataType))
-          Some(GraftDataSource.bucketOf(typed, buckets))
-        } else None
+        val chunk = math.max(1, math.ceil(
+          files.size.toDouble / SparkSession.active.sparkContext.defaultParallelism).toInt)
+        files.grouped(chunk)
+          .map(fs => GraftAggPartition(fs, aggSpec): InputPartition).toArray
       }
-
-    def bucketIdOf(path: String): Int =
-      "__bucket=(\\d+)".r.findFirstMatchIn(path).map(_.group(1).toInt).getOrElse(-1)
-
-    // local-filesystem storage: every file's "block host" is this host
-    // (see GraftInputPartition.locations)
-    val hosts =
-      try Array(java.net.InetAddress.getLocalHost.getHostName)
-      catch { case _: Exception => Array.empty[String] }
-
-    if (buckets > 0) {
-      val baseByBucket = prunedBase.groupBy(bucketIdOf)
-      val deltaByBucket = deltaLayers.flatMap { case (seq, files) =>
-        files.map(f => (bucketIdOf(f), seq, f))
-      }.groupBy(_._1)
-      val ids = (baseByBucket.keySet ++ deltaByBucket.keySet)
-        .filter(b => routedBucket.forall(_ == b))
-      ids.toArray.sorted.map { b =>
-        val deltas = deltaByBucket.getOrElse(b, Seq.empty)
-          .groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (seq, rows) => GraftDeltaSlice(seq, rows.map(_._3)) }
-        GraftInputPartition(b, baseByBucket.getOrElse(b, Seq.empty), deltas,
-          emitOverlay = true, hosts): InputPartition
-      }
-    } else if (deltaLayers.isEmpty) {
-      // unbucketed, no pending mutations: embarrassingly parallel, one
-      // partition per base file
-      prunedBase.map(f =>
-        GraftInputPartition(-1, Seq(f), Seq.empty, emitOverlay = false, hosts): InputPartition)
-        .toArray
-    } else {
-      // unbucketed WITH deltas: a key may pair any base file with any delta
-      // file, so EVERY task needs the full overlay for suppression — but
-      // the base files (the 100-TB side) still split one per task, each
-      // loading its own copy of the (cap-bounded, pending-mutation-sized)
-      // overlay; exactly ONE task additionally emits the overlay's
-      // surviving upserts. Bucketed tables remain the scale path (the
-      // overlay splits with the buckets); this keeps small/legacy tables
-      // correct WITHOUT serializing the base scan into one task.
-      val deltas = deltaLayers.map { case (seq, files) => GraftDeltaSlice(seq, files) }
-      if (baseFiles.isEmpty)
-        Array(GraftInputPartition(-1, Seq.empty, deltas, emitOverlay = true, hosts): InputPartition)
-      else
-        baseFiles.zipWithIndex.map { case (f, i) =>
-          GraftInputPartition(-1, Seq(f), deltas, emitOverlay = i == 0, hosts): InputPartition
-        }.toArray
-    }
+    case Some(s) => GraftScan.planPartitions(s, fullSchema, pushed, pushedLimit, topNCol)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val catalog = new KuduLikeCatalog(spark, root)
     if (changelog)
-      return new GraftChangelogReaderFactory(catalog.schemaOf(tableName))
+      return new GraftChangelogReaderFactory(cat.schemaOf(tableName))
     if (aggSpec.nonEmpty) return new GraftAggReaderFactory
     // resolved driver-side (executors can't read session conf) and shipped
     // inside the serialized factory
@@ -1081,43 +971,162 @@ private[sources] final class GraftScan(root: String, tableName: String,
       .forall(_.toBoolean) &&
       plannedPartitions.forall(_.asInstanceOf[GraftInputPartition].deltas.isEmpty)
     new GraftReaderFactory(tableName, required, fullSchema,
-      catalog.keyColsOf(tableName), pushed, maxOverlayRows, columnarRead)
+      snap.get.keyCols, pushed, maxOverlayRows, columnarRead)
   }
 }
 
 private[graft] object GraftScan {
+
+  /** The one partition plan, for catalog reads and `format("graft")` loads
+    * alike: the snapshot's base files pruned by the pushed predicates
+    * (`__range` window, LIMIT/TopN footers), then one partition per hash
+    * bucket (the tablet analog — every version of a key lives in one
+    * bucket, so each partition merges base + deltas with no shuffle) or,
+    * unbucketed, one per base file.
+    */
+  def planPartitions(snap: GraftSnapshot, fullSchema: StructType,
+      pushed: Array[sources.Filter], pushedLimit: Option[Int],
+      topNCol: Option[(String, Boolean)]): Array[InputPartition] = {
+    // Planning-time __range directory pruning (the connector analog of the
+    // reference's scan-range bounds, HiveKuduTableInputFormat.java:466-467):
+    // pushed range predicates on the table's range column become month
+    // bounds over the __range= partition dirs, so a time-predicated scan
+    // never reads out-of-range BASE files. Deltas are NEVER pruned: an
+    // upsert may MOVE a key to another month — its base row (old month) is
+    // only suppressed because the overlay saw the superseding delta row
+    // (new month); pruning deltas by range would resurrect the old version.
+    val baseFiles = snap.baseFiles.filter(rangePruner(snap, pushed))
+    val deltaLayers = snap.deltas
+
+    // LIMIT / TopN file pruning: accepted only on a delta-free snapshot
+    // (merge-on-read suppression could shrink a truncated prefix below n
+    // rows); Spark's retained Limit/Sort keep the result exact either way
+    // (partial-pushdown contract).
+    val prunedBase: Seq[String] =
+      if (deltaLayers.nonEmpty) baseFiles
+      else (pushedLimit, topNCol) match {
+        case (Some(n), None) => limitFilePrefix(baseFiles.sorted, n)
+        case (Some(n), Some((c, asc))) => topNFilePrune(baseFiles, c, asc, n)
+        case _ => baseFiles
+      }
+
+    // tablet routing: equality on EVERY hash column (the declared PK
+    // subset, or the full key) pins the one bucket that can hold the key
+    // (planning-time partition pruning)
+    val buckets = snap.buckets
+    val routedBucket: Option[Int] =
+      if (buckets <= 0) None
+      else {
+        val eqs = GraftFilters.flattenAnd(pushed).collect {
+          case sources.EqualTo(a, v) if v != null => a -> v
+        }.toMap
+        if (snap.hashCols.forall(eqs.contains)) {
+          val typed = snap.hashCols.map(k => (eqs(k), fullSchema(k).dataType))
+          Some(GraftDataSource.bucketOf(typed, buckets))
+        } else None
+      }
+
+    def bucketIdOf(path: String): Int =
+      "__bucket=(\\d+)".r.findFirstMatchIn(path).map(_.group(1).toInt).getOrElse(-1)
+
+    val hosts = new HostIndex(SparkSession.active.sessionState.newHadoopConf())
+    def part(bucket: Int, base: Seq[String], deltas: Seq[GraftDeltaSlice],
+        emitOverlay: Boolean): InputPartition =
+      GraftInputPartition(bucket, base, deltas, emitOverlay,
+        hosts.preferred(base ++ deltas.flatMap(_.files)))
+
+    if (buckets > 0) {
+      val baseByBucket = prunedBase.groupBy(bucketIdOf)
+      val deltaByBucket = deltaLayers.flatMap { d =>
+        d.files.map(f => (bucketIdOf(f), d.seq, f))
+      }.groupBy(_._1)
+      val ids = (baseByBucket.keySet ++ deltaByBucket.keySet)
+        .filter(b => routedBucket.forall(_ == b))
+      ids.toArray.sorted.map { b =>
+        val deltas = deltaByBucket.getOrElse(b, Seq.empty)
+          .groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (seq, rows) => GraftDeltaSlice(seq, rows.map(_._3)) }
+        part(b, baseByBucket.getOrElse(b, Seq.empty), deltas, emitOverlay = true)
+      }
+    } else if (deltaLayers.isEmpty) {
+      // unbucketed, no pending mutations: embarrassingly parallel, one
+      // partition per base file
+      prunedBase.map(f => part(-1, Seq(f), Seq.empty, emitOverlay = false)).toArray
+    } else {
+      // unbucketed WITH deltas: a key may pair any base file with any delta
+      // file, so EVERY task needs the full overlay for suppression — but
+      // the base files (the 100-TB side) still split one per task, each
+      // loading its own copy of the (cap-bounded, pending-mutation-sized)
+      // overlay; exactly ONE task additionally emits the overlay's
+      // surviving upserts. Bucketed tables remain the scale path (the
+      // overlay splits with the buckets); this keeps small/legacy tables
+      // correct WITHOUT serializing the base scan into one task.
+      if (baseFiles.isEmpty)
+        Array(part(-1, Seq.empty, deltaLayers, emitOverlay = true))
+      else
+        baseFiles.zipWithIndex.map { case (f, i) =>
+          part(-1, Seq(f), deltaLayers, emitOverlay = i == 0)
+        }.toArray
+    }
+  }
+
+  /** Preferred hosts of a partition, taken the way Spark's file source
+    * takes them: the Hadoop `FileSystem` block locations of its files,
+    * hosts ranked by the bytes they hold, at most three. A host name the
+    * scheduler does not know (the machine's own name where the local
+    * executor registers as `localhost`) would make a stage that mixes a
+    * graft scan with a file-source scan wait on locality forever.
+    */
+  private[sources] final class HostIndex(conf: Configuration) {
+    private val byFile = scala.collection.mutable.HashMap.empty[String, Seq[(String, Long)]]
+
+    private def blocks(f: String): Seq[(String, Long)] = byFile.getOrElseUpdate(f,
+      try {
+        val p = new org.apache.hadoop.fs.Path(f)
+        val fs = p.getFileSystem(conf)
+        val st = fs.getFileStatus(p)
+        fs.getFileBlockLocations(st, 0, st.getLen).toSeq
+          .flatMap(b => b.getHosts.toSeq.map(_ -> b.getLength))
+      } catch { case _: java.io.IOException => Seq.empty }) // vanished file: no host
+
+    def preferred(files: Seq[String]): Array[String] =
+      files.flatMap(blocks).groupMapReduce(_._1)(_._2)(_ + _).toSeq
+        .sortBy { case (h, n) => (-n, h) }.take(3).map(_._1).toArray
+  }
 
   private val RangeDirRx = "__range=([0-9]{4}-[0-9]{2}(?:-[0-9]{2})?)".r
 
   /** Path predicate for planning-time `__range` pruning: pushed range-column
     * predicates become an inclusive [lo, hi] month window (lexical compare —
     * yyyy-MM sorts chronologically), formatted under the ZONE THE TABLE WAS
-    * CREATED WITH (the same one-clock discipline as
-    * KuduLikeCatalog.lookupRange: partition values were written by
-    * date_format under the recorded zone, so bounds must format under that
-    * zone no matter what zone the reading session runs in; pre-zone legacy
-    * tables wrote under UTC). Month granularity keeps the bounds inexact in
+    * CREATED WITH: partition values were written by date_format under the
+    * recorded zone (writes assert the session still matches it), so bounds
+    * must format under that zone no matter what zone the reading session
+    * runs in; pre-zone legacy tables wrote under UTC, hence that fallback
+    * ([[GraftSnapshot.rangeZone]]). Month granularity keeps the bounds inexact in
     * the safe direction only — a boundary month may over-scan, never skip —
     * and Spark's residual filter restores row-level exactness. Files
     * without a `__range=` path segment are never pruned.
     */
-  def rangePruner(catalog: KuduLikeCatalog, tableName: String,
+  def rangePruner(snap: GraftSnapshot,
       pushed: Array[sources.Filter]): String => Boolean =
-    catalog.rangeColOf(tableName) match {
+    snap.rangeCol match {
       case None => _ => true
-      case Some(rc) if catalog.rangeBoundsOf(tableName).nonEmpty =>
-        numericRangePruner(rc, catalog.rangeBoundsOf(tableName), pushed)
+      case Some(rc) if snap.rangeBounds.nonEmpty =>
+        numericRangePruner(rc, snap.rangeBounds, pushed)
       case Some(rc) =>
-        val zone = java.time.ZoneId.of(catalog.zoneOf(tableName).getOrElse("UTC"))
+        val zone = java.time.ZoneId.of(snap.rangeZone)
         val fmt = java.time.format.DateTimeFormatter
-          .ofPattern(catalog.rangePattern(tableName)).withZone(zone)
-        def month(v: Any): Option[String] = v match {
-          case t: java.sql.Timestamp => Some(fmt.format(t.toInstant))
-          case i: java.time.Instant => Some(fmt.format(i))
-          case d: java.sql.Date => Some(fmt.format(
-            d.toLocalDate.atStartOfDay(zone).toInstant))
+          .ofPattern(snap.rangePattern).withZone(zone)
+        // `shift` microseconds (the timestamp precision) move a STRICT
+        // bound onto the nearest admitted instant: `< 2024-03-01T00:00`
+        // admits no March row, so March must not plan
+        def month(v: Any, shift: Long = 0L): Option[String] = (v match {
+          case t: java.sql.Timestamp => Some(t.toInstant)
+          case i: java.time.Instant => Some(i)
+          case d: java.sql.Date => Some(d.toLocalDate.atStartOfDay(zone).toInstant)
           case _ => None
-        }
+        }).map(i => fmt.format(i.plus(shift, java.time.temporal.ChronoUnit.MICROS)))
         var lo: Option[String] = None
         var hi: Option[String] = None
         def tightenLo(m: String): Unit = if (lo.forall(_ < m)) lo = Some(m)
@@ -1125,12 +1134,12 @@ private[graft] object GraftScan {
         GraftFilters.flattenAnd(pushed).foreach {
           case sources.EqualTo(a, v) if a == rc =>
             month(v).foreach { m => tightenLo(m); tightenHi(m) }
-          case sources.GreaterThan(a, v) if a == rc => month(v).foreach(tightenLo)
+          case sources.GreaterThan(a, v) if a == rc => month(v, 1L).foreach(tightenLo)
           case sources.GreaterThanOrEqual(a, v) if a == rc => month(v).foreach(tightenLo)
-          case sources.LessThan(a, v) if a == rc => month(v).foreach(tightenHi)
+          case sources.LessThan(a, v) if a == rc => month(v, -1L).foreach(tightenHi)
           case sources.LessThanOrEqual(a, v) if a == rc => month(v).foreach(tightenHi)
           case sources.In(a, vs) if a == rc && vs != null && vs.nonEmpty =>
-            val ms = vs.toSeq.map(month)
+            val ms = vs.toSeq.map(month(_))
             // only prune when EVERY branch yields a month — a single
             // unconvertible value makes the disjunction unbounded
             if (ms.forall(_.isDefined)) {
@@ -1369,6 +1378,28 @@ private[graft] object GraftScan {
 
 private[graft] final case class GraftDeltaSlice(seq: Int, files: Seq[String])
 
+/** One resolved read of a keyed table — what every scan plans from.
+  * Resolved by [[KuduLikeCatalog.snapshot]] with the catalog's own storage
+  * (its manifest, its layer-visibility rule: atomic rename, or commit
+  * marker), so scans never re-list: every scan planned from one snapshot
+  * reads the same files.
+  *
+  * @param baseFiles live base files, dropped range partitions left out
+  * @param deltas committed delta layers at or below the version, ascending
+  * @param asOf the requested version of a time-travel read
+  * @param rangeZone the zone `__range` values were formatted under
+  * @param keySorted the base's `_sort` marker proves key order
+  * @param fingerprint the catalog's statistics fingerprint at resolution;
+  *   None when the snapshot is not the live table (time travel, or a
+  *   restricted base), which no persisted ANALYZE record describes
+  */
+private[graft] final case class GraftSnapshot(
+    table: String, keyCols: Seq[String], buckets: Int, hashCols: Seq[String],
+    rangeCol: Option[String], rangeBounds: Seq[(Long, Long)],
+    rangeZone: String, rangePattern: String,
+    baseFiles: Seq[String], deltas: Seq[GraftDeltaSlice],
+    asOf: Option[Int], keySorted: Boolean, fingerprint: Option[String])
+
 /** @param emitOverlay whether THIS task emits the overlay's surviving
   *   upserts. Per-bucket scans always do (the bucket owns its keys);
   *   unbucketed-with-deltas scans share one overlay across all base-file
@@ -1377,9 +1408,9 @@ private[graft] final case class GraftDeltaSlice(seq: Int, files: Seq[String])
   * @param locations block hosts for the partition's files, surfaced to the
   *   scheduler as `preferredLocations` — the reference pins each split to
   *   the tablet leader's host for the same reason
-  *   (HiveKuduTableInputFormat.java:177-210, reverse-DNS :241-262). Local
-  *   filesystem storage = the planning host; a remote FileIndex would
-  *   supply per-file block hosts here without touching the scan logic.
+  *   (HiveKuduTableInputFormat.java:177-210, reverse-DNS :241-262). Taken
+  *   from the Hadoop `FileSystem` block locations ([[GraftScan.HostIndex]]),
+  *   so HDFS-class storage reports its datanodes with no change here.
   */
 private[graft] final case class GraftInputPartition(
     bucket: Int, baseFiles: Seq[String], deltas: Seq[GraftDeltaSlice],
@@ -1515,14 +1546,13 @@ private[sources] object GraftChangelog {
     */
   def partitions(catalog: KuduLikeCatalog, tableName: String,
       from: Int, to: Int): Array[InputPartition] = {
-    val hosts =
-      try Array(java.net.InetAddress.getLocalHost.getHostName)
-      catch { case _: Exception => Array.empty[String] }
+    val hosts = new GraftScan.HostIndex(SparkSession.active.sessionState.newHadoopConf())
     catalog.deltaLayers(tableName)
       .filter { case (seq, _) => seq > from && seq <= to }
       .sortBy(_._1)
       .map { case (seq, dir) =>
-        GraftChangelogPartition(seq, GraftScan.listParquet(dir), hosts): InputPartition
+        val files = GraftScan.listParquet(dir)
+        GraftChangelogPartition(seq, files, hosts.preferred(files)): InputPartition
       }
       .toArray
   }
@@ -1563,12 +1593,10 @@ private[sources] object GraftOffset {
   * layer's files — never the base, never the table. State is one integer
   * per stream (the offset), checkpointed by Spark.
   */
-private[sources] final class GraftMicroBatchStream(root: String, tableName: String)
+private[sources] final class GraftMicroBatchStream(catalog: KuduLikeCatalog, tableName: String)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
 
   import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset}
-
-  private def catalog = new KuduLikeCatalog(SparkSession.active, root)
 
   override def initialOffset(): SOffset = {
     val cat = catalog
@@ -2046,8 +2074,11 @@ private[sources] final class GroupFileIterator(
       else {
         gi += 1
         val g = gi
-        val pt = projection.getType(g).asPrimitiveType()
-        GraftConverters.forField(f.dataType, pt, g)
+        (f.dataType, projection.getType(g)) match {
+          case (ArrayType(el, _), t) if !t.isPrimitive =>
+            GraftConverters.forArray(el, t.asGroupType(), g)
+          case (dt, t) => GraftConverters.forField(dt, t.asPrimitiveType(), g)
+        }
       }
     }
   }
@@ -2142,22 +2173,56 @@ private[sources] object GraftConverters {
     */
   def forField(dt: DataType, pt: org.apache.parquet.schema.PrimitiveType,
       gi: Int): Group => Any = {
-    def nullable(f: Group => Any): Group => Any =
-      g => if (g.getFieldRepetitionCount(gi) == 0) null else f(g)
+    val at = valueAt(dt, pt)
+    g => if (g.getFieldRepetitionCount(gi) == 0) null else at(g, gi, 0)
+  }
+
+  /** Converter for an array of one of the primitive types (the catalog's
+    * non-key vector columns) to `ArrayData`. Spark writes the three-level
+    * LIST (`repeated group list { optional <prim> element }`); its legacy
+    * format writes non-null elements as two-level (`repeated <prim> array`).
+    */
+  def forArray(el: DataType, list: org.apache.parquet.schema.GroupType,
+      gi: Int): Group => Any = {
+    val repeated = list.getType(0)
+    // element i of the list group l
+    val elemAt: (Group, Int) => Any =
+      if (repeated.isPrimitive) {
+        val at = valueAt(el, repeated.asPrimitiveType())
+        (l, i) => at(l, 0, i)
+      } else {
+        val at = valueAt(el, repeated.asGroupType().getType(0).asPrimitiveType())
+        (l, i) => {
+          val e = l.getGroup(0, i)
+          if (e.getFieldRepetitionCount(0) == 0) null else at(e, 0, 0)
+        }
+      }
+    g =>
+      if (g.getFieldRepetitionCount(gi) == 0) null
+      else {
+        val l = g.getGroup(gi, 0)
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          Array.tabulate[Any](l.getFieldRepetitionCount(0))(elemAt(l, _)))
+      }
+  }
+
+  /** The `i`-th value of field `fi` of a group, as a catalyst value. */
+  private def valueAt(dt: DataType,
+      pt: org.apache.parquet.schema.PrimitiveType): (Group, Int, Int) => Any =
     dt match {
-      case BooleanType => nullable(_.getBoolean(gi, 0))
-      case ByteType => nullable(_.getInteger(gi, 0).toByte)
-      case ShortType => nullable(_.getInteger(gi, 0).toShort)
-      case IntegerType => nullable(_.getInteger(gi, 0))
-      case LongType => nullable(_.getLong(gi, 0))
-      case FloatType => nullable(_.getFloat(gi, 0))
-      case DoubleType => nullable(_.getDouble(gi, 0))
-      case StringType => nullable(g => UTF8String.fromBytes(g.getBinary(gi, 0).getBytes))
-      case BinaryType => nullable(_.getBinary(gi, 0).getBytes)
+      case BooleanType => (g, fi, i) => g.getBoolean(fi, i)
+      case ByteType => (g, fi, i) => g.getInteger(fi, i).toByte
+      case ShortType => (g, fi, i) => g.getInteger(fi, i).toShort
+      case IntegerType => (g, fi, i) => g.getInteger(fi, i)
+      case LongType => (g, fi, i) => g.getLong(fi, i)
+      case FloatType => (g, fi, i) => g.getFloat(fi, i)
+      case DoubleType => (g, fi, i) => g.getDouble(fi, i)
+      case StringType => (g, fi, i) => UTF8String.fromBytes(g.getBinary(fi, i).getBytes)
+      case BinaryType => (g, fi, i) => g.getBinary(fi, i).getBytes
       case TimestampType | TimestampNTZType =>
         pt.getPrimitiveTypeName match {
           case PrimitiveTypeName.INT96 =>
-            nullable(g => int96ToMicros(g.getInt96(gi, 0)))
+            (g, fi, i) => int96ToMicros(g.getInt96(fi, i))
           case PrimitiveTypeName.INT64 =>
             import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
             val unitScale = pt.getLogicalTypeAnnotation match {
@@ -2167,8 +2232,8 @@ private[sources] object GraftConverters {
                 else 1L // MICROS
               case _ => 1L
             }
-            nullable { g =>
-              val v = g.getLong(gi, 0)
+            (g, fi, i) => {
+              val v = g.getLong(fi, i)
               if (unitScale == -1L) v / 1000L else v * unitScale
             }
           case other =>
@@ -2180,7 +2245,6 @@ private[sources] object GraftConverters {
           s"graft connector does not support type ${other.simpleString} " +
             "(outside the catalog's closed 10-type set)")
     }
-  }
 
   /** Spark's INT96 layout: 8 bytes little-endian nanos-of-day + 4 bytes
     * little-endian julian day.

@@ -24,6 +24,14 @@ class CatalogSpec extends SparkSpec {
 
   private def freshCat() = mkCatalog(tmpDir("graft_cat_"))
 
+  /** The connector partitions a catalog read plans (catalog reads are
+    * connector scans; pruning shows in WHICH partitions and files plan).
+    */
+  private def plannedParts(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.flatten.collect { case p: graft.sources.GraftInputPartition => p }
+
   private val schema2 = StructType(Seq(
     StructField("id", IntegerType), StructField("name", StringType)))
 
@@ -173,8 +181,8 @@ class CatalogSpec extends SparkSpec {
     // lookup returns the row and prunes to a single bucket partition
     val hit = cat.lookup("t", 42)
     assert(hit.collect().map(r => (r.getInt(0), r.getString(1))).toSeq === Seq((42, "v42")))
-    val plan = hit.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"), plan.take(800))
+    val parts = plannedParts(hit)
+    assert(parts.size === 1 && parts.head.bucket >= 0, parts)
   }
 
   test("range+hash partitioned table: month dirs, pruned time scans, compaction") {
@@ -196,8 +204,8 @@ class CatalogSpec extends SparkSpec {
     val feb = cat.lookupRange("ev", ts(2, 1), Timestamp.valueOf("2024-03-01 00:00:00"))
     assert(feb.count() === rows.count { case (_, t, _) =>
       !t.before(ts(2, 1)) && t.before(Timestamp.valueOf("2024-03-01 00:00:00")) })
-    val plan = feb.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__range"), plan.take(800))
+    val febFiles = plannedParts(feb).flatMap(_.baseFiles)
+    assert(febFiles.nonEmpty && febFiles.forall(_.contains("__range=2024-02")), febFiles)
     // compaction: several inserts -> many files; compact -> fewer, same data
     (1 to 4).foreach { b =>
       cat.insert("ev", (0 until 20).map(i => (1000L * b + i, ts(1, 1), 1.0)).toDF("id", "ts", "v"))

@@ -10,8 +10,9 @@ import java.sql.Timestamp
   * connector-shaped storage layer equivalent of the reference's
   * KuduStorageHandler + HiveKuduTableInputFormat binding (reference:
   * KuduStorageHandler.java:54-55, HiveKuduTableInputFormat.java:148-223).
-  * Every test compares the connector against the catalog's own
-  * `table()` merge — one storage engine, two read paths, identical rows.
+  * Catalog reads are connector scans too; here `format("graft")` loads,
+  * which resolve their snapshot per scan, are compared with catalog reads,
+  * which pin theirs (ReadPathSpec checks both against a model).
   */
 class DataSourceSpec extends SparkSpec {
 

@@ -77,6 +77,18 @@ class ObjectStoreProtocolSpec extends SparkSpec {
     assert(content(cat, "t") === before - (1L -> "v1") + (1L -> "patched"))
   }
 
+  test("compact folds only committed layers: a markerless crashed upsert " +
+    "stays invisible before and after the fold") {
+    val (cat, _) = seeded()
+    val before = content(cat, "t")
+    crashAt("delta.copied")(cat.upsert("t", up(2L -> "patched")))
+    assert(content(cat, "t") === before)
+    cat.compact("t")
+    assert(content(cat, "t") === before,
+      "compact must read with the catalog's storage, whose visibility rule " +
+        "needs the commit marker")
+  }
+
   test("layer publish: crash between copy and marker PUT leaves the layer " +
     "invisible; the retry converges") {
     val (cat, _) = seeded()
