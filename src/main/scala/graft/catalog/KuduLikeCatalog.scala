@@ -124,8 +124,8 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
   // skipping and footer-answered aggregates (GraftAggReaderFactory) for
   // every timestamp column. The reference stores timestamps as epoch
   // longs at its seam for the same reason (HiveKuduBridgeUtils.java:
-  // 192-196). Readers (Spark's vectorized reader AND the connector's
-  // row-group reader) handle both encodings, so pre-existing INT96
+  // 192-196). Spark's vectorized reader, which decodes every file the
+  // connector reads, handles both encodings, so pre-existing INT96
   // tables stay readable.
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 

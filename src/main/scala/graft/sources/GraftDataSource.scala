@@ -3,19 +3,11 @@ package graft.sources
 import graft.catalog.KuduLikeCatalog
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.filter2.bloomfilterlevel.BloomFilterImpl
-import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.{ColumnIOFactory, RecordReader => PqRecordReader}
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.{MessageType, Type => PType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, Murmur3Hash}
@@ -58,7 +50,8 @@ import scala.jdk.CollectionConverters._
   *  - Pushdown survives the connector: required columns become the parquet
   *    projection (`SupportsPushDownRequiredColumns`), supported filters
   *    become parquet-mr `FilterPredicate`s applied to base files — row
-  *    groups whose min/max stats exclude the predicate are never read
+  *    groups whose min/max stats or bloom filters exclude the predicate
+  *    are never read
   *    (`SupportsPushDownFilters`; all filters are also kept as residuals,
   *    Spark re-evaluates after the merge, so inexact pushdown can never
   *    change results). An equality filter on every key column additionally
@@ -166,12 +159,6 @@ object GraftDataSource {
     */
   val MaxOverlayRowsKey = "spark.graft.connector.maxOverlayRows"
   val MaxOverlayRowsDefault = 4000000L
-
-  /** Vectorized `ColumnarBatch` reads for delta-free partitions (default
-    * on); set false to force the row-based reader everywhere — an escape
-    * hatch, and what the row-path tests pin against.
-    */
-  val ColumnarReadKey = "spark.graft.connector.columnarRead"
 
   /** `option("changelog","true")`: the table surfaces its CDC stream —
     * every pending mutation row as `(data columns…, op, version)` — instead
@@ -595,8 +582,8 @@ private[sources] final class GraftScanBuilder(cat: KuduLikeCatalog, tableName: S
   /** Everything stays residual (Spark re-evaluates post-merge — inexact
     * pushdown, the same contract as Spark's own parquet source with
     * nested-pruning edge cases); the convertible subset is ALSO handed to
-    * parquet-mr for row-group stats pruning and to the planner for bucket
-    * routing.
+    * parquet-mr for row-group pruning (stats, then bloom filters) and to
+    * the planner for bucket routing.
     */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     if (!changelog) pushed = filters.filter(GraftFilters.isSupported)
@@ -967,8 +954,7 @@ private[sources] final class GraftScan(cat: KuduLikeCatalog, tableName: String,
     // scan-level, not per-partition: Spark rejects mixed row/columnar
     // partitions, so one bucket with pending deltas pins the whole scan to
     // the row-based merge reader (compaction restores columnar reads)
-    val columnarRead = spark.conf.getOption(GraftDataSource.ColumnarReadKey)
-      .forall(_.toBoolean) &&
+    val columnarRead =
       plannedPartitions.forall(_.asInstanceOf[GraftInputPartition].deltas.isEmpty)
     new GraftReaderFactory(tableName, required, fullSchema,
       snap.get.keyCols, pushed, maxOverlayRows, columnarRead)
@@ -1655,29 +1641,25 @@ private[sources] final class GraftChangelogReader(
     part: GraftChangelogPartition, dataSchema: StructType)
   extends PartitionReader[InternalRow] {
 
-  private val readFields: Array[StructField] =
-    dataSchema.fields :+ StructField(KuduLikeCatalog.OpCol, StringType)
-  private var activeFile: GroupFileIterator = _
+  private val readSchema =
+    StructType(dataSchema.fields :+ StructField(KuduLikeCatalog.OpCol, StringType))
+  private var activeReader: AutoCloseable = _
   private val rows: Iterator[Array[Any]] =
     part.files.iterator.flatMap { f =>
-      val it = new GroupFileIterator(f, readFields, Array.empty)
-      activeFile = it
-      it
+      val r = GraftVectorized.open(f, readSchema, Array.empty)
+      activeReader = r
+      GraftVectorized.copiedRows(r, readSchema)
     }
   private var current: InternalRow = _
 
   override def next(): Boolean =
     if (rows.hasNext) {
-      val row = rows.next()
-      val out = new Array[Any](readFields.length + 1)
-      System.arraycopy(row, 0, out, 0, readFields.length)
-      out(readFields.length) = part.seq
-      current = new GenericInternalRow(out)
+      current = new GenericInternalRow(rows.next() :+ part.seq)
       true
     } else false
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (activeFile != null) activeFile.close()
+  override def close(): Unit = if (activeReader != null) activeReader.close()
 }
 
 private[sources] final class GraftReaderFactory(
@@ -1687,13 +1669,13 @@ private[sources] final class GraftReaderFactory(
 
   /** Delta-free partitions — the 100-TB base-scan case — read COLUMNAR:
     * parquet column chunks decode straight into Spark `ColumnarBatch`
-    * vectors (no per-row `Group` materialization, no per-row
-    * `InternalRow`), the same decode path Spark's native parquet source
-    * uses. Partitions carrying pending mutations keep the row-based
-    * merge-on-read reader: the overlay probe is inherently per-row (each
-    * base row's key is checked against the delta map). Compaction
-    * therefore also restores columnar speed — one more reason it is the
-    * maintenance verb of this storage layout.
+    * vectors (no per-row `InternalRow`), the same decode path Spark's
+    * native parquet source uses. When any partition carries pending
+    * mutations the whole scan takes the row-based merge-on-read reader
+    * (Spark rejects mixed row/columnar partitions): the overlay probe is
+    * inherently per-row (each base row's key is checked against the delta
+    * map). Compaction therefore also restores columnar speed — one more
+    * reason it is the maintenance verb of this storage layout.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     columnarRead
@@ -1734,73 +1716,19 @@ private[sources] final class GraftPartitionReader(
     keyCols.map(k => readFields.indexWhere(_.name == k)).toArray
   private val outIdx: Array[Int] = required.fields.indices.toArray // prefix
 
-  // ---- overlay from delta layers (ascending seq; map put = last wins).
-  // Size-capped: the overlay is bounded by pending-mutation volume, but a
-  // table whose compaction was deferred long enough would otherwise grow it
-  // until the task dies with an uncatchable OOM Error mid-merge — fail fast
-  // with the fix in the message instead.
-  private val overlay = new java.util.HashMap[Seq[Any], (String, Array[Any])]()
-  if (hasDeltas) {
-    val opField = StructField(KuduLikeCatalog.OpCol, StringType)
-    val deltaFields = readFields :+ opField
-    var loaded = 0L
-    part.deltas.sortBy(_.seq).foreach { slice =>
-      slice.files.foreach { f =>
-        // deltas are never record-filtered: the merge must SEE a
-        // superseding row even when the filter would drop it
-        val it = new GroupFileIterator(f, deltaFields, Array.empty)
-        try while (it.hasNext) {
-          val row = it.next()
-          loaded += 1
-          if (loaded > maxOverlayRows)
-            throw new IllegalStateException(
-              s"graft scan of $tableName: delta overlay exceeds " +
-                s"$maxOverlayRows rows in one task — run " +
-                s"KuduLikeCatalog.compact(\"$tableName\") to fold pending " +
-                s"mutation layers into the base (or raise " +
-                s"${GraftDataSource.MaxOverlayRowsKey})")
-          val op = row(deltaFields.length - 1) match {
-            case s: UTF8String => s.toString
-            case other => String.valueOf(other)
-          }
-          overlay.put(keyOf(row), (op, row))
-        } finally it.close()
-      }
-    }
-  }
-
-  /** Hash key for the overlay probe: one array + one wrapper per row (the
-    * ArraySeq wraps without copying and carries content equals/hashCode) —
-    * this runs once per base row on delta-bearing scans, so no per-element
-    * collection chains.
-    */
-  private def keyOf(row: Array[Any]): Seq[Any] = {
-    val k = new Array[Any](keyIdx.length)
-    var i = 0
-    while (i < keyIdx.length) {
-      k(i) = row(keyIdx(i)) match {
-        case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-        case v => v
-      }
-      i += 1
-    }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(k)
-  }
-
-  // ---- base stream: VECTORIZED parquet decode emitting row VIEWS
-  // (GraftVectorized.rowIterator) — column chunks decode batch-at-a-time
-  // into Spark's column vectors even though emission is per-row, because
-  // each base row's key must probe the overlay before it may surface. The
-  // accessors below extract catalyst values from the views; the same
-  // representations GroupFileIterator produces for the delta side
-  // (UTF8String / boxed primitives / micros longs / Decimal), so overlay
-  // keys and base keys hash-compare directly. Values are views into the
-  // reader's reused batch: keys are probed then dropped, and emitted rows
-  // deep-copy in next() before the iterator advances.
+  // Base and delta files decode through the same vectorized reader and
+  // these same accessors, so overlay keys and base keys are the same
+  // catalyst values and hash-compare directly.
   private val accessors: Array[(org.apache.spark.sql.catalyst.expressions.SpecializedGetters, Int) => Any] =
     readFields.map(f => InternalRow.getAccessor(f.dataType, nullable = true))
 
-  private def keyOfView(row: InternalRow): Seq[Any] = {
+  /** Hash key for the overlay probe: one array + one wrapper per row (the
+    * ArraySeq wraps without copying and carries content equals/hashCode;
+    * binary keys wrap as ByteBuffers for the same reason) — this runs once
+    * per base row on delta-bearing scans, so no per-element collection
+    * chains.
+    */
+  private def keyOf(row: InternalRow): Seq[Any] = {
     val k = new Array[Any](keyIdx.length)
     var i = 0
     while (i < keyIdx.length) {
@@ -1814,18 +1742,47 @@ private[sources] final class GraftPartitionReader(
     scala.collection.immutable.ArraySeq.unsafeWrapArray(k)
   }
 
-  /** Deep-copy one catalyst value out of a reused column vector (strings/
-    * binaries/nested values are views; primitives and Decimal are safe).
-    */
-  private def copyVal(v: Any): Any = v match {
-    case s: UTF8String => s.clone()
-    case b: Array[Byte] => b.clone()
-    case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-    case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-    case r: InternalRow => r.copy()
-    case x => x
+  // ---- overlay from delta layers (ascending seq; map put = last wins).
+  // Size-capped: the overlay is bounded by pending-mutation volume, but a
+  // table whose compaction was deferred long enough would otherwise grow it
+  // until the task dies with an uncatchable OOM Error mid-merge — fail fast
+  // with the fix in the message instead.
+  private val overlay = new java.util.HashMap[Seq[Any], (String, Array[Any])]()
+  if (hasDeltas) {
+    val deltaSchema =
+      StructType(readFields :+ StructField(KuduLikeCatalog.OpCol, StringType))
+    var loaded = 0L
+    part.deltas.sortBy(_.seq).foreach { slice =>
+      slice.files.foreach { f =>
+        // deltas are never filtered: the merge must SEE a superseding row
+        // even when the filter would drop it
+        val r = GraftVectorized.open(f, deltaSchema, Array.empty)
+        try GraftVectorized.copiedRows(r, deltaSchema).foreach { row =>
+          loaded += 1
+          if (loaded > maxOverlayRows)
+            throw new IllegalStateException(
+              s"graft scan of $tableName: delta overlay exceeds " +
+                s"$maxOverlayRows rows in one task — run " +
+                s"KuduLikeCatalog.compact(\"$tableName\") to fold pending " +
+                s"mutation layers into the base (or raise " +
+                s"${GraftDataSource.MaxOverlayRowsKey})")
+          val op = row(readFields.length) match {
+            case s: UTF8String => s.toString
+            case other => String.valueOf(other)
+          }
+          overlay.put(keyOf(new GenericInternalRow(row)), (op, row))
+        } finally r.close()
+      }
+    }
   }
 
+  // ---- base stream: VECTORIZED parquet decode emitting row VIEWS
+  // (GraftVectorized.rowIterator) — column chunks decode batch-at-a-time
+  // into Spark's column vectors even though emission is per-row, because
+  // each base row's key must probe the overlay before it may surface.
+  // Values are views into the reader's reused batch: keys are probed then
+  // dropped, and emitted rows deep-copy in next() before the iterator
+  // advances.
   // The active reader is tracked so an early-terminated scan (limit/take/
   // task kill) can release its parquet reader in close() — row iterators
   // only close themselves at EOF.
@@ -1835,7 +1792,7 @@ private[sources] final class GraftPartitionReader(
       val r = GraftVectorized.open(f, StructType(readFields), pushed)
       activeReader = r
       GraftVectorized.rowIterator(r)
-    }.filter(row => !hasDeltas || !overlay.containsKey(keyOfView(row)))
+    }.filter(row => !hasDeltas || !overlay.containsKey(keyOf(row)))
   private val overlayIter: Iterator[Array[Any]] =
     if (!hasDeltas || !part.emitOverlay) Iterator.empty
     else overlay.values().iterator().asScala.collect {
@@ -1850,7 +1807,7 @@ private[sources] final class GraftPartitionReader(
       var i = 0
       while (i < outIdx.length) {
         val idx = outIdx(i)
-        out(i) = copyVal(accessors(idx)(row, idx))
+        out(i) = GraftVectorized.copyVal(accessors(idx)(row, idx))
         i += 1
       }
       current = new GenericInternalRow(out)
@@ -1869,21 +1826,8 @@ private[sources] final class GraftPartitionReader(
 }
 
 /** Columnar reader for one delta-free partition: each base file streams
-  * through Spark's own `VectorizedParquetRecordReader` — the codegen-hot
-  * decode path of the native parquet source — emitting reused
-  * `ColumnarBatch`es of 4096 rows. Per-file setup mirrors what Spark's
-  * `ParquetFileFormat` does: one footer read (reused for both the filter
-  * compatibility check and reader init via the footer-accepting
-  * `initialize` overload — the same single-footer discipline as
-  * [[GroupFileIterator]]), convertible pushed filters handed to parquet-mr
-  * for ROW-GROUP stats pruning only (record-level filtering off; Spark's
-  * residual filters keep exactness, identical contract to the row path),
-  * and the requested Catalyst schema driving schema evolution (columns a
-  * file predates become null vectors).
-  *
-  * Rebase modes are CORRECTED: every base file is written by this
-  * catalog through Spark's modern parquet writer (external attach never
-  * routes through the connector), so no Julian-calendar rebasing applies.
+  * through [[GraftVectorized]] with batch emission enabled, handing Spark
+  * reused `ColumnarBatch`es of 4096 rows.
   */
 private[sources] final class GraftColumnarPartitionReader(
     part: GraftInputPartition, required: StructType,
@@ -1918,27 +1862,39 @@ private[sources] final class GraftColumnarPartitionReader(
   override def close(): Unit = if (reader != null) reader.close()
 }
 
-/** Shared per-file setup for Spark's `VectorizedParquetRecordReader` — the
-  * codegen-hot decode path of the native parquet source. One footer read
-  * (reused for the filter compatibility check and reader init), convertible
-  * pushed filters handed to parquet-mr for ROW-GROUP stats pruning only
-  * (record-level filtering off; Spark's residual filters keep exactness),
-  * and the requested Catalyst schema driving schema evolution (columns a
-  * file predates become null vectors). The caller picks the emission shape:
-  * `enableReturningBatches()` for `ColumnarBatch` (delta-free scans), plain
-  * `nextKeyValue()` for row views (the merge-on-read base stream — decode
-  * stays vectorized even when emission must be per-row for overlay probes).
+/** The connector's one parquet decoder: Spark's
+  * `VectorizedParquetRecordReader`, the codegen-hot decode path of the
+  * native parquet source, for base, delta and changelog files alike.
+  * Per-file setup reads the footer once, on the stream the reader then
+  * decodes from; prunes row groups against the pushed filters (min/max
+  * statistics, then bloom filters — the non-key point-lookup index a table
+  * declares with `graft.bloom_columns`), counting each outcome in
+  * [[GraftScanStats]]; and lets the requested Catalyst schema drive schema
+  * evolution (columns a file predates become null vectors). Dictionary
+  * pages are not consulted for pruning: that costs a page read per column
+  * chunk of every surviving group, on every scan, for skips the bloom
+  * filter yields from footer-adjacent bytes. No record- or page-level
+  * filtering either: Spark's residual filters keep results exact.
   *
-  * Rebase modes are CORRECTED: every base file is written by this catalog
+  * The caller picks the emission shape: `enableReturningBatches()` for
+  * `ColumnarBatch` (delta-free scans), plain `nextKeyValue()` for row
+  * views ([[rowIterator]]: the merge-on-read base stream, whose rows probe
+  * the overlay one by one) or deep copies ([[copiedRows]]: delta and
+  * changelog layers, read whole and unfiltered).
+  *
+  * Rebase modes are CORRECTED: every file is written by this catalog
   * through Spark's modern parquet writer (external attach never routes
   * through the connector), so no Julian-calendar rebasing applies.
   */
 private[graft] object GraftVectorized {
 
   import org.apache.spark.sql.execution.datasources.parquet.{
-    ParquetFooterReader, ParquetReadSupport, VectorizedParquetRecordReader}
-  import org.apache.parquet.format.converter.ParquetMetadataConverter
+    ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.parquet.HadoopReadOptions
+  import org.apache.parquet.filter2.bloomfilterlevel.BloomFilterImpl
+  import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
   import org.apache.parquet.hadoop.ParquetInputFormat
+  import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 
   def open(file: String, required: StructType,
       pushed: Array[sources.Filter]): VectorizedParquetRecordReader = {
@@ -1954,37 +1910,53 @@ private[graft] object GraftVectorized {
     conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
     conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
     conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    // row-group stats pruning only: record-level and page-level filtering
-    // are redundant under Spark's residual filters and don't compose with
-    // batch-at-a-time decode
-    conf.setBoolean(ParquetInputFormat.RECORD_FILTERING_ENABLED, false)
-    conf.setBoolean(ParquetInputFormat.COLUMN_INDEX_FILTERING_ENABLED, false)
 
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(hPath, conf), ParquetMetadataConverter.NO_FILTER)
-    val fileSchema = footer.getFileMetaData.getSchema
-    // predicate over PRESENT columns only (parquet validates filters
-    // against the file schema; a column the file predates is all-null and
-    // stays residual-filtered) — same per-file clipping as the row path
-    val presentFields = required.fields.filter(f => fileSchema.containsField(f.name))
-    GraftFilters.toParquet(pushed, presentFields.toSeq)
-      .foreach(ParquetInputFormat.setFilterPredicate(conf, _))
-
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      hPath, 0, Files.size(Paths.get(file)), Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val input = HadoopInputFile.fromPath(hPath, conf)
+    val stream = input.newStream()
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false,
       /*capacity=*/ 4096)
     try {
-      r.initialize(split, ctx, None, None, Some(footer))
+      // the footer read; this handle also serves the bloom-filter reads
+      // and is not closed itself — the stream it shares is the reader's,
+      // which closes it
+      val footerReader = ParquetFileReader.open(
+        input, HadoopReadOptions.builder(conf, hPath).build(), stream)
+      val footer = footerReader.getFooter
+      // predicate over PRESENT columns only (a column the file predates is
+      // all-null and stays residual-filtered)
+      val fileSchema = footer.getFileMetaData.getSchema
+      val pred = GraftFilters.toParquet(pushed,
+        required.fields.filter(f => fileSchema.containsField(f.name)).toSeq)
+      val kept = footer.getBlocks.asScala.filter(b => pred.forall(keep(_, b, footerReader)))
+      GraftScanStats.rowGroupsRead.add(kept.size)
+      val split = new org.apache.hadoop.mapred.FileSplit(
+        hPath, 0, input.getLength, Array.empty[String])
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+      r.initialize(split, ctx, Some(input), Some(stream),
+        Some(new ParquetMetadata(footer.getFileMetaData, kept.asJava)))
       r.initBatch(new StructType(), InternalRow.empty)
     } catch {
-      case e: Throwable => r.close(); throw e
+      case e: Throwable => r.close(); stream.close(); throw e
     }
     r
   }
+
+  /** Whether a row group survives the predicate: statistics first (footer
+    * metadata only), then the bloom filter (footer-adjacent bytes; no
+    * filter for a column = cannot drop).
+    */
+  private def keep(pred: FilterPredicate, block: BlockMetaData,
+      footerReader: ParquetFileReader): Boolean =
+    if (StatisticsFilter.canDrop(pred, block.getColumns)) {
+      GraftScanStats.rowGroupsStatsSkipped.increment()
+      false
+    } else if (BloomFilterImpl.canDrop(pred, block.getColumns,
+        footerReader.getBloomFilterDataReader(block))) {
+      GraftScanStats.rowGroupsBloomSkipped.increment()
+      false
+    } else true
 
   /** Row-view iterator over an opened reader (batch mode NOT enabled):
     * values are views into the reader's reused column vectors — probe or
@@ -2008,12 +1980,41 @@ private[graft] object GraftVectorized {
         r.getCurrentValue.asInstanceOf[InternalRow]
       }
     }
+
+  /** Every row of an opened reader as a deep-copied array of catalyst
+    * values, in `schema` order (the schema the reader was opened with).
+    */
+  def copiedRows(r: VectorizedParquetRecordReader,
+      schema: StructType): Iterator[Array[Any]] = {
+    val get = schema.fields.map(f => InternalRow.getAccessor(f.dataType, nullable = true))
+    rowIterator(r).map { row =>
+      val out = new Array[Any](get.length)
+      var i = 0
+      while (i < out.length) { out(i) = copyVal(get(i)(row, i)); i += 1 }
+      out
+    }
+  }
+
+  /** Deep-copy one catalyst value out of a reused column vector (strings/
+    * binaries/nested values are views; primitives and Decimal are safe).
+    */
+  def copyVal(v: Any): Any = v match {
+    case s: UTF8String => s.clone()
+    case b: Array[Byte] => b.clone()
+    case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
+    case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
+    case r: InternalRow => r.copy()
+    case x => x
+  }
 }
 
-/** Row-group pruning counters for the connector's row path — test/diagnostic
-  * observability (local-mode: one JVM sees every task's increments). Not a
-  * correctness surface; results are identical with pruning off, only IO
-  * differs.
+/** Row-group counters of every file decoded through [[GraftVectorized.open]]
+  * (the connector's base, delta and changelog files, and the catalog's
+  * bucket-aligned insert probe): groups read, and groups skipped by
+  * min/max statistics or by a bloom filter. Test and
+  * diagnostic observability (local mode: one JVM sees every task's
+  * increments). Not a correctness surface; results are identical with
+  * pruning off, only IO differs.
   */
 object GraftScanStats {
   val rowGroupsRead = new java.util.concurrent.atomic.LongAdder
@@ -2021,239 +2022,6 @@ object GraftScanStats {
   val rowGroupsBloomSkipped = new java.util.concurrent.atomic.LongAdder
   def reset(): Unit = {
     rowGroupsRead.reset(); rowGroupsStatsSkipped.reset(); rowGroupsBloomSkipped.reset()
-  }
-}
-
-/** Streaming parquet-mr reader for one file: projects `fields` (null-filling
-  * columns the file predates — schema evolution via addColumn), converts
-  * each Group to catalyst values, applies the convertible subset of
-  * `filters` as a parquet FilterPredicate (row-group stats pruning + record
-  * filter). Filters referencing columns the file lacks are dropped per file
-  * (missing column = all-null; the residual Spark filter keeps semantics).
-  *
-  * One footer read per file: the row-group-level `ParquetFileReader` API is
-  * driven directly (the convenience `ParquetReader.builder` path opened the
-  * footer a second time inside build() — pure per-file metadata overhead,
-  * which dominates on the many-small-files layouts bucketed tables
-  * produce). Row groups whose column-chunk min/max statistics exclude the
-  * predicate are skipped without reading a page; surviving groups stream
-  * through `ColumnIO` record assembly with the record-level filter applied.
-  */
-private[sources] final class GroupFileIterator(
-    file: String, fields: Array[StructField], filters: Array[sources.Filter])
-  extends Iterator[Array[Any]] with AutoCloseable {
-
-  private val conf = new Configuration()
-  private val hPath = new org.apache.hadoop.fs.Path(file)
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-  private val present: Array[Boolean] =
-    fields.map(f => fileSchema.containsField(f.name))
-  private val projection: MessageType = {
-    val cols: Seq[PType] = fields.zipWithIndex.collect {
-      case (f, i) if present(i) =>
-        fileSchema.getFields.get(fileSchema.getFieldIndex(f.name))
-    }.toSeq
-    new MessageType(fileSchema.getName, cols.asJava)
-  }
-  // the predicate only ever references projected-and-present columns, so
-  // both the stats visitor and the record filter see a schema they know
-  private val filePred: Option[FilterPredicate] = GraftFilters.toParquet(
-    filters, fields.zipWithIndex.collect { case (f, i) if present(i) => f }.toSeq)
-  private val recordFilter: FilterCompat.Filter =
-    filePred.map(FilterCompat.get(_)).getOrElse(FilterCompat.NOOP)
-
-  reader.setRequestedSchema(projection)
-  private val columnIO = new ColumnIOFactory().getColumnIO(projection)
-
-  // converter per projected field: Group index → catalyst value
-  private val converters: Array[Group => Any] = {
-    var gi = -1
-    fields.zipWithIndex.map { case (f, i) =>
-      if (!present(i)) { (_: Group) => null }
-      else {
-        gi += 1
-        val g = gi
-        (f.dataType, projection.getType(g)) match {
-          case (ArrayType(el, _), t) if !t.isPrimitive =>
-            GraftConverters.forArray(el, t.asGroupType(), g)
-          case (dt, t) => GraftConverters.forField(dt, t.asPrimitiveType(), g)
-        }
-      }
-    }
-  }
-
-  private val blocks = reader.getRowGroups
-  private var blockIdx = 0
-  private var recordReader: PqRecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var nextRow: Array[Any] = _
-  private var eof = false
-  advance()
-
-  /** Position `recordReader` on the next row group surviving the stats
-    * and bloom filters; false at file end. Skipped groups cost zero page
-    * IO. Bloom filters (written when the table declares
-    * `graft.bloom_columns`) prune point predicates min/max statistics
-    * cannot — a key-sorted file's NON-key columns interleave across every
-    * row group, so their stats ranges all overlap; the bloom filter
-    * answers "value definitely absent from this group" from
-    * footer-adjacent bytes (Kudu analog: the per-tablet key index,
-    * DesignDocument.md). Dictionary-level filtering is deliberately NOT
-    * consulted: it decodes a dictionary page per column chunk of every
-    * surviving group — page IO spent on every scan for the same skips
-    * bloom yields without touching pages; Spark's residual filters keep
-    * row-level exactness either way.
-    */
-  private def openNextGroup(): Boolean = {
-    while (blockIdx < blocks.size()) {
-      val block = blocks.get(blockIdx)
-      blockIdx += 1
-      if (filePred.exists(p => StatisticsFilter.canDrop(p, block.getColumns))) {
-        GraftScanStats.rowGroupsStatsSkipped.increment()
-        reader.skipNextRowGroup()
-      } else if (filePred.exists(p => BloomFilterImpl.canDrop(
-          p, block.getColumns, reader.getBloomFilterDataReader(block)))) {
-        GraftScanStats.rowGroupsBloomSkipped.increment()
-        reader.skipNextRowGroup()
-      } else {
-        GraftScanStats.rowGroupsRead.increment()
-        val pages = reader.readNextRowGroup()
-        if (pages != null) {
-          recordReader = columnIO.getRecordReader(
-            pages, new GroupRecordConverter(projection), recordFilter)
-          rowsLeftInGroup = pages.getRowCount
-          if (rowsLeftInGroup > 0) return true
-        }
-      }
-    }
-    false
-  }
-
-  private def advance(): Unit = {
-    nextRow = null
-    while (nextRow == null && !eof) {
-      if (rowsLeftInGroup == 0 && !openNextGroup()) {
-        eof = true
-        close()
-        return
-      }
-      while (rowsLeftInGroup > 0 && nextRow == null) {
-        rowsLeftInGroup -= 1
-        val g = recordReader.read()
-        // a record-filtered row surfaces as shouldSkipCurrentRecord (and
-        // may materialize as null) — consume and keep scanning the group
-        if (g != null && !recordReader.shouldSkipCurrentRecord) {
-          val out = new Array[Any](fields.length)
-          var i = 0
-          while (i < fields.length) {
-            out(i) = converters(i)(g)
-            i += 1
-          }
-          nextRow = out
-        }
-      }
-    }
-  }
-
-  override def hasNext: Boolean = nextRow != null
-  override def next(): Array[Any] = {
-    val r = nextRow
-    advance()
-    r
-  }
-  override def close(): Unit = try reader.close() catch { case _: Exception => () }
-}
-
-private[sources] object GraftConverters {
-  private val JulianEpochDay = 2440588L // 1970-01-01 as a julian day number
-
-  /** Catalyst-value converter for one projected primitive column. Nulls are
-    * repetition-count-zero in the Group API.
-    */
-  def forField(dt: DataType, pt: org.apache.parquet.schema.PrimitiveType,
-      gi: Int): Group => Any = {
-    val at = valueAt(dt, pt)
-    g => if (g.getFieldRepetitionCount(gi) == 0) null else at(g, gi, 0)
-  }
-
-  /** Converter for an array of one of the primitive types (the catalog's
-    * non-key vector columns) to `ArrayData`. Spark writes the three-level
-    * LIST (`repeated group list { optional <prim> element }`); its legacy
-    * format writes non-null elements as two-level (`repeated <prim> array`).
-    */
-  def forArray(el: DataType, list: org.apache.parquet.schema.GroupType,
-      gi: Int): Group => Any = {
-    val repeated = list.getType(0)
-    // element i of the list group l
-    val elemAt: (Group, Int) => Any =
-      if (repeated.isPrimitive) {
-        val at = valueAt(el, repeated.asPrimitiveType())
-        (l, i) => at(l, 0, i)
-      } else {
-        val at = valueAt(el, repeated.asGroupType().getType(0).asPrimitiveType())
-        (l, i) => {
-          val e = l.getGroup(0, i)
-          if (e.getFieldRepetitionCount(0) == 0) null else at(e, 0, 0)
-        }
-      }
-    g =>
-      if (g.getFieldRepetitionCount(gi) == 0) null
-      else {
-        val l = g.getGroup(gi, 0)
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.tabulate[Any](l.getFieldRepetitionCount(0))(elemAt(l, _)))
-      }
-  }
-
-  /** The `i`-th value of field `fi` of a group, as a catalyst value. */
-  private def valueAt(dt: DataType,
-      pt: org.apache.parquet.schema.PrimitiveType): (Group, Int, Int) => Any =
-    dt match {
-      case BooleanType => (g, fi, i) => g.getBoolean(fi, i)
-      case ByteType => (g, fi, i) => g.getInteger(fi, i).toByte
-      case ShortType => (g, fi, i) => g.getInteger(fi, i).toShort
-      case IntegerType => (g, fi, i) => g.getInteger(fi, i)
-      case LongType => (g, fi, i) => g.getLong(fi, i)
-      case FloatType => (g, fi, i) => g.getFloat(fi, i)
-      case DoubleType => (g, fi, i) => g.getDouble(fi, i)
-      case StringType => (g, fi, i) => UTF8String.fromBytes(g.getBinary(fi, i).getBytes)
-      case BinaryType => (g, fi, i) => g.getBinary(fi, i).getBytes
-      case TimestampType | TimestampNTZType =>
-        pt.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT96 =>
-            (g, fi, i) => int96ToMicros(g.getInt96(fi, i))
-          case PrimitiveTypeName.INT64 =>
-            import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-            val unitScale = pt.getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation =>
-                if (t.getUnit == TimeUnit.MILLIS) 1000L
-                else if (t.getUnit == TimeUnit.NANOS) -1L // divide
-                else 1L // MICROS
-              case _ => 1L
-            }
-            (g, fi, i) => {
-              val v = g.getLong(fi, i)
-              if (unitScale == -1L) v / 1000L else v * unitScale
-            }
-          case other =>
-            throw new IllegalArgumentException(
-              s"unsupported parquet timestamp storage $other")
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft connector does not support type ${other.simpleString} " +
-            "(outside the catalog's closed 10-type set)")
-    }
-
-  /** Spark's INT96 layout: 8 bytes little-endian nanos-of-day + 4 bytes
-    * little-endian julian day.
-    */
-  def int96ToMicros(b: Binary): Long = {
-    val buf = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - JulianEpochDay) * 86400L * 1000000L + nanosOfDay / 1000L
   }
 }
 

@@ -40,45 +40,41 @@ class DataSourceSpec extends SparkSpec {
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  private def batchScans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+
   test("columnar read: delta-free scan executes columnar and matches the row path") {
     val (cat, root) = mkCat()
     cat.createTable(TableDef("t", schema, Seq("id"), buckets = 4))
     cat.insert("t", rows(500))
+    def query = readDs(root, "t").filter(col("v") > 50.0).select("id", "grp", "v")
     // delta-free table → the scan exec must report columnar support
-    val ds = readDs(root, "t").filter(col("v") > 50.0).select("id", "grp", "v")
-    val scanExec = ds.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }
-    assert(scanExec.nonEmpty && scanExec.forall(_.supportsColumnar),
+    val ds = query
+    assert(batchScans(ds).nonEmpty && batchScans(ds).forall(_.supportsColumnar),
       "delta-free graft scan should read ColumnarBatch")
-    // bit-identical results vs the row-based reader (escape hatch conf)
     val columnar = sortedRows(ds)
-    spark.conf.set(graft.sources.GraftDataSource.ColumnarReadKey, "false")
-    try {
-      val rowDs = readDs(root, "t").filter(col("v") > 50.0).select("id", "grp", "v")
-      val rowScan = rowDs.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }
-      assert(rowScan.forall(!_.supportsColumnar))
-      assert(sortedRows(rowDs) === columnar)
-    } finally spark.conf.unset(graft.sources.GraftDataSource.ColumnarReadKey)
-    // a pending delta pins the scan back to the row-based merge reader
-    cat.upsert("t", rows(10))
-    val merged = readDs(root, "t")
-    val mergedScan = merged.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }
-    assert(mergedScan.forall(!_.supportsColumnar),
+    // upserting one row unchanged puts a delta layer in one bucket: the
+    // whole scan moves to the row-based merge reader, three of its four
+    // partitions delta-free, and must return the same rows
+    cat.upsert("t", rows(500).filter(col("id") === 7L))
+    val rowDs = query
+    assert(batchScans(rowDs).nonEmpty && batchScans(rowDs).forall(!_.supportsColumnar),
       "pending deltas require the row-based merge reader")
-    assert(merged.count() === 500)
+    val withDeltas = batchScans(rowDs).flatMap(_.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+        p.inputPartitions.map(_.asInstanceOf[sources.GraftInputPartition].deltas.nonEmpty)
+    })
+    assert(withDeltas.size === 4 && withDeltas.count(identity) === 1)
+    assert(sortedRows(rowDs) === columnar)
+    assert(readDs(root, "t").count() === 500)
     // compaction folds the deltas — columnar comes back
     cat.compact("t")
     val compacted = readDs(root, "t")
-    val compactedScan = compacted.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }
-    assert(compactedScan.forall(_.supportsColumnar))
+    assert(batchScans(compacted).forall(_.supportsColumnar))
     assert(sortedRows(compacted) === sortedRows(cat.table("t")))
+    assert(sortedRows(query) === columnar)
   }
 
   test("connector partitions report preferred locations (tablet-leader locality analog)") {
@@ -253,6 +249,45 @@ class DataSourceSpec extends SparkSpec {
         case v => String.valueOf(v)
       }.mkString("|")).sorted.toSeq
     assert(render(readDs(root, "w")) === render(cat.table("w")))
+
+    // a pending upsert changing every column of id 1 and a delete of id 2:
+    // delta rows decode through the same reader as base rows, every type
+    val upd = org.apache.spark.sql.Row(1L, 9.toByte, 8.toShort, 7, -1.25f, -2.5,
+      "wörld", false, new Timestamp(1600000000123L), Array[Byte](9, 8))
+    cat.upsert("w", spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(upd)), wide))
+    cat.delete("w", col("id") === 2L)
+    def renderRow(r: org.apache.spark.sql.Row): String =
+      render(spark.createDataFrame(spark.sparkContext.parallelize(Seq(r)),
+        StructType(wide.fields ++ Seq(StructField("op", StringType))))).head
+    val merged = render(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(upd)), wide))
+    assert(render(readDs(root, "w")) === merged)
+    assert(render(cat.table("w")) === merged)
+    // the changelog reads both layers: the upsert and id 2's tombstone
+    val changelog = spark.read.format("graft").option("root", root)
+      .option("changelog", "true").load("w").drop("version")
+    assert(render(changelog) === Seq(
+      renderRow(org.apache.spark.sql.Row.fromSeq(upd.toSeq :+ "upsert")),
+      renderRow(org.apache.spark.sql.Row.fromSeq(2L +: Seq.fill(9)(null) :+ "delete"))).sorted)
+
+    // binary, timestamp and byte keys: the overlay probe must match base
+    // keys to delta keys of each type, or an upsert would duplicate its row
+    val kSchema = StructType(Seq(
+      StructField("bin", BinaryType), StructField("ts", TimestampType),
+      StructField("b", ByteType), StructField("v", StringType)))
+    cat.createTable(TableDef("k", kSchema, Seq("bin", "ts", "b"), buckets = 2))
+    def kRow(i: Int, b: Int, v: String) = org.apache.spark.sql.Row(
+      Array[Byte](i.toByte, 1), new Timestamp(1700000000000L + i * 1000L), b.toByte, v)
+    def kDf(rs: org.apache.spark.sql.Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs), kSchema)
+    cat.insert("k", kDf((0 until 6).map(i => kRow(i, i % 3, s"v$i")): _*))
+    cat.upsert("k", kDf(kRow(2, 2, "upd"), kRow(2, 0, "new")))
+    cat.delete("k", col("v") === "v4")
+    val want = render(kDf(kRow(0, 0, "v0"), kRow(1, 1, "v1"), kRow(2, 2, "upd"),
+      kRow(2, 0, "new"), kRow(3, 0, "v3"), kRow(5, 2, "v5")))
+    assert(render(readDs(root, "k")) === want)
+    assert(render(cat.table("k")) === want)
   }
 
   test("range+hash partitioned table: connector merges across __range dirs by bucket only") {

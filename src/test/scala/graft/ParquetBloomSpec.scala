@@ -134,6 +134,32 @@ class ParquetBloomSpec extends SparkSpec {
     } finally spark.conf.unset("graft.parquet.block.size")
   }
 
+  test("scan counters count base-file row groups: read, stats-skipped, bloom-skipped") {
+    import graft.sources.GraftScanStats
+    spark.conf.set("graft.parquet.block.size", "65536")
+    try {
+      val (cat, root) = mkTable(tmpDir("graft_bloom_stats_"), bloom = Seq("payload"))
+      val groups = baseFiles(cat).map(rowGroupCount).sum
+      assert(groups > 1 && cat.deltaLayers("t").isEmpty)
+      val ds = spark.read.format("graft").option("root", root).load("t")
+      // a key range: base files are key-sorted, so min/max statistics drop
+      // the row groups outside it
+      GraftScanStats.reset()
+      assert(ds.filter(col("id") >= 1000L && col("id") < 2000L).count() === 1000L)
+      val read = GraftScanStats.rowGroupsRead.sum
+      val statsSkipped = GraftScanStats.rowGroupsStatsSkipped.sum
+      assert(read > 0 && statsSkipped > 0, s"read $read, stats-skipped $statsSkipped")
+      assert(read + statsSkipped === groups)
+      // an absent non-key value: every group straddles it, only the bloom
+      // filters can drop them
+      GraftScanStats.reset()
+      assert(ds.filter(col("payload") === 99999L).count() === 0L)
+      assert(GraftScanStats.rowGroupsBloomSkipped.sum === groups)
+      assert(GraftScanStats.rowGroupsRead.sum === 0L)
+      assert(GraftScanStats.rowGroupsStatsSkipped.sum === 0L)
+    } finally spark.conf.unset("graft.parquet.block.size")
+  }
+
   test("graft.bloom_columns round-trips through SQL CREATE and SHOW CREATE") {
     val root = tmpDir("graft_bloom_sql_")
     val cat = mkCat(root)
