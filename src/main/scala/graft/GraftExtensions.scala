@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL function registry, so `spark.sql("... graft_cosine(a, b) ...")` works
   * and plans show the function by name.
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Usage: `.withExtensions(new GraftExtensions)` on a session builder, or
   * `--conf spark.sql.extensions=graft.GraftExtensions` on a real cluster.
   * [[GraftExtensions.register]] installs the same functions into an already-
   * built session (used by the test/bench entry points).

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc SQL runner over the fixture tables and the keyed-table catalog —
   * the analog of the Hive CLI session in the reference's demo
   * (reference: README.md:46-218).
   *
-  * `tools/run_sql.sh <sfDir> "<sql>[; <sql>…]"` — registers every fixture
+  * `tools/graft.sh Sql <sfDir> "<sql>[; <sql>…]"` — registers every fixture
   * table as a view plus the graft SQL functions, then executes each
   * statement through [[GraftSql]]: catalog DDL/DML (`CREATE TABLE … STORED
   * BY … TBLPROPERTIES('kudu.key_columns'=…)`, `INSERT INTO`, `UPSERT INTO`,
@@ -19,15 +17,7 @@ object Sql {
     require(args.length >= 2, "usage: graft.Sql <sfDir> <sql>[;<sql>…] [maxRows]")
     val (sfDir, sql) = (args(0), args(1))
     val maxRows = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Tables.registerAll(spark, sfDir)
     GraftExtensions.register(spark)
     val cat = new graft.catalog.KuduLikeCatalog(

@@ -57,11 +57,10 @@ class ContractSpec extends AnyFunSuite {
     //    range-partition ids (metadata-scale by definition — bounded by
     //    partition count, never rows; the scan it feeds reads only
     //    pending-mutation-sized delta layers, column-pruned)
-    //  - Smoke/Explain/Bench/Verify mains: driver tools, not operators
+    //  - Smoke/Verify mains: driver tools, not operators
     val allowed = Set("AsOfJoin.scala", "IncrementalAgg.scala",
       "StreamingIngest.scala", "Bpe.scala", "Similarity.scala", "Smoke.scala",
-      "Explain.scala", "Bench.scala", "Verify.scala", "SoloQ.scala",
-      "KuduLikeCatalog.scala", "KMeans.scala", "QualityClassifier.scala",
+      "Verify.scala", "KuduLikeCatalog.scala", "KMeans.scala", "QualityClassifier.scala",
       // bounded: the quantizer model is cells + m*ksub rows by construction
       // (loadModel), and the training sample is capped at maxFit vectors
       "EmbeddingIndex.scala")

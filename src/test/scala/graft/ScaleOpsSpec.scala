@@ -298,20 +298,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got === expect)
   }
 
-  test("planner-integrated skyline (SkylineExec) matches the operator and plans as a custom node") {
-    val pts = Tables.load(spark, sf, "orders").filter(col("o_custkey") < 50)
-      .select(col("o_orderkey"), col("o_totalprice").as("p"),
-        col("o_orderdate").cast("date").as("d"))
-    val viaOperator = graft.operators.Skyline.skyline(pts, Seq("p", "d"))
-      .collect().map(_.getLong(0)).sorted
-    val viaPlanner = graft.plans.SkylinePlan.skyline(pts, Seq("p", "d"))
-    assert(viaPlanner.queryExecution.executedPlan.toString.startsWith("Skyline "))
-    assert(viaPlanner.collect().map(_.getLong(0)).sorted.toSeq === viaOperator.toSeq)
-    // column pruning still reaches the scan below the custom node
-    val plan = viaPlanner.queryExecution.executedPlan.toString
-    assert(!plan.contains("o_orderpriority"), "unused columns must not be scanned")
-  }
-
   test("chunkDedup: first-occurrence-wins on planted boilerplate, partitioning-independent") {
     import spark.implicits._
     val boiler = (1 to 10).map(i => s"b$i").mkString(" ")   // one exact chunk

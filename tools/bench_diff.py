@@ -3,7 +3,12 @@
 
 Usage:
   bench_diff.py OLD.json NEW.json [--threshold R] [--all]
+      [--retime=<old_rev> [--sfdir DIR]]
   git show <rev>:bench.json > /tmp/old.json && bench_diff.py /tmp/old.json bench.json
+
+--retime=<old_rev> solo-retimes every flagged query under both builds on this
+boot. It runs each build through that build's own tools/graft.sh, so
+<old_rev> must be a revision that has tools/graft.sh.
 
 Inputs are graft.Bench's bench.json shape: per-query sweep min in "queries",
 optional interference-free reruns in "queries_solo", raw sweep samples in
@@ -55,36 +60,26 @@ def srange(d, q):
 # Flagged rows are host-noise suspects until reproduced on ONE boot.
 # --retime=<old_rev> rebuilds the OLD bench commit in a git worktree and
 # solo-times every flagged query under both builds on the CURRENT boot
-# (graft.SoloQ: 4 hot runs, min taken), then re-verdicts: a regression is
-# REAL-SOLO only if new_solo > threshold * old_solo on identical hardware.
+# (`tools/graft.sh Bench retime -g1 -n4`: 4 hot runs after a warmup, min
+# taken), then re-verdicts: a regression is REAL-SOLO only if
+# new_solo > threshold * old_solo on identical hardware.
 # This automates the manual forensics that debunked 6 phantom regressions
 # in round 13 (BENCH_DIFF_r13.txt).
 
-ADD_OPENS = " ".join(
-    f"--add-opens java.base/{p}=ALL-UNNAMED" for p in [
-        "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-        "java.net", "java.nio", "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar"])
-
 
 def solo_times(repo_dir, queries, sf_dir):
-    """Run graft.SoloQ in repo_dir for the named queries; min hot run each."""
+    """Retime the named queries with repo_dir's build; min hot run each."""
     import re as _re
     import subprocess
-    cp = f"/opt/spark/jars/*:{repo_dir}/target/scala-2.13/classes"
-    cmd = (f"java {ADD_OPENS} -Xmx48g -Dspark.ui.enabled=false "
-           f"-Dspark.sql.session.timeZone=UTC -cp '{cp}' graft.SoloQ "
-           + " ".join(queries))
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    out = subprocess.run(["bash", "-c", cmd], cwd=repo_dir, env=env,
-                         capture_output=True, text=True, timeout=3600)
+    out = subprocess.run(["tools/graft.sh", "Bench", "retime", "-g1", "-n4", *queries],
+                         cwd=repo_dir, env=env, capture_output=True, text=True,
+                         timeout=3600)
     times = {}
     for line in out.stdout.splitlines():
-        m = _re.match(r"(\S+) run\d+: ([0-9.]+) s", line)
+        m = _re.match(r"(\S+) min=([0-9.]+) ", line)
         if m:
-            q, t = m.group(1), float(m.group(2))
-            times[q] = min(times.get(q, t), t)
+            times[m.group(1)] = float(m.group(2))
     missing = [q for q in queries if q not in times]
     if missing:
         sys.stderr.write(f"[retime] no solo time for {missing} in {repo_dir}; "
@@ -101,7 +96,7 @@ def build_worktree(rev):
                        check=True, capture_output=True)
     # compile alone does NOT copy resources — without copyResources the
     # DSv2 DataSourceRegister service file is absent from target/classes
-    # and every connector-path query kills the SoloQ JVM
+    # and every connector-path query kills the retime JVM
     subprocess.run(["sbt", "-batch", ";compile;Compile/copyResources"],
                    cwd=wt, check=True, capture_output=True, timeout=1800)
     return wt
@@ -132,6 +127,9 @@ def retime(rows, old_rev, thr, sf_dir):
 
 
 def main():
+    if "--help" in sys.argv:
+        print(__doc__)
+        sys.exit(0)
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     thr = 1.3
     show_all = "--all" in sys.argv

@@ -4,9 +4,9 @@
 The sf10 subset gate caught d20's multiplicity-quadratic pairing on its
 very first run; this tool turns it into a ROUND WORKFLOW step like
 bench_diff: re-time the committed subset queries at sf1 and sf10 on one
-boot each (graft.SoloQ, min of 4 hot runs), recompute the per-query
-10x-data ratios, diff them against the committed BENCH_sf10_subset.json,
-and flag any ratio that grew by more than --threshold (default 1.3x).
+boot each (`tools/graft.sh Bench retime -g1 -n4`, min of 4 hot runs),
+recompute the per-query 10x-data ratios, diff them against the committed
+BENCH_sf10_subset.json, and flag any ratio that grew by more than --threshold (default 1.3x).
 A flagged ratio means an operator's SCALING degraded since last round —
 the one regression class sf0.1 wall-clock diffs cannot see.
 
@@ -19,7 +19,8 @@ Writes the refreshed artifact to --out and the human diff table to
 --diff-out (default stdout; append it to BENCH_DIFF_r{N}.txt).
 Exit code 1 when any ratio ratcheted past the threshold.
 
-Never run while another Spark JVM is timing (the SoloQ ground-truth rule).
+Never run while another Spark JVM is timing (solo timing is the ground truth
+only when nothing else runs).
 """
 import argparse
 import json
@@ -30,35 +31,21 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-ADD_OPENS = []
-for p in ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
-          "java.nio java.util java.util.concurrent java.util.concurrent.atomic"
-          ).split():
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-for p in ("sun.nio.ch", "sun.nio.cs", "sun.security.action",
-          "sun.util.calendar"):
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-
-
 def solo_times(sf_dir, queries):
-    """One boot, 4 hot runs per query; returns {query: min_seconds}."""
-    cmd = (["java"] + ADD_OPENS +
-           ["-Xmx48g", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
-            "-cp", "/opt/spark/jars/*:target/scala-2.13/classes",
-            "graft.SoloQ"] + queries)
+    """One boot, 4 hot runs per query after a warmup; returns {query: min_seconds}."""
+    cmd = ["tools/graft.sh", "Bench", "retime", "-g1", "-n4", *queries]
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     out = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True,
                          text=True, check=True).stdout
     times = {}
     for line in out.splitlines():
-        m = re.match(r"(\S+) run\d: ([0-9.]+) s", line.strip())
+        m = re.match(r"(\S+) min=([0-9.]+) ", line)
         if m:
-            times.setdefault(m.group(1), []).append(float(m.group(2)))
+            times[m.group(1)] = float(m.group(2))
     missing = [q for q in queries if q not in times]
     if missing:
-        sys.exit(f"no timings for: {missing}\n--- SoloQ output ---\n{out}")
-    return {q: min(v) for q, v in times.items()}
+        sys.exit(f"no timings for: {missing}\n--- retime output ---\n{out}")
+    return times
 
 
 def main():
