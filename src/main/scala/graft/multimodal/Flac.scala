@@ -1,9 +1,9 @@
 package graft.multimodal
 
 /** Pure-JVM FLAC codec (decode + fixture encode) for the multimodal audio
-  * path — the compressed-audio counterpart of [[Jpeg]]: real SAMPLES, not a
-  * header parse, so `features()` runs on genuine amplitudes for the format
-  * most lossless audio corpora actually ship.
+  * path (the JDK ships no FLAC codec): real SAMPLES, not a header parse,
+  * so `features()` runs on genuine amplitudes for the format most lossless
+  * audio corpora actually ship.
   *
   * Written against the public FLAC format specification (RFC 9639 /
   * xiph.org format docs) — nothing here derives from libFLAC or any other
@@ -27,20 +27,20 @@ package graft.multimodal
   * (autocorrelation + Levinson-Durbin + coefficient quantization); stereo
   * decorrelation and Rice partitioning are selectable so every decoder
   * path has an encoder-driven fixture. Losslessness means the tests are
-  * bit-exact, unlike the JPEG round trips.
+  * bit-exact.
   *
   * Scale shape: this class touches ONE payload at a time on an executor
   * thread inside `mapPartitions` — no state, no allocation proportional to
   * anything but the declared sample count, which is capped by the same
-  * 64 MB decompression-bomb guard as the image codecs
-  * ([[Jpeg.MaxDecodedBytes]]): a crafted STREAMINFO declaring 2^36 samples
+  * 64 MB decompression-bomb guard as the image decodes
+  * ([[Multimodal.MaxDecodedBytes]]): a crafted STREAMINFO declaring 2^36 samples
   * must refuse before allocating, because an executor OOM is not a
   * catchable per-record failure.
   *
   * Reference anchor: the reference engine treats media payloads as opaque
   * binary columns end-to-end (HiveKuduBridgeUtils.java:40-76 maps only
   * primitive SQL types); real decode is part of this library's
-  * training-data-pipeline extension surface, same tier as [[Jpeg]].
+  * training-data-pipeline extension surface, same tier as the image path.
   */
 object Flac {
 
@@ -122,7 +122,7 @@ object Flac {
     require(si.totalSamples > 0,
       "FLAC: unknown total sample count (streaminfo=0) is outside the decode envelope")
     // decompression-bomb guard BEFORE any allocation (same cap as images)
-    require(si.totalSamples * si.channels * 4 <= Jpeg.MaxDecodedBytes,
+    require(si.totalSamples * si.channels * 4 <= Multimodal.MaxDecodedBytes,
       s"FLAC: declared ${si.totalSamples} samples x ${si.channels} ch exceeds decode cap")
     val out = new Array[Int]((si.totalSamples * si.channels).toInt)
     val br = new BitReader(b, audioStart(b))

@@ -1,17 +1,26 @@
 package graft.multimodal
 
+import java.awt.Transparency
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, DataBufferByte,
+  IndexColorModel, Raster}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Decoded-media record produced by the (stubbed) decoder. */
+/** Decoded-media record produced by [[Multimodal.decode]] (or its stub). */
 final case class DecodedMedia(
     id: Long, format: String, nBytes: Long,
     width: Int, height: Int, channels: Int, checksum: Long)
 
 /** Per-record image features over real pixels ([[Multimodal.features]]):
   * per-channel mean/std plus an 8-bin luminance histogram. `decoded=false`
-  * rows carry deterministic stub features (no pure-JVM pixel decode for
-  * that format).
+  * rows carry deterministic stub features (no pixel or sample decode for
+  * that payload).
   */
 final case class MediaFeatures(
     id: Long, format: String, decoded: Boolean,
@@ -37,24 +46,20 @@ final case class FrameSample(
 /** Multimodal-column plumbing (SURVEY.md §2.8 north-star "multimodal
   * columns"): media as opaque `binary` columns with typed metadata.
   *
-  * [[decode]] REALLY decodes the formats parseable in pure JVM with no
-  * codec libraries — BMP (BI_RGB, 24/32-bit), binary PPM (P6),
-  * PNG of every color type and layout (gray 1-16 bit, RGB/RGBA,
-  * palette+tRNS, gray+alpha, Adam7 interlaced; zlib inflate ships in
-  * `java.util.zip`), PCM WAV (RIFF, format code 1), and Huffman JPEG —
-  * baseline, extended-sequential, AND progressive SOF2 — via the in-repo
-  * T.81 codec ([[Jpeg]]) — yielding true dimensions/channels and a
-  * checksum over the decoded samples (row padding / filter bytes /
-  * container chunks excluded). JPEGs outside the Huffman envelope
-  * (arithmetic, 12-bit, CMYK) get a real HEADER parse: true geometry from
-  * SOF, checksum over the entropy-coded scan.
-  * Formats with no pure-JVM parse at all (compressed audio) fall back to
-  * the clearly-marked deterministic STUB ([[decodeStub]]), as does any
-  * payload whose sniff passes but whose parse fails — one corrupt record
-  * degrades, never kills the job. Everything
-  * around the codec is the real 100-TB-shaped plumbing: binary column +
-  * metadata struct schema, partition-parallel `mapPartitions` batch
-  * iteration (the Scala analog of `mapInPandas` batches), and a typed
+  * [[decode]] REALLY decodes what the JDK or a short parser here can:
+  * BMP (BI_RGB, 24/32-bit), PNG, JPEG and GIF through `javax.imageio`
+  * ([[imagePixels]]), binary PPM (P6) in place, and PCM/G.711 WAV and FLAC
+  * samples — yielding true dimensions/channels and a checksum over the
+  * decoded samples (row order, padding, filters, interlacing and container
+  * chunks excluded). JPEGs the pixel path refuses (arithmetic, 12-bit,
+  * CMYK, cut short) get a real HEADER parse: true geometry from SOF,
+  * checksum over the entropy-coded scan; MP3 and MP4 get container parses.
+  * Payloads no sniff claims fall back to the clearly-marked deterministic
+  * STUB ([[decodeStub]]), as does any payload whose sniff passes but whose
+  * parse fails — one corrupt record degrades, never kills the job.
+  * Everything around the codec is the real 100-TB-shaped plumbing: binary
+  * column + metadata struct schema, partition-parallel `mapPartitions`
+  * batch iteration (the Scala analog of `mapInPandas` batches), and a typed
   * `Dataset[DecodedMedia]` output that downstream relational operators
   * consume normally.
   */
@@ -72,10 +77,9 @@ object Multimodal {
         lit("fake/raw").as("format"),
         length(col(textCol).cast("binary")).cast("long").as("n_bytes")).as("meta"))
 
-  /** Decoder dispatch: REAL parse for the headerless-friendly uncompressed
-    * formats (BMP `BM`, PPM `P6`), deterministic stub for everything else
-    * (compressed codecs are not available in this container). Dispatch is on
-    * the payload's magic bytes, not the metadata format string — corrupt or
+  /** Decoder dispatch: images through [[decodeImage]], then WAV, FLAC, MP4
+    * and MP3, and the deterministic stub for everything else. Dispatch is on
+    * the payload's structure, not the metadata format string — corrupt or
     * mislabeled metadata must not route bytes to the wrong parser.
     */
   def decode(spark: SparkSession, media: DataFrame): Dataset[DecodedMedia] = {
@@ -85,25 +89,22 @@ object Multimodal {
       .mapPartitions { it =>
         it.map { case (id, bytes, fmt) =>
           // A payload that passes a sniff but then fails its parser (lying
-          // header, unsupported sub-format like RLE BMP or interlaced PNG,
-          // truncated pixel data) degrades to the stub record instead of
-          // failing the executor task: one corrupt record must never kill a
-          // 100-TB decode job.
-          try {
-            if (isBmp(bytes)) decodeBmp(id, bytes)
-            else if (isPpm(bytes)) decodePpm(id, bytes)
-            else if (isPng(bytes)) decodePng(id, bytes)
-            else if (isWav(bytes)) decodeWav(id, bytes)
-            else if (Flac.isFlac(bytes)) decodeFlac(id, bytes)
-            else if (isJpeg(bytes)) decodeJpeg(id, bytes)
-            else if (Gif.isGif(bytes)) decodeGif(id, bytes)
-            else if (Mp4.isMp4(bytes)) decodeMp4(id, bytes)
-            else mp3GeometryOpt(bytes) match {
-              case Some(g) => decodeMp3(id, bytes, g)
-              case None => stubRecord(id, bytes, fmt)
-            }
+          // header, unsupported sub-format like RLE BMP, truncated pixel
+          // data) degrades to the stub record instead of failing the
+          // executor task: one corrupt record must never kill a 100-TB
+          // decode job.
+          try imageFormat(bytes) match {
+            case Some(f) => decodeImage(id, f, bytes)
+            case None =>
+              if (isWav(bytes)) decodeWav(id, bytes)
+              else if (Flac.isFlac(bytes)) decodeFlac(id, bytes)
+              else if (Mp4.isMp4(bytes)) decodeMp4(id, bytes)
+              else mp3GeometryOpt(bytes) match {
+                case Some(g) => decodeMp3(id, bytes, g)
+                case None => stubRecord(id, bytes, fmt)
+              }
           } catch {
-            case scala.util.control.NonFatal(_) => stubRecord(id, bytes, fmt)
+            case NonFatal(_) => stubRecord(id, bytes, fmt)
           }
         }
       }
@@ -142,6 +143,10 @@ object Multimodal {
   private def le16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
+  private def be32(b: Array[Byte], off: Int): Int =
+    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
+      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+
   /** FNV-1a over a byte range — the pixel checksum primitive. */
   private def fnv(b: Array[Byte], from: Int, until: Int, seed: Long): Long = {
     var cs = seed
@@ -151,37 +156,6 @@ object Multimodal {
   }
 
   private val FnvSeed = 1469598103934665603L
-
-  /** Uncompressed BMP (BITMAPINFOHEADER, BI_RGB, 24/32-bit). Width/height
-    * are int32 LE at offsets 18/22 (height may be negative = top-down);
-    * pixel rows are padded to 4-byte boundaries — the checksum covers pixel
-    * bytes only, so a re-encode with different padding garbage hashes
-    * identically.
-    */
-  private def decodeBmp(id: Long, b: Array[Byte]): DecodedMedia = {
-    val pixelOff = le32(b, 10)
-    val width = le32(b, 18)
-    val height = math.abs(le32(b, 22))
-    val bpp = le16(b, 28)
-    val compression = le32(b, 30)
-    require(compression == 0, s"BMP $id: only BI_RGB (0) supported, got $compression")
-    require(bpp == 24 || bpp == 32, s"BMP $id: only 24/32-bit supported, got $bpp")
-    require(width > 0 && height > 0, s"BMP $id: bad dimensions ${width}x$height")
-    val channels = bpp / 8
-    val rowBytes = width * channels
-    val stride = (rowBytes + 3) & ~3 // rows pad to 4-byte boundaries
-    // a lying header must throw here (→ stub), not index past the array
-    require(pixelOff >= 54 && pixelOff.toLong + height.toLong * stride <= b.length,
-      s"BMP $id: declared pixel data exceeds payload")
-    var cs = FnvSeed
-    var row = 0
-    while (row < height) {
-      val start = pixelOff + row * stride
-      cs = fnv(b, start, start + rowBytes, cs)
-      row += 1
-    }
-    DecodedMedia(id, "image/bmp", b.length.toLong, width, height, channels, cs)
-  }
 
   /** Binary PPM (`P6`) header: ASCII whitespace-separated width, height,
     * maxval (with `#` comments), one whitespace, then width×height×3 raw
@@ -212,14 +186,6 @@ object Multimodal {
     (width, height, maxval, i)
   }
 
-  private def decodePpm(id: Long, b: Array[Byte]): DecodedMedia = {
-    val (width, height, _, off) = ppmHeader(b)
-    val n = width * height * 3
-    require(b.length >= off + n, s"PPM $id: truncated pixel data")
-    DecodedMedia(id, "image/ppm", b.length.toLong, width, height, 3,
-      fnv(b, off, off + n, FnvSeed))
-  }
-
   /** STUB decoder — stands in for a compressed-codec call the container
     * cannot make. Derives deterministic pseudo-dimensions from the bytes so
     * the full pipeline (schema, batching, typed output) is exercised and
@@ -239,44 +205,6 @@ object Multimodal {
     DecodedMedia(id, fmt, bytes.length.toLong, w, h, 3, cs)
   }
 
-  /** Minimal 24-bit BI_RGB BMP encoder — the test-fixture counterpart of
-    * [[decodeBmp]] (rows written bottom-up with 4-byte padding, exactly the
-    * layout the decoder walks). `rgb` is row-major top-down (r,g,b)*.
-    */
-  def encodeBmp24(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(rgb.length == width * height * 3, "rgb must be width*height*3 bytes")
-    val stride = (width * 3 + 3) & ~3
-    val pixelBytes = stride * height
-    val size = 54 + pixelBytes
-    val out = new Array[Byte](size)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    out(0) = 'B'; out(1) = 'M'
-    putLe32(2, size); putLe32(10, 54)
-    putLe32(14, 40) // BITMAPINFOHEADER
-    putLe32(18, width); putLe32(22, height)
-    out(26) = 1 // planes
-    out(28) = 24 // bpp
-    putLe32(30, 0) // BI_RGB
-    putLe32(34, pixelBytes)
-    var row = 0
-    while (row < height) {
-      // BMP stores rows bottom-up; pixels are (b,g,r)
-      val srcRow = height - 1 - row
-      var x = 0
-      while (x < width) {
-        val s = (srcRow * width + x) * 3
-        val d = 54 + row * stride + x * 3
-        out(d) = rgb(s + 2); out(d + 1) = rgb(s + 1); out(d + 2) = rgb(s)
-        x += 1
-      }
-      row += 1
-    }
-    out
-  }
-
   private val PngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
@@ -289,465 +217,29 @@ object Multimodal {
       be32(b, 8) == 13 &&
       b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R'
 
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
-  /** Pure-JVM PNG decode — every color type and layout: gray (depths
-    * 1/2/4/8/16, sub-byte scaled to 0-255, 16-bit reduced to the high
-    * byte), RGB/RGBA (8/16-bit), palette (PLTE, depths 1/2/4/8, expanded
-    * to RGB — RGBA when a tRNS alpha table is present), gray+alpha
-    * (expanded to RGBA), progressive-rendering Adam7 interlacing (the 7
-    * sub-images are unfiltered independently and gathered into one sample
-    * grid). IDAT chunks are concatenated, inflated with the JDK's
-    * `Inflater` (zlib is in `java.util.zip`, no codec library needed),
-    * and each scanline is un-filtered (None/Sub/Up/Average/Paeth) at the
-    * file's own byte layout. The checksum covers the reconstructed pixel
-    * bytes, so the same image re-encoded with different per-row filter
-    * choices, interlacing, or deflate levels hashes identically.
+  /** PNG chunk walk: every chunk must fit the payload and the list must
+    * reach IEND (ImageIO decodes an IEND-less PNG without complaint).
     */
-  private def decodePng(id: Long, b: Array[Byte]): DecodedMedia = {
-    val (width, height, channels, pix) = decodePngPixels(b)
-    DecodedMedia(id, "image/png", b.length.toLong, width, height, channels,
-      fnv(pix, 0, pix.length, FnvSeed))
-  }
-
-  /** Reconstructed PNG pixels (top-down interleaved); throws on unsupported
-    * shapes — callers catch and degrade.
-    */
-  private def decodePngPixels(b: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    val width = be32(b, 16)
-    val height = be32(b, 20)
-    val bitDepth = b(24) & 0xff
-    val colorType = b(25) & 0xff
-    val interlace = b(28) & 0xff
-    require(width > 0 && height > 0, s"PNG: bad dimensions ${width}x$height")
-    require(interlace == 0 || interlace == 1, s"PNG: bad interlace method $interlace")
-    // file-side samples per pixel + the legal depths per color type
-    // (PNG spec §11.2.2); depth 16 is decoded by taking the high byte
-    // (the spec-recommended 16→8 reduction), sub-byte gray scales to 0-255
-    val fileCh = colorType match {
-      case 0 => 1 // grayscale
-      case 2 => 3 // RGB
-      case 3 => 1 // palette indices
-      case 4 => 2 // gray + alpha
-      case 6 => 4 // RGBA
-      case t => throw new IllegalArgumentException(
-        s"PNG: color type $t not supported")
-    }
-    val depthLegal = colorType match {
-      case 0 => Set(1, 2, 4, 8, 16)
-      case 3 => Set(1, 2, 4, 8)
-      case _ => Set(8, 16)
-    }
-    require(depthLegal(bitDepth),
-      s"PNG: depth $bitDepth illegal for color type $colorType")
-    // output channels: palette expands to RGB (RGBA with tRNS), gray+alpha
-    // to RGBA; worst case for the bomb guard below
-    val outChMax = colorType match {
-      case 0 => 1; case 2 => 3; case _ => 4
-    }
-    // decompression-bomb guard (same rationale as Jpeg.MaxDecodedBytes): a
-    // crafted IHDR can declare gigabytes while the IDAT is tiny, and the
-    // allocation would OOM the task before the inflate-length check fires.
-    // Allocation = filtered rows (raw) + reconstructed pixels, counted with
-    // the REAL channel count so grayscale is not over-rejected; layouts
-    // that go through the int sample grid (interlaced / sub-byte / 16-bit /
-    // palette) add 4 bytes per file sample on top
-    val fastLayout = interlace == 0 && bitDepth == 8 &&
-      (colorType == 0 || colorType == 2 || colorType == 6)
-    val perPx = 2L * outChMax + (if (fastLayout) 0L else 4L * fileCh)
-    require(width.toLong * height * perPx <= Jpeg.MaxDecodedBytes,
-      s"PNG: declared ${width}x$height too large to decode inline")
-    // Walk the chunk list: concatenate IDAT payloads, pick up PLTE/tRNS.
-    val idat = new java.io.ByteArrayOutputStream()
-    var palette: Array[Byte] = null
-    var trns: Array[Byte] = null
+  private def pngReachesIend(b: Array[Byte]): Boolean = {
     var i = 8
-    var done = false
-    while (!done && i + 8 <= b.length) {
+    while (i + 12 <= b.length) {
       val len = be32(b, i)
-      require(len >= 0 && i + 12 + len <= b.length, s"PNG: corrupt chunk at $i")
-      val typ = new String(b, i + 4, 4, "US-ASCII")
-      typ match {
-        case "IDAT" => idat.write(b, i + 8, len)
-        case "PLTE" =>
-          require(len % 3 == 0 && len > 0 && len <= 3 * 256, "PNG: bad PLTE length")
-          palette = java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len)
-        case "tRNS" if colorType == 3 =>
-          trns = java.util.Arrays.copyOfRange(b, i + 8, i + 8 + len)
-        case "IEND" => done = true
-        case _ => ()
-      }
+      if (len < 0 || i + 12L + len > b.length) return false
+      if (b(i + 4) == 'I' && b(i + 5) == 'E' && b(i + 6) == 'N' && b(i + 7) == 'D') return true
       i += 12 + len
     }
-    // un-filter at the FILE's layout: filters operate on scanline bytes
-    // with a bpp step of whole bytes (spec §9.2), whatever the depth.
-    // Interlaced images are 7 independent Adam7 sub-images (each with its
-    // own scanlines and filtering) concatenated in the IDAT stream; a
-    // non-interlaced image is the single full pass.
-    val bpp = math.max(1, (fileCh * bitDepth) / 8)
-    val passes: Seq[(Int, Int, Int, Int)] = // (xStart, yStart, xStep, yStep)
-      if (interlace == 0) Seq((0, 0, 1, 1))
-      else Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-    def passDims(p: (Int, Int, Int, Int)): (Int, Int) = (
-      if (width > p._1) (width - p._1 + p._3 - 1) / p._3 else 0,
-      if (height > p._2) (height - p._2 + p._4 - 1) / p._4 else 0)
-    def rowBytesOf(w: Int): Int = (w * fileCh * bitDepth + 7) / 8
-    val rawLen = passes.map { p =>
-      val (w, h) = passDims(p)
-      if (w == 0 || h == 0) 0 else (rowBytesOf(w) + 1) * h
-    }.sum
-    val raw = new Array[Byte](rawLen) // +1 filter byte per scanline
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var off = 0
-    try {
-      while (off < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, off, raw.length - off)
-        // a zero-progress inflate must FAIL, never spin: truncated input
-        // (needsInput), a preset-dictionary stream (needsDictionary — legal
-        // zlib, never produced by PNG encoders), or any other stall would
-        // otherwise hang the task instead of degrading the record
-        require(n > 0, s"PNG: IDAT stream stalled (truncated or FDICT)")
-        off += n
-      }
-    } finally inf.end()
-    require(off == raw.length, s"PNG: pixel data does not match dimensions")
-
-    def unfilter(srcOff: Int, rowBytes: Int, rows: Int): Array[Byte] = {
-      val unf = new Array[Byte](rowBytes * rows)
-      var row = 0
-      while (row < rows) {
-        val f = raw(srcOff + row * (rowBytes + 1)) & 0xff
-        val rs = srcOff + row * (rowBytes + 1) + 1
-        val ps = row * rowBytes
-        val pp = ps - rowBytes // prior row start (valid when row > 0)
-        var x = 0
-        f match {
-          case 0 => System.arraycopy(raw, rs, unf, ps, rowBytes)
-          case 1 => // Sub: left neighbor
-            while (x < rowBytes) {
-              val left = if (x >= bpp) unf(ps + x - bpp) & 0xff else 0
-              unf(ps + x) = ((raw(rs + x) & 0xff) + left).toByte
-              x += 1
-            }
-          case 2 => // Up: prior-row neighbor
-            while (x < rowBytes) {
-              val up = if (row > 0) unf(pp + x) & 0xff else 0
-              unf(ps + x) = ((raw(rs + x) & 0xff) + up).toByte
-              x += 1
-            }
-          case 3 => // Average of left and up (floor)
-            while (x < rowBytes) {
-              val left = if (x >= bpp) unf(ps + x - bpp) & 0xff else 0
-              val up = if (row > 0) unf(pp + x) & 0xff else 0
-              unf(ps + x) = ((raw(rs + x) & 0xff) + ((left + up) >> 1)).toByte
-              x += 1
-            }
-          case 4 => // Paeth predictor
-            while (x < rowBytes) {
-              val left = if (x >= bpp) unf(ps + x - bpp) & 0xff else 0
-              val up = if (row > 0) unf(pp + x) & 0xff else 0
-              val ul = if (row > 0 && x >= bpp) unf(pp + x - bpp) & 0xff else 0
-              val p = left + up - ul
-              val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-              val pred = if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
-              unf(ps + x) = ((raw(rs + x) & 0xff) + pred).toByte
-              x += 1
-            }
-          case other =>
-            throw new IllegalArgumentException(s"PNG: unknown filter $other")
-        }
-        row += 1
-      }
-      unf
-    }
-
-    // fast path: the layout that IS the output (non-interlaced 8-bit
-    // gray/RGB/RGBA) skips the sample-grid indirection
-    if (fastLayout)
-      return (width, height, fileCh, unfilter(0, rowBytesOf(width), height))
-
-    // gather every pass into one full-resolution sample grid (sub-byte
-    // samples raw 0..2^d-1; 8-bit as-is; 16-bit reduced to the high byte —
-    // the spec-recommended 16→8 reduction)
-    val samples = new Array[Int](width * height * fileCh)
-    def sampleOf(unf: Array[Byte], rowStart: Int, x: Int, c: Int): Int = bitDepth match {
-      case 8 => unf(rowStart + x * fileCh + c) & 0xff
-      case 16 => unf(rowStart + (x * fileCh + c) * 2) & 0xff
-      case d => // packed MSB-first (spec §7.2); only fileCh == 1 has d < 8
-        val bit = (x * fileCh + c) * d
-        ((unf(rowStart + (bit >> 3)) & 0xff) >> (8 - d - (bit & 7))) & ((1 << d) - 1)
-    }
-    var rawOff = 0
-    passes.foreach { p =>
-      val (wP, hP) = passDims(p)
-      if (wP > 0 && hP > 0) {
-        val rb = rowBytesOf(wP)
-        val unf = unfilter(rawOff, rb, hP)
-        rawOff += (rb + 1) * hP
-        var py = 0
-        while (py < hP) {
-          val y = p._2 + py * p._4
-          var px = 0
-          while (px < wP) {
-            val x = p._1 + px * p._3
-            var c = 0
-            while (c < fileCh) {
-              samples((y * width + x) * fileCh + c) = sampleOf(unf, py * rb, px, c)
-              c += 1
-            }
-            px += 1
-          }
-          py += 1
-        }
-      }
-    }
-
-    // expand the sample grid to 8-bit interleaved output
-    val outCh = colorType match {
-      case 0 => 1
-      case 2 => 3
-      case 3 => if (trns != null) 4 else 3
-      case _ => 4 // gray+alpha and RGBA
-    }
-    if (colorType == 3) require(palette != null, "PNG: palette image without PLTE")
-    val maxSub = (1 << bitDepth) - 1
-    val out = new Array[Byte](width * height * outCh)
-    var pxi = 0
-    while (pxi < width * height) {
-      val s0 = pxi * fileCh
-      val d = pxi * outCh
-      colorType match {
-        case 0 =>
-          out(d) =
-            if (bitDepth >= 8) samples(s0).toByte
-            else (samples(s0) * 255 / maxSub).toByte
-        case 2 =>
-          out(d) = samples(s0).toByte; out(d + 1) = samples(s0 + 1).toByte
-          out(d + 2) = samples(s0 + 2).toByte
-        case 6 =>
-          out(d) = samples(s0).toByte; out(d + 1) = samples(s0 + 1).toByte
-          out(d + 2) = samples(s0 + 2).toByte; out(d + 3) = samples(s0 + 3).toByte
-        case 4 => // gray+alpha → RGBA (r = g = b = gray)
-          val g = samples(s0).toByte
-          out(d) = g; out(d + 1) = g; out(d + 2) = g
-          out(d + 3) = samples(s0 + 1).toByte
-        case 3 =>
-          val idx = samples(s0)
-          require(idx * 3 + 2 < palette.length, s"PNG: palette index $idx out of range")
-          out(d) = palette(idx * 3); out(d + 1) = palette(idx * 3 + 1)
-          out(d + 2) = palette(idx * 3 + 2)
-          if (outCh == 4)
-            out(d + 3) = if (idx < trns.length) trns(idx) else 0xff.toByte
-      }
-      pxi += 1
-    }
-    (width, height, outCh, out)
+    false
   }
 
-  /** PNG encoder — fixture counterpart of [[decodePng]]. `filter` selects
-    * the per-row filter (0–4) so tests can drive every un-filter branch of
-    * the decoder; the filtered bytes are computed as the exact spec inverse
-    * of the decoder's reconstruction. `channels` 1/3/4 map to color types
-    * 0/2/6.
+  /** GIF sniff: version tag and positive screen geometry. (Text bytes that
+    * happen to start with "GIF8" would also need "7a"/"9a" and a sane
+    * little-endian screen descriptor to get past this; the reader degrades
+    * anything that still lies.)
     */
-  def encodePng(width: Int, height: Int, rgb: Array[Byte],
-      channels: Int = 3, filter: Int = 0): Array[Byte] = {
-    require(rgb.length == width * height * channels,
-      "rgb must be width*height*channels bytes")
-    require(filter >= 0 && filter <= 4, "filter must be 0..4")
-    val colorType = channels match {
-      case 1 => 0; case 3 => 2; case 4 => 6
-      case c => throw new IllegalArgumentException(s"channels $c unsupported")
-    }
-    val stride = width * channels
-    val raw = new Array[Byte]((stride + 1) * height)
-    var row = 0
-    while (row < height) {
-      raw(row * (stride + 1)) = filter.toByte
-      val ps = row * stride
-      val pp = ps - stride
-      var x = 0
-      while (x < stride) {
-        val cur = rgb(ps + x) & 0xff
-        val left = if (x >= channels) rgb(ps + x - channels) & 0xff else 0
-        val up = if (row > 0) rgb(pp + x) & 0xff else 0
-        val ul = if (row > 0 && x >= channels) rgb(pp + x - channels) & 0xff else 0
-        val filtered = filter match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - ((left + up) >> 1)
-          case 4 =>
-            val p = left + up - ul
-            val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-            val pred = if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
-            cur - pred
-        }
-        raw(row * (stride + 1) + 1 + x) = filtered.toByte
-        x += 1
-      }
-      row += 1
-    }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw)
-    deflater.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) comp.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig, 0, PngSig.length)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      def be(v: Int): Array[Byte] = Array(
-        ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      val t = typ.getBytes("US-ASCII")
-      out.write(be(data.length), 0, 4)
-      out.write(t, 0, 4)
-      out.write(data, 0, data.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(t); crc.update(data)
-      out.write(be(crc.getValue.toInt), 0, 4)
-    }
-    val ihdr = new Array[Byte](13)
-    def putBe32(off: Int, v: Int): Unit = {
-      ihdr(off) = ((v >> 24) & 0xff).toByte; ihdr(off + 1) = ((v >> 16) & 0xff).toByte
-      ihdr(off + 2) = ((v >> 8) & 0xff).toByte; ihdr(off + 3) = (v & 0xff).toByte
-    }
-    putBe32(0, width); putBe32(4, height)
-    ihdr(8) = 8 // bit depth
-    ihdr(9) = colorType.toByte
-    // ihdr(10..12): compression 0, filter method 0, interlace 0
-    chunk("IHDR", ihdr)
-    chunk("IDAT", comp.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
-  /** Fixture-grade PNG writer for the layouts [[encodePng]] cannot emit:
-    * any legal (bitDepth, colorType) with caller-packed scanlines (no
-    * filtering — filter byte 0 per row), optional PLTE/tRNS, optional
-    * Adam7 interlacing. `rows` is the UNFILTERED full-resolution scanline
-    * data, exactly `ceil(width·samples·depth/8) × height` bytes; with
-    * `interlace` the encoder scatters it into the 7 passes itself — the
-    * independent inverse of the decoder's pass gather. Tests use this to
-    * drive the palette / sub-byte / 16-bit / gray+alpha / interlaced
-    * decode paths with independent fixtures.
-    */
-  def encodePngRaw(width: Int, height: Int, bitDepth: Int, colorType: Int,
-      rows: Array[Byte], palette: Array[Byte] = Array.emptyByteArray,
-      trns: Array[Byte] = Array.emptyByteArray,
-      interlace: Boolean = false): Array[Byte] = {
-    val fileCh = colorType match {
-      case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
-      case t => throw new IllegalArgumentException(s"bad color type $t")
-    }
-    val rowBytes = (width * fileCh * bitDepth + 7) / 8
-    require(rows.length == rowBytes * height,
-      s"rows must be $rowBytes x $height bytes, got ${rows.length}")
-    // full-res sample accessor + per-pass bit packer (MSB-first)
-    def sampleAt(x: Int, y: Int, c: Int): Int = {
-      val rs = y * rowBytes
-      bitDepth match {
-        case 8 => rows(rs + x * fileCh + c) & 0xff
-        case 16 => // full 16 bits, big-endian pair
-          ((rows(rs + (x * fileCh + c) * 2) & 0xff) << 8) |
-            (rows(rs + (x * fileCh + c) * 2 + 1) & 0xff)
-        case d =>
-          val bit = (x * fileCh + c) * d
-          ((rows(rs + (bit >> 3)) & 0xff) >> (8 - d - (bit & 7))) & ((1 << d) - 1)
-      }
-    }
-    val raw: Array[Byte] =
-      if (!interlace) {
-        val a = new Array[Byte]((rowBytes + 1) * height)
-        var r = 0
-        while (r < height) {
-          // a(r * (rowBytes + 1)) stays 0: filter None
-          System.arraycopy(rows, r * rowBytes, a, r * (rowBytes + 1) + 1, rowBytes)
-          r += 1
-        }
-        a
-      } else {
-        val passes = Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-        val buf = new java.io.ByteArrayOutputStream()
-        passes.foreach { case (x0, y0, dx, dy) =>
-          val wP = if (width > x0) (width - x0 + dx - 1) / dx else 0
-          val hP = if (height > y0) (height - y0 + dy - 1) / dy else 0
-          if (wP > 0 && hP > 0) {
-            val rbP = (wP * fileCh * bitDepth + 7) / 8
-            var py = 0
-            while (py < hP) {
-              buf.write(0) // filter None
-              val line = new Array[Byte](rbP)
-              var px = 0
-              while (px < wP) {
-                var c = 0
-                while (c < fileCh) {
-                  val v = sampleAt(x0 + px * dx, y0 + py * dy, c)
-                  bitDepth match {
-                    case 8 => line(px * fileCh + c) = v.toByte
-                    case 16 =>
-                      line((px * fileCh + c) * 2) = ((v >> 8) & 0xff).toByte
-                      line((px * fileCh + c) * 2 + 1) = (v & 0xff).toByte
-                    case d =>
-                      val bit = (px * fileCh + c) * d
-                      val sh = 8 - d - (bit & 7)
-                      line(bit >> 3) = (line(bit >> 3) | (v << sh)).toByte
-                  }
-                  c += 1
-                }
-                px += 1
-              }
-              buf.write(line, 0, rbP)
-              py += 1
-            }
-          }
-        }
-        buf.toByteArray
-      }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw)
-    deflater.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) comp.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig, 0, PngSig.length)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      def be(v: Int): Array[Byte] = Array(
-        ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      val t = typ.getBytes("US-ASCII")
-      out.write(be(data.length), 0, 4)
-      out.write(t, 0, 4)
-      out.write(data, 0, data.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(t); crc.update(data)
-      out.write(be(crc.getValue.toInt), 0, 4)
-    }
-    val ihdr = new Array[Byte](13)
-    def putBe32(off: Int, v: Int): Unit = {
-      ihdr(off) = ((v >> 24) & 0xff).toByte; ihdr(off + 1) = ((v >> 16) & 0xff).toByte
-      ihdr(off + 2) = ((v >> 8) & 0xff).toByte; ihdr(off + 3) = (v & 0xff).toByte
-    }
-    putBe32(0, width); putBe32(4, height)
-    ihdr(8) = bitDepth.toByte
-    ihdr(9) = colorType.toByte
-    ihdr(12) = if (interlace) 1 else 0 // compression/filter stay 0
-    chunk("IHDR", ihdr)
-    if (palette.nonEmpty) chunk("PLTE", palette)
-    if (trns.nonEmpty) chunk("tRNS", trns)
-    chunk("IDAT", comp.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
+  private def isGif(b: Array[Byte]): Boolean =
+    b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
+      b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a' &&
+      le16(b, 6) > 0 && le16(b, 8) > 0
 
   /** WAV sniff: RIFF container whose declared size matches the actual byte
     * count (a text blob starting "RIFF" would have to embed its own length
@@ -855,7 +347,7 @@ object Multimodal {
           DecodedMedia(id, "audio/wav", b.length.toLong, frames, 1, l.channels, cs)
         case _ => decodeWavHeader(id, b)
       }
-    } catch { case scala.util.control.NonFatal(_) => decodeWavHeader(id, b) }
+    } catch { case NonFatal(_) => decodeWavHeader(id, b) }
 
   /** WAV header fallback for compressed codecs: TRUE geometry from the fmt
     * chunk (frames estimated via blockAlign — exact for any constant-block
@@ -919,7 +411,7 @@ object Multimodal {
       val pcm = Flac.samplesToLeBytes(d.samples, d.bitsPerSample)
       DecodedMedia(id, "audio/flac", b.length.toLong, d.samples.length / d.channels,
         1, d.channels, fnv(pcm, 0, pcm.length, FnvSeed))
-    } catch { case scala.util.control.NonFatal(_) => decodeFlacHeader(id, b) }
+    } catch { case NonFatal(_) => decodeFlacHeader(id, b) }
 
   /** FLAC header fallback: TRUE geometry from STREAMINFO, checksum over
     * the audio-frame region (metadata blocks — tags, padding — excluded,
@@ -928,7 +420,7 @@ object Multimodal {
     */
   private def decodeFlacHeader(id: Long, b: Array[Byte]): DecodedMedia = {
     val si = Flac.streamInfo(b)
-    val off = try Flac.audioStart(b) catch { case scala.util.control.NonFatal(_) => 42 }
+    val off = try Flac.audioStart(b) catch { case NonFatal(_) => 42 }
     DecodedMedia(id, "audio/flac", b.length.toLong,
       math.min(si.totalSamples, Int.MaxValue.toLong).toInt, 1, si.channels,
       fnv(b, math.min(off, b.length), b.length, FnvSeed))
@@ -988,7 +480,7 @@ object Multimodal {
           case _ => None
         }
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   // ---- MPEG audio (MP3): frame-header chain parse. A psychoacoustic
   // decode (hybrid filterbank + Huffman) is a poor pure-JVM trade, but the
@@ -1154,38 +646,12 @@ object Multimodal {
     (sof._1, sof._2, sof._3, -1)
   }
 
-  /** JPEG: REAL pure-JVM pixel decode for the Huffman envelope —
-    * baseline/extended-sequential AND progressive SOF2 ([[Jpeg.decode]] —
-    * DQT/DHT parse, entropy decode incl. spectral-selection/successive-
-    * approximation scan accumulation, dequant, IDCT, chroma upsample,
-    * YCbCr→RGB; checksum over reconstructed pixels like the other image
-    * codecs). Payloads outside that envelope (arithmetic coding, 12-bit,
-    * CMYK) degrade to the header parse below — true geometry, scan-bytes
-    * checksum — never to a failure.
-    */
-  /** GIF first frame through [[Gif.decode]]: checksum over the
-    * palette-expanded samples, so interlaced/sequential and different LZW
-    * run boundaries hash identically (the PNG filter-invariance analog).
-    */
-  private def decodeGif(id: Long, b: Array[Byte]): DecodedMedia = {
-    val (w, h, ch, pix) = Gif.decode(b)
-    DecodedMedia(id, "image/gif", b.length.toLong, w, h, ch,
-      fnv(pix, 0, pix.length, FnvSeed))
-  }
-
-  private def decodeJpeg(id: Long, b: Array[Byte]): DecodedMedia =
-    try {
-      val (w, h, ch, pix) = Jpeg.decode(b)
-      DecodedMedia(id, "image/jpeg", b.length.toLong, w, h, ch,
-        fnv(pix, 0, pix.length, FnvSeed))
-    } catch { case scala.util.control.NonFatal(_) => decodeJpegHeader(id, b) }
-
-  /** JPEG header parse — the fallback when the payload uses a coding mode
-    * [[Jpeg.decode]] does not cover: TRUE width/height/channels from SOF,
-    * checksum over the entropy-coded scan bytes (container metadata —
-    * APPn/EXIF/comment segments — excluded, so re-tagging the same image
-    * hashes identically; unlike the pixel decodes the hash is over
-    * compressed bits, not pixels).
+  /** JPEG header parse — the fallback when [[imagePixels]] refuses the
+    * payload (arithmetic coding, 12-bit, CMYK, a scan cut short): TRUE
+    * width/height/channels from SOF, checksum over the entropy-coded scan
+    * bytes (container metadata — APPn/EXIF/comment segments — excluded, so
+    * re-tagging the same image hashes identically; unlike the pixel decodes
+    * the hash is over compressed bits, not pixels).
     */
   private def decodeJpegHeader(id: Long, b: Array[Byte]): DecodedMedia = {
     val (h, w, nc, scanOff) = jpegSof(b)
@@ -1206,7 +672,7 @@ object Multimodal {
   def encodeJpegShell(width: Int, height: Int, channels: Int,
       scan: Array[Byte]): Array[Byte] = {
     require(scan.forall(s => (s & 0xff) != 0xff), "fixture scan must be FF-free")
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteArrayOutputStream()
     def marker(m: Int, payload: Array[Byte]): Unit = {
       out.write(0xff); out.write(m)
       val len = payload.length + 2
@@ -1234,7 +700,9 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Binary PPM (P6) encoder — fixture counterpart of [[decodePpm]]. */
+  /** Binary PPM (P6) encoder — fixture counterpart of the PPM slice in
+    * [[imagePixels]].
+    */
   def encodePpm(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
     require(rgb.length == width * height * 3, "rgb must be width*height*3 bytes")
     val header = s"P6\n$width $height\n255\n".getBytes("US-ASCII")
@@ -1247,59 +715,164 @@ object Multimodal {
   def sampleEvery(decoded: Dataset[DecodedMedia], stride: Int): Dataset[DecodedMedia] =
     decoded.filter(d => d.id % stride == 0)
 
-  /** Canonical pixel decode for the image formats parseable in pure JVM:
-    * row-major TOP-DOWN, interleaved channels, RGB(A) order — BMP's
-    * bottom-up BGR(A) rows are reordered, PPM/PNG already match. None for
-    * container-only parses (WAV, JPEG header) and undecodable payloads.
+  /** Decoded-bytes ceiling for one record's inline decode (image rasters,
+    * FLAC's sample buffer). A crafted header can declare gigabytes in a few
+    * hundred bytes, and the allocation would OOM the task — an
+    * `OutOfMemoryError` is not a `NonFatal` the per-record degrade could
+    * catch — so every decoder refuses above this BEFORE it allocates.
+    */
+  private[multimodal] val MaxDecodedBytes: Long = 64L << 20
+
+  /** The image format a payload sniffs as by structure: the ImageIO format
+    * name, or "ppm". None for everything else.
+    */
+  private def imageFormat(b: Array[Byte]): Option[String] =
+    if (isBmp(b)) Some("bmp") else if (isPpm(b)) Some("ppm")
+    else if (isPng(b)) Some("png") else if (isJpeg(b)) Some("jpeg")
+    else if (isGif(b)) Some("gif") else None
+
+  /** Image record: checksum over the decoded pixels, so the same image in
+    * another container, row order, filter choice, interlacing or palette
+    * hashes identically. A JPEG the pixel path refuses degrades to
+    * [[decodeJpegHeader]]; any other refusal to the caller's stub.
+    */
+  private def decodeImage(id: Long, fmt: String, b: Array[Byte]): DecodedMedia =
+    try {
+      val (w, h, ch, px) = imagePixels(fmt, b)
+      DecodedMedia(id, s"image/$fmt", b.length.toLong, w, h, ch, fnv(px, 0, px.length, FnvSeed))
+    } catch { case NonFatal(_) if fmt == "jpeg" => decodeJpegHeader(id, b) }
+
+  /** The one pixel decode behind [[decode]], [[features]] and [[resize]]:
+    * (width, height, channels, samples), row-major TOP-DOWN, interleaved,
+    * 8 bits a sample. PPM is sliced in place (the JDK has no PPM reader);
+    * BMP, PNG, JPEG and GIF go through [[readImage]] after the header checks
+    * on which ImageIO is more lenient than this contract. Throws on anything
+    * undecodable — callers degrade.
+    */
+  private def imagePixels(fmt: String, b: Array[Byte]): (Int, Int, Int, Array[Byte]) =
+    fmt match {
+      case "ppm" =>
+        val (w, h, _, off) = ppmHeader(b)
+        (w, h, 3, java.util.Arrays.copyOfRange(b, off, off + w * h * 3))
+      case "bmp" =>
+        // the BMP plugin reads 24-bit rows under a header claiming RLE8;
+        // only uncompressed 24/32-bit rows that fit the payload pass
+        val (w, h, bpp) = (le32(b, 18), math.abs(le32(b, 22)), le16(b, 28))
+        val stride = (w.toLong * bpp / 8 + 3) & ~3L
+        require(le32(b, 30) == 0 && (bpp == 24 || bpp == 32) && w > 0 && h > 0 &&
+          le32(b, 10) >= 54 && le32(b, 10) + h * stride <= b.length,
+          "BMP: only in-bounds BI_RGB 24/32-bit rows are decoded")
+        readImage(fmt, b, grayPalette = false)
+      case "png" =>
+        require(pngReachesIend(b), "PNG: chunk list does not reach IEND")
+        // color type 0: a sub-byte gray image arrives as a gray-ramp palette
+        readImage(fmt, b, grayPalette = b(25) == 0)
+      case _ => readImage(fmt, b, grayPalette = false)
+    }
+
+  /** One image through the JDK's ImageIO reader for `fmt`, on an in-memory
+    * stream (the `ImageIO.read` shortcuts may cache through a temp file per
+    * record). The declared size is checked against [[MaxDecodedBytes]]
+    * before `read` allocates, and any read warning rejects the decode: the
+    * JPEG reader reports a scan cut short only as a warning and fills the
+    * missing rows. The raster becomes the pixel contract: a palette expands
+    * to RGB, RGBA when it carries alpha (PNG tRNS, GIF transparency), except
+    * that `grayPalette` keeps one channel, already scaled to 0–255 by the
+    * reader; gray+alpha becomes RGBA; 16-bit samples keep their high byte.
+    */
+  private def readImage(fmt: String, b: Array[Byte],
+      grayPalette: Boolean): (Int, Int, Int, Array[Byte]) = {
+    val reader = ImageIO.getImageReadersByFormatName(fmt).next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    try {
+      reader.setInput(in, true, true)
+      var warning: Option[String] = None
+      reader.addIIOReadWarningListener((_, w) => warning = Some(w))
+      val (dw, dh) = (reader.getWidth(0), reader.getHeight(0))
+      // what `read` allocates (the reader's raster) plus the interleaved
+      // copy (at most 4 bytes a pixel); samples are copied one row at a time
+      val sm = reader.getImageTypes(0).next().getSampleModel
+      val rasterBytes = sm.getNumDataElements * DataBuffer.getDataTypeSize(sm.getDataType) / 8
+      require(dw.toLong * dh * (rasterBytes + 4) <= MaxDecodedBytes,
+        s"$fmt: declared ${dw}x$dh too large to decode inline")
+      val img = reader.read(0)
+      warning.foreach(msg => throw new IllegalArgumentException(s"$fmt: $msg"))
+      val raster = img.getRaster
+      val (w, h) = (raster.getWidth, raster.getHeight)
+      val row = new Array[Int](w)
+      img.getColorModel match {
+        case cm: IndexColorModel =>
+          val ch = if (grayPalette) 1 else if (cm.hasAlpha) 4 else 3
+          val out = new Array[Byte](w * h * ch)
+          for (y <- 0 until h) {
+            raster.getSamples(0, y, w, 1, 0, row)
+            var x = 0
+            while (x < w) {
+              val i = row(x)
+              val o = (y * w + x) * ch
+              out(o) = cm.getRed(i).toByte
+              if (ch > 1) { out(o + 1) = cm.getGreen(i).toByte; out(o + 2) = cm.getBlue(i).toByte }
+              if (ch == 4) out(o + 3) = cm.getAlpha(i).toByte
+              x += 1
+            }
+          }
+          (w, h, ch, out)
+        case cm =>
+          val bands = raster.getNumBands
+          val grayAlpha = cm.getNumColorComponents == 1 && cm.hasAlpha
+          val ch = if (grayAlpha) 4 else bands
+          val out = new Array[Byte](w * h * ch)
+          for (band <- 0 until bands) {
+            val shift = raster.getSampleModel.getSampleSize(band) - 8
+            // gray+alpha: the gray sample fills r, g and b
+            val dst = if (!grayAlpha) Seq(band) else if (band == 0) Seq(0, 1, 2) else Seq(3)
+            for (y <- 0 until h) {
+              raster.getSamples(0, y, w, 1, band, row)
+              dst.foreach { c =>
+                var x = 0
+                while (x < w) { out((y * w + x) * ch + c) = (row(x) >>> shift).toByte; x += 1 }
+              }
+            }
+          }
+          (w, h, ch, out)
+      }
+    } finally { reader.dispose(); in.close() }
+  }
+
+  /** Pixels for features/resize: [[imagePixels]] of an image payload, None
+    * for anything else or any payload the pixel path refuses.
     */
   private def pixelsOf(b: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] =
-    try {
-      if (isBmp(b)) {
-        val pixelOff = le32(b, 10)
-        val rawH = le32(b, 22)
-        val width = le32(b, 18)
-        val height = math.abs(rawH)
-        val bpp = le16(b, 28)
-        if (le32(b, 30) != 0 || (bpp != 24 && bpp != 32) || width <= 0 || height <= 0)
-          return None
-        val ch = bpp / 8
-        val stride = (width * ch + 3) & ~3
-        if (pixelOff < 54 || pixelOff.toLong + height.toLong * stride > b.length) return None
-        val out = new Array[Byte](width * height * ch)
-        var y = 0
-        while (y < height) {
-          // positive height = bottom-up storage; negative = top-down
-          val srcRow = if (rawH > 0) height - 1 - y else y
-          var x = 0
-          while (x < width) {
-            val s = pixelOff + srcRow * stride + x * ch
-            val d = (y * width + x) * ch
-            out(d) = b(s + 2); out(d + 1) = b(s + 1); out(d + 2) = b(s) // BGR→RGB
-            if (ch == 4) out(d + 3) = b(s + 3)
-            x += 1
-          }
-          y += 1
-        }
-        Some((width, height, ch, out))
-      } else if (isPpm(b)) {
-        val (w, h, _, off) = ppmHeader(b)
-        if (w <= 0 || h <= 0 || b.length < off + w * h * 3) None
-        else Some((w, h, 3, java.util.Arrays.copyOfRange(b, off, off + w * h * 3)))
-      } else if (isPng(b)) {
-        val d = decodePngPixels(b)
-        Some(d)
-      } else if (isJpeg(b)) {
-        Some(Jpeg.decode(b)) // Huffman envelope (incl. progressive); outside it → catch → None
-      } else if (Gif.isGif(b)) {
-        Some(Gif.decode(b))
-      } else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    imageFormat(b).flatMap { f =>
+      try Some(imagePixels(f, b)) catch { case NonFatal(_) => None }
+    }
 
-  /** True geometry from a container/header parse where a full pixel decode
-    * is impossible in pure JVM (JPEG SOF frame header; WAV fmt/data chunks).
-    * This keeps [[features]] and [[resize]] in agreement with [[decode]] on
-    * the same payload's dimensions even for formats whose PIXELS stay
-    * stubbed — two APIs must never report different geometry for one record.
+  /** PNG of top-down interleaved 8-bit samples (1 = gray, 3 = RGB,
+    * 4 = RGBA) through the JDK's PNG writer, on an in-memory stream.
+    */
+  private def writePng(w: Int, h: Int, ch: Int, px: Array[Byte]): Array[Byte] = {
+    val cm = new ComponentColorModel(
+      ColorSpace.getInstance(if (ch == 1) ColorSpace.CS_GRAY else ColorSpace.CS_sRGB),
+      ch == 4, false, if (ch == 4) Transparency.TRANSLUCENT else Transparency.OPAQUE,
+      DataBuffer.TYPE_BYTE)
+    val raster = Raster.createInterleavedRaster(new DataBufferByte(px, px.length),
+      w, h, w * ch, ch, Array.range(0, ch), null)
+    val bytes = new ByteArrayOutputStream()
+    val writer = ImageIO.getImageWritersByFormatName("png").next()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(new BufferedImage(cm, raster, false, null))
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
+  }
+
+  /** True geometry from a container/header parse where no pixel or sample
+    * decode succeeds (JPEG SOF frame header; WAV fmt/data chunks; FLAC
+    * STREAMINFO; MP3 frame chain). This keeps [[features]] and [[resize]] in
+    * agreement with [[decode]] on the same payload's dimensions even where
+    * the PIXELS stay stubbed — two APIs must never report different geometry
+    * for one record.
     */
   private def headerGeometry(b: Array[Byte]): Option[(Int, Int, Int)] =
     try {
@@ -1316,7 +889,7 @@ object Multimodal {
         val si = Flac.streamInfo(b)
         Some((math.min(si.totalSamples, Int.MaxValue.toLong).toInt, 1, si.channels))
       } else mp3GeometryOpt(b).map { case (_, samples, ch) => (samples, 1, ch) }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   /** WAV frame/channel geometry from the fmt and data chunks — the header
     * walk of [[decodeWav]] without its checksum loop over the payload. Works
@@ -1335,22 +908,6 @@ object Multimodal {
     (frames, 1, l.channels)
   }
 
-  /** Per-record media features over REAL samples — the feature-extraction
-    * stage of a multimodal pipeline, feeding the embedding/similarity
-    * operators. Images: per-channel mean/std (0-255 units) and an 8-bin
-    * luminance histogram over decoded pixels. Audio (PCM + G.711 WAV):
-    * per-channel sample mean/std in normalized [-1,1] units and an 8-bin
-    * histogram of |amplitude| (bin k = [k/8, (k+1)/8)) — the same record
-    * shape, so downstream operators are modality-agnostic.
-    * Undecodable payloads yield `decoded=false` with deterministic
-    * stub-derived features (pipeline shape holds; no record is dropped);
-    * their width/height/channels still come from the real header parse
-    * where one exists (JPEG SOF, WAV fmt incl. compressed codecs, MP3
-    * frame header) so the record's geometry matches what [[decode]]
-    * reports for the same payload.
-    * Same 100-TB shape as [[decode]]: partition-parallel mapPartitions,
-    * media bytes never shuffle, only the small feature vectors do.
-    */
   /** Frame sampling over the video column: every `everyNth` sample of the
     * MP4 video track, located by the container's stbl math (exact byte
     * ranges, [[Mp4.Track.sampleRanges]]) and stamped with its presentation
@@ -1380,11 +937,27 @@ object Multimodal {
                   java.util.Arrays.copyOfRange(bytes, off.toInt, (off + len).toInt))
               }
             }
-          } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+          } catch { case NonFatal(_) => Iterator.empty }
         }
       }
   }
 
+  /** Per-record media features over REAL samples — the feature-extraction
+    * stage of a multimodal pipeline, feeding the embedding/similarity
+    * operators. Images: per-channel mean/std (0-255 units) and an 8-bin
+    * luminance histogram over decoded pixels. Audio (PCM + G.711 WAV):
+    * per-channel sample mean/std in normalized [-1,1] units and an 8-bin
+    * histogram of |amplitude| (bin k = [k/8, (k+1)/8)) — the same record
+    * shape, so downstream operators are modality-agnostic.
+    * Undecodable payloads yield `decoded=false` with deterministic
+    * stub-derived features (pipeline shape holds; no record is dropped);
+    * their width/height/channels still come from the real header parse
+    * where one exists (JPEG SOF, WAV fmt incl. compressed codecs, MP3
+    * frame header) so the record's geometry matches what [[decode]]
+    * reports for the same payload.
+    * Same 100-TB shape as [[decode]]: partition-parallel mapPartitions,
+    * media bytes never shuffle, only the small feature vectors do.
+    */
   def features(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.select(col("id"), col("payload"), col("meta.format").as("format"))
@@ -1457,8 +1030,8 @@ object Multimodal {
         MediaFeatures(id, fmt, decoded = true, w, h, ch, mean, std, hist)
       case None =>
         // deterministic stub features from the byte checksum — the
-        // downstream pipeline shape is exercised even where no pure-JVM
-        // pixel decode exists (JPEG pixels, audio); geometry is the
+        // downstream pipeline shape is exercised even where no pixel or
+        // sample decode succeeds (a refused JPEG, compressed audio); geometry is the
         // REAL header parse when available so decode()/features()
         // agree on the same payload's dimensions
         val s = stubRecord(id, bytes, fmt)
@@ -1524,7 +1097,7 @@ object Multimodal {
                 }
                 ty += 1
               }
-              ResizedMedia(id, decoded = true, tw, th, ch, encodePng(tw, th, out, ch))
+              ResizedMedia(id, decoded = true, tw, th, ch, writePng(tw, th, ch, out))
             case None =>
               // passthrough — but still report the payload's TRUE geometry
               // when a header parse exists (JPEG SOF, WAV), matching decode()

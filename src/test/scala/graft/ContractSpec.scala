@@ -76,4 +76,23 @@ class ContractSpec extends AnyFunSuite {
       s"undocumented collect() in: ${(offenders -- allowed).toSeq.sorted.mkString(", ")} — " +
         "either make the operator distributed or document the bound and extend the allowlist")
   }
+
+  test("engine code decodes and encodes images on in-memory ImageIO streams only") {
+    // ImageIO.read/write and createImage{Input,Output}Stream use ImageIO's
+    // default cache, a temp file in java.io.tmpdir for every record; the
+    // media path builds MemoryCacheImage{Input,Output}Streams itself
+    import scala.jdk.CollectionConverters._
+    val banned = Seq("ImageIO.read(", "ImageIO.write(",
+      "ImageIO.createImageInputStream(", "ImageIO.createImageOutputStream(")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val offenders = scala.util.Using.resource(java.nio.file.Files.walk(root)) { stream =>
+      stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val text = java.nio.file.Files.readString(p)
+          banned.filter(text.contains).map(c => s"${p.getFileName}: $c")
+        }.toList
+    }
+    assert(offenders.isEmpty, s"file-cached ImageIO calls: ${offenders.mkString(", ")}")
+  }
 }

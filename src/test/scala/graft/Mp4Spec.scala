@@ -96,7 +96,7 @@ class Mp4Spec extends SparkSpec {
     // the video -> frame -> pixels pipeline with no codec stubs anywhere
     val pngs = (0 until 4).map { i =>
       val rgb = Array.tabulate[Byte](8 * 6 * 3)(j => ((i * 50 + j) & 0xff).toByte)
-      Multimodal.encodePng(8, 6, rgb)
+      ImageFixtures.png(8, 6, rgb)
     }
     val video = Mp4.build(8, 6, 1000, 40, pngs)
     import spark.implicits._

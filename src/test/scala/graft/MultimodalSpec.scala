@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal binary-column plumbing (SURVEY.md §2.8): schema shape, the
-  * deterministic decode stub, frame sampling.
+  * deterministic decode stub, the image/audio decodes, frame sampling.
   */
 class MultimodalSpec extends SparkSpec {
 
@@ -37,7 +37,7 @@ class MultimodalSpec extends SparkSpec {
     // 5x3 gradient image, encoded both ways — identical pixels
     val (w, h) = (5, 3)
     val rgb = Array.tabulate(w * h * 3)(i => (i * 7 % 251).toByte)
-    val bmp = Multimodal.encodeBmp24(w, h, rgb)
+    val bmp = ImageFixtures.bmp(w, h, rgb)
     val ppm = Multimodal.encodePpm(w, h, rgb)
     val media = Seq(
       (1L, bmp, ("image/bmp", bmp.length.toLong)),
@@ -100,9 +100,9 @@ class MultimodalSpec extends SparkSpec {
     val rgba = Array.tabulate(w * h * 4)(i => (i * 13 % 251).toByte)
     val gray = Array.tabulate(w * h)(i => (i * 17 % 249).toByte)
     val rows = (0 to 4).map(f =>
-      (f.toLong, Multimodal.encodePng(w, h, rgb, 3, f), "image/png")) ++ Seq(
-      (10L, Multimodal.encodePng(w, h, rgba, 4, 4), "image/png"),
-      (11L, Multimodal.encodePng(w, h, gray, 1, 2), "image/png"))
+      (f.toLong, ImageFixtures.pngFiltered(w, h, rgb, 3, f), "image/png")) ++ Seq(
+      (10L, ImageFixtures.pngFiltered(w, h, rgba, 4, 4), "image/png"),
+      (11L, ImageFixtures.pngFiltered(w, h, gray, 1, 2), "image/png"))
     val out = Multimodal.decode(spark, asMedia(rows)).collect().sortBy(_.id)
     assert(out.length === 7)
     assert(out.forall(_.format === "image/png"), "all must route to the real PNG parser")
@@ -284,7 +284,7 @@ class MultimodalSpec extends SparkSpec {
     // Each payload passes (or nearly passes) a sniff, then fails its parser.
     val (w, h) = (5, 3)
     val rgb = Array.tabulate(w * h * 3)(i => (i * 7 % 251).toByte)
-    val bmp = Multimodal.encodeBmp24(w, h, rgb)
+    val bmp = ImageFixtures.bmp(w, h, rgb)
     // lying BMP header: declare RLE8 compression (field at offset 30)
     val rle = bmp.clone(); rle(30) = 1
     // lying BMP header: pixel offset way past the end of the buffer
@@ -296,7 +296,7 @@ class MultimodalSpec extends SparkSpec {
     // lying BMP header: height far beyond what the payload holds
     val tallh = bmp.clone(); tallh(22) = 0xff.toByte; tallh(23) = 0x7f.toByte
     // truncated PNG: valid signature+IHDR, IDAT cut short
-    val png = Multimodal.encodePng(w, h, rgb)
+    val png = ImageFixtures.png(w, h, rgb)
     val cut = png.take(png.length - 20)
     // interlaced PNG: flip the IHDR interlace byte (offset 8+4+4+12 = 28)
     val adam7 = png.clone(); adam7(28) = 1
@@ -331,7 +331,7 @@ class MultimodalSpec extends SparkSpec {
       (filter.toLong * 10 + channels, w, h, channels, px)
     }
     val payloads = cases.map { case (id, w, h, c, px) =>
-      (id, Multimodal.encodePng(w, h, px, c, (id / 10).toInt), "image/png")
+      (id, ImageFixtures.pngFiltered(w, h, px, c, (id / 10).toInt), "image/png")
     }
     val out = Multimodal.decode(spark, asMedia(payloads)).collect()
       .map(d => d.id -> d).toMap
@@ -344,93 +344,91 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("PNG extended layouts: palette/tRNS, sub-byte gray, 16-bit, gray+alpha — vs ImageIO") {
-    import java.io.ByteArrayInputStream
-    def imageIo(b: Array[Byte]) = javax.imageio.ImageIO.read(new ByteArrayInputStream(b))
+    import java.awt.color.ColorSpace
+    import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer}
     def decode(b: Array[Byte]) = {
       val d = Multimodal.decode(spark, asMedia(Seq((1L, b, "image/png")))).collect().head
       assert(d.format === "image/png")
       d
     }
+    def png(img: BufferedImage) = ImageFixtures.write(img, "png")()
+    // (bit depth, color type) from IHDR: each fixture really is the layout
+    def ihdr(b: Array[Byte]) = (b(24) & 0xff, b(25) & 0xff)
     // --- palette 8-bit, no alpha: 4-color 4x2, expanded to RGB
     val pal = Array[Byte](
       255.toByte, 0, 0, /**/ 0, 255.toByte, 0, /**/ 0, 0, 255.toByte, /**/
       10, 20, 30)
     val idx8 = Array[Byte](0, 1, 2, 3, 3, 2, 1, 0)
-    val palPng = Multimodal.encodePngRaw(4, 2, 8, 3, idx8, palette = pal)
+    val palPng = png(ImageFixtures.indexed(4, 2, idx8, pal))
+    assert(ihdr(palPng) === ((8, 3)), "fixture: 8-bit palette")
     val d1 = decode(palPng)
     assert((d1.width, d1.height, d1.channels) === ((4, 2, 3)))
     val expectedRgb = idx8.flatMap(i => pal.slice(i * 3, i * 3 + 3))
     assert(d1.checksum === fnvOf(expectedRgb), "palette expands through PLTE")
-    val img1 = imageIo(palPng)
-    assert((img1.getRGB(0, 0) & 0xffffff) === 0xff0000 &&
-      (img1.getRGB(3, 0) & 0xffffff) === ((10 << 16) | (20 << 8) | 30),
-      "ImageIO agrees on the palette colors")
-    // --- palette 4-bit packed + tRNS alpha → RGBA
-    val idx4 = Array[Byte](0x01, 0x23.toByte, 0x32, 0x10) // 2 rows of 0,1,2,3 / 3,2,1,0
+    // --- palette 4-bit packed + tRNS alpha → RGBA (a 4-bit palette holds
+    // more than 4 entries: the rest are opaque black)
     val trns = Array[Byte](0, 100, 200.toByte, 255.toByte)
-    val pal4Png = Multimodal.encodePngRaw(4, 2, 4, 3, idx4, palette = pal, trns = trns)
+    val pal4Png = png(ImageFixtures.indexed(4, 2, Array[Byte](0, 1, 2, 3, 3, 2, 1, 0),
+      pal ++ new Array[Byte](3 * 12), bits = 4, alpha = trns ++ Array.fill(12)(255.toByte)))
+    assert(ihdr(pal4Png) === ((4, 3)), "fixture: 4-bit palette")
     val d2 = decode(pal4Png)
     assert((d2.width, d2.height, d2.channels) === ((4, 2, 4)))
     val expectedRgba = Array[Byte](0, 1, 2, 3, 3, 2, 1, 0).flatMap(i =>
       pal.slice(i * 3, i * 3 + 3) :+ trns(i))
     assert(d2.checksum === fnvOf(expectedRgba), "4-bit indices unpack, tRNS rides as alpha")
-    val img2 = imageIo(pal4Png)
-    assert(((img2.getRGB(0, 0) >>> 24) === 0) && ((img2.getRGB(3, 0) >>> 24) === 255),
-      "ImageIO agrees on tRNS alpha")
     // --- 1-bit grayscale scales to 0/255
-    val g1 = Multimodal.encodePngRaw(8, 2, 1, 0, Array[Byte](0xAA.toByte, 0x55))
+    val bits = "1010101001010101"
+    val g1img = new BufferedImage(8, 2, BufferedImage.TYPE_BYTE_BINARY)
+    g1img.getRaster.setPixels(0, 0, 8, 2, bits.map(c => if (c == '1') 1 else 0).toArray)
+    val g1 = png(g1img)
+    assert(ihdr(g1) === ((1, 0)), "fixture: 1-bit gray")
     val d3 = decode(g1)
     assert((d3.width, d3.height, d3.channels) === ((8, 2, 1)))
-    val expectedG1 = "1010101001010101".map(c => if (c == '1') 255.toByte else 0.toByte).toArray
+    val expectedG1 = bits.map(c => if (c == '1') 255.toByte else 0.toByte).toArray
     assert(d3.checksum === fnvOf(expectedG1))
-    val img3 = imageIo(g1)
-    assert((img3.getRGB(0, 0) & 0xff) === 255 && (img3.getRGB(1, 0) & 0xff) === 0)
     // --- 16-bit RGB reduces to the high byte
     val px16 = Array.tabulate(2 * 1 * 3 * 2) { i =>
       (if (i % 2 == 0) (i * 17 + 3) & 0xff else 0x7f).toByte // (hi, lo) pairs
     }
-    val rgb16 = Multimodal.encodePngRaw(2, 1, 16, 2, px16)
+    val cm16 = new ComponentColorModel(ColorSpace.getInstance(ColorSpace.CS_sRGB),
+      false, false, java.awt.Transparency.OPAQUE, DataBuffer.TYPE_USHORT)
+    val img16 = new BufferedImage(cm16, cm16.createCompatibleWritableRaster(2, 1), false, null)
+    img16.getRaster.setPixels(0, 0, 2, 1,
+      Array.tabulate(6)(i => ((px16(2 * i) & 0xff) << 8) | (px16(2 * i + 1) & 0xff)))
+    val rgb16 = png(img16)
+    assert(ihdr(rgb16) === ((16, 2)), "fixture: 16-bit RGB")
     val d4 = decode(rgb16)
     assert((d4.width, d4.height, d4.channels) === ((2, 1, 3)))
     val expected16 = Array.tabulate(6)(i => px16(i * 2))
     assert(d4.checksum === fnvOf(expected16), "16-bit samples reduce to high byte")
-    val img4 = imageIo(rgb16)
-    // ImageIO converts 16→8 by /257 (vs our >>8): both equal the high byte ±1
-    assert(math.abs(((img4.getRGB(0, 0) >> 16) & 0xff) - (expected16(0) & 0xff)) <= 1)
     // --- gray+alpha expands to RGBA
-    val ga = Multimodal.encodePngRaw(2, 1, 8, 4, Array[Byte](100, 200.toByte, 50, 0))
+    val cmGa = new ComponentColorModel(ColorSpace.getInstance(ColorSpace.CS_GRAY),
+      true, false, java.awt.Transparency.TRANSLUCENT, DataBuffer.TYPE_BYTE)
+    val imgGa = new BufferedImage(cmGa, cmGa.createCompatibleWritableRaster(2, 1), false, null)
+    imgGa.getRaster.setPixels(0, 0, 2, 1, Array(100, 200, 50, 0))
+    val ga = png(imgGa)
+    assert(ihdr(ga) === ((8, 4)), "fixture: gray+alpha")
     val d5 = decode(ga)
     assert((d5.width, d5.height, d5.channels) === ((2, 1, 4)))
     assert(d5.checksum === fnvOf(Array[Byte](
       100, 100, 100, 200.toByte, 50, 50, 50, 0)))
-    val img5 = imageIo(ga)
-    assert((img5.getRGB(0, 0) >>> 24) === 200 && (img5.getRGB(1, 0) >>> 24) === 0)
     // --- palette index out of range degrades (stub), never kills the task
-    val bad = Multimodal.encodePngRaw(4, 2, 8, 3,
-      Array[Byte](0, 1, 2, 9, 9, 2, 1, 0), palette = pal)
+    val bad = png(ImageFixtures.indexed(4, 2, Array[Byte](0, 1, 2, 9, 9, 2, 1, 0), pal))
     val db = Multimodal.decode(spark, asMedia(Seq((9L, bad, "image/png")))).collect().head
     assert(db.id === 9L, "record survives a corrupt palette reference")
   }
 
   test("Adam7 interlaced PNG: pass gather reconstructs the same pixels as sequential") {
-    import java.io.ByteArrayInputStream
     // 13x11 RGB (odd size → every pass partially filled, some pass rows
     // ragged); the interlaced and sequential encodings of the SAME pixels
     // must hash identically — interlacing is transport, not content
     val (w, h) = (13, 11)
     val px = Array.tabulate(w * h * 3)(i => ((i * 37 + 11) % 251).toByte)
-    val seq = Multimodal.encodePngRaw(w, h, 8, 2, px)
-    val adam = Multimodal.encodePngRaw(w, h, 8, 2, px, interlace = true)
-    assert(adam(28) === 1.toByte, "fixture must really be interlaced (IHDR)")
-    // ImageIO referee FIRST: proves the scatter-side fixture is a valid
-    // interlaced PNG of exactly `px` before blaming the decoder
-    val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(adam))
-    for (y <- 0 until h; x <- 0 until w) {
-      val d = (y * w + x) * 3
-      assert((img.getRGB(x, y) & 0xffffff) ===
-        (((px(d) & 0xff) << 16) | ((px(d + 1) & 0xff) << 8) | (px(d + 2) & 0xff)),
-        s"ImageIO disagrees at ($x,$y)")
-    }
+    val img = ImageFixtures.image(w, h, px)
+    val seq = ImageFixtures.write(img, "png")()
+    val adam = ImageFixtures.pngInterlaced(img)
+    assert(adam(28) === 1.toByte && seq(28) === 0.toByte,
+      "fixtures must really be interlaced / sequential (IHDR)")
     val out = Multimodal.decode(spark, asMedia(Seq(
       (1L, seq, "image/png"), (2L, adam, "image/png")))).collect()
       .map(d => d.id -> d).toMap
@@ -442,17 +440,9 @@ class MultimodalSpec extends SparkSpec {
     val pal = Array[Byte](255.toByte, 0, 0, 0, 255.toByte, 0, 0, 0, 255.toByte, 9, 9, 9)
     val wp = 9; val hp = 5
     val idx = Array.tabulate(wp * hp)(i => (i % 4).toByte)
-    // pack 2-bit indices MSB-first into ceil(9*2/8)=3 bytes per row
-    val rowBytes = (wp * 2 + 7) / 8
-    val packed = new Array[Byte](rowBytes * hp)
-    for (y <- 0 until hp; x <- 0 until wp) {
-      val bit = x * 2
-      val sh = 8 - 2 - (bit & 7)
-      packed(y * rowBytes + (bit >> 3)) =
-        (packed(y * rowBytes + (bit >> 3)) | (idx(y * wp + x) << sh)).toByte
-    }
-    val adamPal = Multimodal.encodePngRaw(wp, hp, 2, 3, packed, palette = pal,
-      interlace = true)
+    val adamPal = ImageFixtures.pngInterlaced(ImageFixtures.indexed(wp, hp, idx, pal, bits = 2))
+    assert((adamPal(24), adamPal(25), adamPal(28)) === ((2.toByte, 3.toByte, 1.toByte)),
+      "fixture: interlaced 2-bit palette")
     val dp = Multimodal.decode(spark, asMedia(Seq((3L, adamPal, "image/png"))))
       .collect().head
     assert((dp.width, dp.height, dp.channels) === ((wp, hp, 3)))
@@ -465,10 +455,10 @@ class MultimodalSpec extends SparkSpec {
     val px = Array[Byte](
       255.toByte, 0, 0, /**/ 255.toByte, 0, 0,
       0, 0, 255.toByte, /**/ 0, 0, 255.toByte)
-    val png = Multimodal.encodePng(2, 2, px)
-    val bmp = Multimodal.encodeBmp24(2, 2, px)
+    val png = ImageFixtures.png(2, 2, px)
+    val bmp = ImageFixtures.bmp(2, 2, px)
     // constant gray image → std 0, hist concentrated in one bin
-    val gray = Multimodal.encodePng(3, 3, Array.fill(9)(100.toByte), channels = 1)
+    val gray = ImageFixtures.png(3, 3, Array.fill(9)(100.toByte), channels = 1)
     val out = Multimodal.features(spark, asMedia(Seq(
       (1L, png, "image/png"), (2L, bmp, "image/bmp"),
       (3L, gray, "image/png"), (4L, "just text".getBytes, "text"))))
@@ -494,7 +484,7 @@ class MultimodalSpec extends SparkSpec {
     val left = Array[Byte](200.toByte, 0, 0)
     val right = Array[Byte](0, 0, 200.toByte)
     val row = left ++ left ++ right ++ right
-    val src = Multimodal.encodePng(4, 2, row ++ row)
+    val src = ImageFixtures.png(4, 2, row ++ row)
     val out = Multimodal.resize(spark, asMedia(Seq(
       (1L, src, "image/png"), (2L, "not an image".getBytes, "text"))), 2, 1)
       .collect().map(d => d.id -> d).toMap
@@ -564,44 +554,55 @@ class MultimodalSpec extends SparkSpec {
       "stub chanStd must not repeat with period 8 above 8 channels")
   }
 
+  /** The engine's decoded pixels of an image payload: a resize to the
+    * payload's own size is the identity box average, and the PNG it writes
+    * holds exactly those pixels.
+    */
+  private def enginePixels(payload: Array[Byte], w: Int, h: Int): Array[Int] = {
+    val r = Multimodal.resize(spark, asMedia(Seq((1L, payload, "image"))), w, h)
+      .collect().head
+    assert(r.decoded, "payload must pixel-decode")
+    javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
+      .getRaster.getPixels(0, 0, w, h, null: Array[Int])
+  }
+
   test("JPEG round-trip: real baseline decode reconstructs pixels within lossy tolerance") {
-    // encoder and decoder are independent T.81 implementations (FDCT +
-    // Huffman encode vs Huffman decode + IDCT); agreeing on smooth content
-    // within a small tolerance across gray / 4:4:4 / 4:2:0 / odd geometry
-    // is strong evidence both are right. JPEG is lossy — assertions are
-    // tolerance-based, never bit-exact.
+    // the JDK's JPEG writer → the engine's pixel path. JPEG is lossy —
+    // assertions are tolerance-based, never bit-exact — across gray, 4:4:4
+    // and 4:2:0 color, odd geometry (partial MCUs) and restart markers.
     def gradient(w: Int, h: Int, ch: Int): Array[Byte] =
       Array.tabulate(w * h * ch) { i =>
         val p = i / ch; val x = p % w; val y = p / w
         (((x * 255) / math.max(1, w - 1) + (y * 200) / math.max(1, h - 1)) / 2).toByte
       }
-    def maxErr(a: Array[Byte], b: Array[Byte]): Int =
-      a.zip(b).map { case (p, q) => math.abs((p & 0xff) - (q & 0xff)) }.max
+    def maxErr(a: Array[Byte], b: Array[Int]): Int =
+      a.zip(b).map { case (p, q) => math.abs((p & 0xff) - q) }.max
     val cases = Seq(
-      ("gray 16x16", 16, 16, 1, false),
+      ("gray 16x16", 16, 16, 1, true),
       ("rgb444 32x24", 32, 24, 3, false),
       ("rgb420 32x24", 32, 24, 3, true),
       ("odd 13x9 4:2:0", 13, 9, 3, true))
     cases.foreach { case (label, w, h, ch, sub) =>
       val src = gradient(w, h, ch)
-      val jpg = graft.multimodal.Jpeg.encode(w, h, ch, src, quality = 95, subsample = sub)
-      val (dw, dh, dch, pix) = graft.multimodal.Jpeg.decode(jpg)
-      assert((dw, dh, dch) === ((w, h, ch)), s"$label geometry")
+      val jpg = ImageFixtures.jpeg(ImageFixtures.image(w, h, src, ch), subsample = sub)
+      val sof = ImageFixtures.markerAt(jpg, 0xc0)
+      val sampling = (0 until ch).map(c => jpg(sof + 11 + 3 * c) & 0xff)
+      assert(sampling.forall(_ == 0x11) === (ch == 1 || !sub), s"$label fixture chroma sampling")
+      val d = Multimodal.decode(spark, asMedia(Seq((1L, jpg, "image/jpeg")))).collect().head
+      assert((d.format, d.width, d.height, d.channels) === (("image/jpeg", w, h, ch)),
+        s"$label geometry")
+      val pix = enginePixels(jpg, w, h)
       assert(pix.length === src.length, s"$label size")
       assert(maxErr(src, pix) <= 12, s"$label max pixel error ${maxErr(src, pix)}")
     }
     // restart markers (DRI + RSTn every 2 MCUs): real camera streams carry
-    // these; the decoder's restart path must reproduce the same pixels
+    // these; the restart path must reproduce the same pixels
     val (rw, rh) = (48, 32)
     val rsrc = gradient(rw, rh, 3)
-    val rjpg = graft.multimodal.Jpeg.encode(rw, rh, 3, rsrc, quality = 95,
-      subsample = true, restartInterval = 2)
+    val rjpg = ImageFixtures.jpeg(ImageFixtures.image(rw, rh, rsrc), restartInterval = 2)
     // the fixture must actually contain an RST0 marker (FF D0) in the scan
-    assert((0 until rjpg.length - 1).exists(i =>
-      (rjpg(i) & 0xff) == 0xff && (rjpg(i + 1) & 0xff) == 0xd0),
-      "restart fixture must contain an RST0 marker")
-    val (rdw, rdh, _, rpix) = graft.multimodal.Jpeg.decode(rjpg)
-    assert((rdw, rdh) === ((rw, rh)), "restart geometry")
+    assert(ImageFixtures.markerAt(rjpg, 0xd0) >= 0, "restart fixture must contain an RST0 marker")
+    val rpix = enginePixels(rjpg, rw, rh)
     assert(maxErr(rsrc, rpix) <= 12, s"restart max pixel error ${maxErr(rsrc, rpix)}")
   }
 
@@ -609,7 +610,7 @@ class MultimodalSpec extends SparkSpec {
     // a few-hundred-byte payload declaring gigabytes of pixels must be
     // rejected BEFORE the pixel allocation (OutOfMemoryError is not a
     // NonFatal the degrade path could catch)
-    val png = Multimodal.encodePng(4, 4, Array.fill(48)(7.toByte))
+    val png = ImageFixtures.png(4, 4, Array.fill(48)(7.toByte))
     val pngBomb = png.clone()
     // IHDR width/height at offsets 16/20 (big-endian): declare 40000x40000
     def putBe32(a: Array[Byte], off: Int, v: Int): Unit = {
@@ -617,7 +618,7 @@ class MultimodalSpec extends SparkSpec {
       a(off + 2) = ((v >> 8) & 0xff).toByte; a(off + 3) = (v & 0xff).toByte
     }
     putBe32(pngBomb, 16, 40000); putBe32(pngBomb, 20, 40000)
-    val jpg = graft.multimodal.Jpeg.encode(8, 8, 3, Array.fill(192)(9.toByte))
+    val jpg = ImageFixtures.jpeg(8, 8, Array.fill(192)(9.toByte), 3)
     val jpgBomb = jpg.clone()
     val sofAt = (0 until jpgBomb.length - 1).find(i =>
       (jpgBomb(i) & 0xff) == 0xff && (jpgBomb(i + 1) & 0xff) == 0xc0).get
@@ -636,143 +637,88 @@ class MultimodalSpec extends SparkSpec {
       (1L, pngBomb, "image/png"), (2L, jpgBomb, "image/jpeg"))))
       .collect()
     assert(f.length === 2 && f.forall(!_.decoded))
+    // GIF: the logical screen and the image descriptor declare 40000x40000
+    def putLe(a: Array[Byte], off: Int, v: Int, n: Int): Unit =
+      (0 until n).foreach(k => a(off + k) = ((v >> (8 * k)) & 0xff).toByte)
+    val gifBomb = ImageFixtures.gifRgb(4, 4, Array.fill(48)(7.toByte)).clone()
+    var desc = 13 + (if ((gifBomb(10) & 0x80) != 0) 3 * (2 << (gifBomb(10) & 7)) else 0)
+    while (gifBomb(desc) == 0x21) { // skip extension blocks to the descriptor
+      desc += 2
+      while (gifBomb(desc) != 0) desc += (gifBomb(desc) & 0xff) + 1
+      desc += 1
+    }
+    assert(gifBomb(desc) === 0x2c.toByte, "image descriptor located")
+    Seq(6, 8, desc + 5, desc + 7).foreach(off => putLe(gifBomb, off, 40000, 2))
+    // BMP: the header declares 40000x40000 over 4x4 pixels of data
+    val bmpBomb = ImageFixtures.bmp(4, 4, Array.fill(48)(7.toByte)).clone()
+    putLe(bmpBomb, 18, 40000, 4); putLe(bmpBomb, 22, 40000, 4)
+    val more = Multimodal.decode(spark, asMedia(Seq(
+      (3L, gifBomb, "image/gif"), (4L, bmpBomb, "image/bmp")))).collect()
+    assert(more.length === 2 && more.forall(_.width < 40000), "GIF and BMP bombs → stub")
+    val fm = Multimodal.features(spark, asMedia(Seq(
+      (3L, gifBomb, "image/gif"), (4L, bmpBomb, "image/bmp")))).collect()
+    assert(fm.length === 2 && fm.forall(!_.decoded))
   }
 
-  test("JPEG codec cross-validates against ImageIO (independent third implementation)") {
-    // The JDK's ImageIO is an independent JPEG implementation — perfect as
-    // a TEST oracle, deliberately NOT used in the engine path: its IDCT and
-    // color conversion are vendor-dependent, and the engine's pixel
-    // checksums must be bit-identical across heterogeneous executors, which
-    // only our own deterministic codec guarantees.
-    import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-    val (w, h) = (32, 24)
-    val src = Array.tabulate(w * h * 3) { i =>
-      val p = i / 3; val x = p % w; val y = p / w
-      (i % 3 match {
-        case 0 => (x * 255) / (w - 1)
-        case 1 => (y * 255) / (h - 1)
-        case _ => 128
-      }).toByte
-    }
-    // our encoder -> both decoders on the same stream. On 4:4:4 the only
-    // divergence is IDCT/color rounding → tight bound; on 4:2:0 the two
-    // decoders legitimately differ in chroma upsampling (ours: nearest
-    // replicate; ImageIO: filtered) → looser bound.
-    def crossDiff(subsample: Boolean): Int = {
-      val jpg = graft.multimodal.Jpeg.encode(w, h, 3, src, quality = 95, subsample = subsample)
-      val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(jpg))
-      assert(img.getWidth === w && img.getHeight === h)
-      val (_, _, _, ours) = graft.multimodal.Jpeg.decode(jpg)
-      var worst = 0
-      for (y <- 0 until h; x <- 0 until w) {
-        val rgb = img.getRGB(x, y)
-        val d = (y * w + x) * 3
-        worst = math.max(worst, math.abs(((rgb >> 16) & 0xff) - (ours(d) & 0xff)))
-        worst = math.max(worst, math.abs(((rgb >> 8) & 0xff) - (ours(d + 1) & 0xff)))
-        worst = math.max(worst, math.abs((rgb & 0xff) - (ours(d + 2) & 0xff)))
-      }
-      worst
-    }
-    val d444 = crossDiff(subsample = false)
-    assert(d444 <= 3, s"4:4:4 decoder-vs-decoder: max diff $d444 (IDCT rounding only)")
-    val d420 = crossDiff(subsample = true)
-    assert(d420 <= 12, s"4:2:0 decoder-vs-decoder: max diff $d420 (upsampling differs)")
-    // ImageIO encoder -> our decoder: a FOREIGN entropy stream (different
-    // Huffman/quant/sampling choices) must decode close to the source
-    val bi = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val d = (y * w + x) * 3
-      bi.setRGB(x, y, ((src(d) & 0xff) << 16) | ((src(d + 1) & 0xff) << 8) | (src(d + 2) & 0xff))
-    }
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    val param = writer.getDefaultWriteParam
-    param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    param.setCompressionQuality(0.95f)
-    val bos = new ByteArrayOutputStream()
-    writer.setOutput(javax.imageio.ImageIO.createImageOutputStream(bos))
-    writer.write(null, new javax.imageio.IIOImage(bi, null, null), param)
-    writer.dispose()
-    val foreign = bos.toByteArray
-    val (fw, fh, fch, fpix) = graft.multimodal.Jpeg.decode(foreign)
-    assert((fw, fh, fch) === ((w, h, 3)), "foreign stream geometry")
-    val ferr = src.zip(fpix).map { case (a, b) => math.abs((a & 0xff) - (b & 0xff)) }
-    assert(ferr.max <= 16, s"foreign stream max pixel error ${ferr.max}")
+  test("the bomb cap is sized to the read: a 6.8-megapixel JPEG still pixel-decodes") {
+    // 2600x2600 RGB: the JPEG reader's 3-byte raster plus the interleaved
+    // copy is 47 MB, inside the 64 MB cap
+    val (w, h) = (2600, 2600)
+    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    val jpg = ImageFixtures.jpeg(img)
+    val d = Multimodal.decode(spark, asMedia(Seq((1L, jpg, "image/jpeg")))).collect().head
+    assert((d.format, d.width, d.height, d.channels) === (("image/jpeg", w, h, 3)))
+    assert(d.checksum === fnvOf(new Array[Byte](w * h * 3)), "black pixels, not the header parse")
   }
 
   test("progressive JPEG (SOF2): real pixel decode, cross-validated against ImageIO") {
     // Fixture from the JDK writer's standard progression script (spectral
     // selection AND successive approximation: DC first/refine, AC
-    // first/refine with EOB runs) — an independent encoder driving every
-    // progressive decode path. The same bytes are then decoded by BOTH
-    // implementations and compared pixel-wise.
-    import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-    def writeProgressive(bi: java.awt.image.BufferedImage): Array[Byte] = {
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-      val param = writer.getDefaultWriteParam
-      param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      param.setCompressionQuality(0.95f)
-      param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-      val bos = new ByteArrayOutputStream()
-      writer.setOutput(javax.imageio.ImageIO.createImageOutputStream(bos))
-      writer.write(null, new javax.imageio.IIOImage(bi, null, null), param)
-      writer.dispose()
-      bos.toByteArray
-    }
-    def hasMarker(b: Array[Byte], m: Int): Boolean =
-      (0 until b.length - 1).exists(i =>
-        (b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) == m)
-
+    // first/refine with EOB runs). The engine must decode its pixels, not
+    // fall back to the header parse.
+    import java.awt.image.BufferedImage
     // odd geometry → partial MCUs at both edges
     val (w, h) = (37, 23)
-    val bi = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bi = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w)
       bi.setRGB(x, y, ((x * 255 / (w - 1)) << 16) | ((y * 255 / (h - 1)) << 8) | 128)
-    val prog = writeProgressive(bi)
-    assert(hasMarker(prog, 0xc2), "fixture must really be progressive (SOF2)")
-    assert(!hasMarker(prog, 0xc0), "fixture must not carry a baseline SOF")
-    val (dw, dh, dch, ours) = graft.multimodal.Jpeg.decode(prog)
-    assert((dw, dh, dch) === ((w, h, 3)), "progressive geometry")
-    // same stream through ImageIO's decoder: divergence is IDCT rounding +
-    // chroma-upsampling choice (the writer subsamples by default) → the
-    // same bound as the sequential 4:2:0 cross-validation
-    val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(prog))
+    val prog = ImageFixtures.jpeg(bi, progressive = true)
+    assert(ImageFixtures.markerAt(prog, 0xc2) >= 0, "fixture must really be progressive (SOF2)")
+    assert(ImageFixtures.markerAt(prog, 0xc0) < 0, "fixture must not carry a baseline SOF")
+    val ours = enginePixels(prog, w, h)
+    // against the source: lossy (4:2:0 chroma, q0.95), so a tolerance
     var worst = 0
-    for (y <- 0 until h; x <- 0 until w) {
-      val rgb = img.getRGB(x, y)
-      val d = (y * w + x) * 3
-      worst = math.max(worst, math.abs(((rgb >> 16) & 0xff) - (ours(d) & 0xff)))
-      worst = math.max(worst, math.abs(((rgb >> 8) & 0xff) - (ours(d + 1) & 0xff)))
-      worst = math.max(worst, math.abs((rgb & 0xff) - (ours(d + 2) & 0xff)))
+    for (y <- 0 until h; x <- 0 until w; c <- 0 until 3) {
+      val want = (bi.getRGB(x, y) >> (16 - 8 * c)) & 0xff
+      worst = math.max(worst, math.abs(want - ours((y * w + x) * 3 + c)))
     }
-    assert(worst <= 12, s"progressive decoder-vs-decoder: max diff $worst")
+    assert(worst <= 16, s"progressive max pixel error $worst")
 
     // grayscale progressive (single-component scans end-to-end)
-    val gbi = new java.awt.image.BufferedImage(16, 16, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val gbi = new BufferedImage(16, 16, BufferedImage.TYPE_BYTE_GRAY)
     for (y <- 0 until 16; x <- 0 until 16)
       gbi.getRaster.setSample(x, y, 0, (x * 16 + y) % 256)
-    val gprog = writeProgressive(gbi)
-    assert(hasMarker(gprog, 0xc2), "gray fixture must be progressive")
-    val (gw, gh, gch, gpix) = graft.multimodal.Jpeg.decode(gprog)
-    assert((gw, gh, gch) === ((16, 16, 1)), "gray progressive geometry")
-    val gimg = javax.imageio.ImageIO.read(new ByteArrayInputStream(gprog))
+    val gprog = ImageFixtures.jpeg(gbi, progressive = true)
+    assert(ImageFixtures.markerAt(gprog, 0xc2) >= 0, "gray fixture must be progressive")
+    val gd = Multimodal.decode(spark, asMedia(Seq((8L, gprog, "image/jpeg")))).collect().head
+    assert((gd.width, gd.height, gd.channels) === ((16, 16, 1)), "gray progressive geometry")
+    val gpix = enginePixels(gprog, 16, 16)
     var gworst = 0
     for (y <- 0 until 16; x <- 0 until 16)
-      gworst = math.max(gworst,
-        math.abs(gimg.getRaster.getSample(x, y, 0) - (gpix(y * 16 + x) & 0xff)))
-    assert(gworst <= 3, s"gray progressive max diff $gworst")
+      gworst = math.max(gworst, math.abs(gbi.getRaster.getSample(x, y, 0) - gpix(y * 16 + x)))
+    assert(gworst <= 12, s"gray progressive max pixel error $gworst")
 
-    // engine path: decode()/features() report REAL pixels for SOF2 now
+    // engine path: decode()/features() report REAL pixels for SOF2
     val d = Multimodal.decode(spark, asMedia(Seq((9L, prog, "image/jpeg")))).collect().head
     assert((d.width, d.height, d.channels) === ((w, h, 3)))
-    assert(d.checksum === fnvOf(ours), "decode() must hash reconstructed SOF2 pixels")
+    assert(d.checksum === fnvOf(ours.map(_.toByte)), "decode() must hash reconstructed SOF2 pixels")
     val f = Multimodal.features(spark, asMedia(Seq((9L, prog, "image/jpeg")))).collect().head
     assert(f.decoded, "features must run on real progressive pixels")
 
     // bomb guard still enforced on the progressive path: huge declared SOF2
-    // dims refuse to allocate coefficient planes and degrade to the header
+    // dims refuse to allocate and degrade to the header
     val bomb = prog.clone()
-    val sofAt = (0 until bomb.length - 1).find(i =>
-      (bomb(i) & 0xff) == 0xff && (bomb(i + 1) & 0xff) == 0xc2).get
+    val sofAt = ImageFixtures.markerAt(bomb, 0xc2)
     bomb(sofAt + 5) = (40000 >> 8).toByte; bomb(sofAt + 6) = (40000 & 0xff).toByte
     bomb(sofAt + 7) = (40000 >> 8).toByte; bomb(sofAt + 8) = (40000 & 0xff).toByte
     val db = Multimodal.decode(spark, asMedia(Seq((10L, bomb, "image/jpeg")))).collect().head
@@ -788,13 +734,13 @@ class MultimodalSpec extends SparkSpec {
     val src = Array.tabulate(w * h * 3)(i => (i % 3 match {
       case 0 => 200; case 1 => 60; case _ => 120
     }).toByte)
-    val jpg = graft.multimodal.Jpeg.encode(w, h, 3, src, quality = 95, subsample = true)
+    val jpg = ImageFixtures.jpeg(w, h, src, 3)
     val media = asMedia(Seq((1L, jpg, "image/jpeg")))
     val d = Multimodal.decode(spark, media).collect().head
     assert((d.format, d.width, d.height, d.channels) === (("image/jpeg", w, h, 3)))
     // pixel checksum (not the scan-bytes checksum the header fallback uses):
     // must equal the checksum of the decoder's own reconstruction
-    val (_, _, _, pix) = graft.multimodal.Jpeg.decode(jpg)
+    val pix = enginePixels(jpg, w, h).map(_.toByte)
     assert(d.checksum === fnvOf(pix), "decode() must hash reconstructed pixels")
     val f = Multimodal.features(spark, media).collect().head
     assert(f.decoded, "features must run on real JPEG pixels now")
@@ -818,6 +764,45 @@ class MultimodalSpec extends SparkSpec {
     assert(dp.checksum !== d.checksum, "degraded record hashes scan bytes, not pixels")
     val fp = Multimodal.features(spark, asMedia(Seq((2L, prog, "image/jpeg")))).collect().head
     assert(!fp.decoded && (fp.width, fp.height) === ((w, h)))
+    // a scan cut mid-way: the JPEG reader only warns (premature end of
+    // data, missing EOI) and fills the missing rows, so the warning must
+    // reject the pixels — the record is the header parse, hashing the scan
+    // bytes that are there
+    val sos = ImageFixtures.markerAt(jpg, 0xda)
+    val scanOff = sos + 2 + (((jpg(sos + 2) & 0xff) << 8) | (jpg(sos + 3) & 0xff))
+    val cut = jpg.take(scanOff + (jpg.length - scanOff) / 2)
+    val dc = Multimodal.decode(spark, asMedia(Seq((3L, cut, "image/jpeg")))).collect().head
+    assert((dc.format, dc.width, dc.height, dc.channels) === (("image/jpeg", w, h, 3)),
+      "a cut scan keeps the header geometry")
+    assert(dc.checksum === fnvOf(cut.drop(scanOff)), "a cut scan hashes its scan bytes")
+    val fc = Multimodal.features(spark, asMedia(Seq((3L, cut, "image/jpeg")))).collect().head
+    assert(!fc.decoded && (fc.width, fc.height) === ((w, h)), "a cut scan is not pixel-decoded")
+  }
+
+  test("ImageIO decodes are deterministic: the same bytes give the same record in every task") {
+    // JPEG pixels are implementation-defined (T.81 bounds IDCT accuracy
+    // only); the engine's promise is that every executor — one JDK — turns
+    // the same bytes into the same checksum. Four tasks decode at once,
+    // twice over.
+    val rnd = new scala.util.Random(20261019L)
+    val payloads = (0 until 24).map { i =>
+      val (w, h) = (9 + i % 7, 7 + i % 5)
+      val px = Array.fill(w * h * 3)(rnd.nextInt(256).toByte)
+      val bytes = i % 3 match {
+        case 0 => ImageFixtures.jpeg(ImageFixtures.image(w, h, px), progressive = i % 2 == 0)
+        case 1 => ImageFixtures.png(w, h, px)
+        case _ => ImageFixtures.gifRgb(w, h, px.map(b => (b & 0xc0).toByte)) // ≤ 64 colors
+      }
+      (i.toLong, bytes, "image")
+    }
+    val media = asMedia(payloads).repartition(4)
+    assert(media.rdd.getNumPartitions === 4)
+    def run() = Multimodal.decode(spark, media).collect().sortBy(_.id).toSeq
+    val first = run()
+    assert(first.length === 24)
+    assert(first.map(_.format).toSet === Set("image/jpeg", "image/png", "image/gif"),
+      "every payload must pixel-decode, none may stub")
+    assert(run() === first, "a second decode in four tasks must give identical records")
   }
 
   test("fuzz: random mutations of valid payloads never drop a record or kill the task") {
@@ -827,15 +812,24 @@ class MultimodalSpec extends SparkSpec {
     // (real decode, header parse, or stub), deterministically
     val rnd = new scala.util.Random(20260813L)
     val px = Array.tabulate(8 * 8 * 3)(i => (i * 31 % 251).toByte)
+    val img = ImageFixtures.image(8, 8, px)
+    val jpg = ImageFixtures.jpeg(img)
+    val sos = ImageFixtures.markerAt(jpg, 0xda)
     val seeds: Seq[Array[Byte]] = Seq(
-      Multimodal.encodeBmp24(8, 8, px),
+      ImageFixtures.bmp(8, 8, px),
       Multimodal.encodePpm(8, 8, px),
-      Multimodal.encodePng(8, 8, px),
-      graft.multimodal.Jpeg.encode(8, 8, 3, px, quality = 90),
+      ImageFixtures.png(8, 8, px),
+      jpg,
       Multimodal.encodeWav(2, 16, 8000, px),
       graft.multimodal.Flac.encode(
         Array.tabulate(96)(i => (math.sin(i * 0.2) * 5000).toInt), 2, 16, 8000,
-        graft.multimodal.Flac.EncodeOptions(blockSize = 32)))
+        graft.multimodal.Flac.EncodeOptions(blockSize = 32)),
+      // native-reader inputs: GIF, progressive JPEG, Adam7 PNG, and a JPEG
+      // cut mid-scan (which the JPEG reader only warns about)
+      ImageFixtures.gifRgb(8, 8, px),
+      ImageFixtures.jpeg(img, progressive = true),
+      ImageFixtures.pngInterlaced(img),
+      jpg.take(sos + (jpg.length - sos) / 2))
     val mutated: Seq[(Long, Array[Byte], String)] = (0 until 200).map { i =>
       val base = seeds(i % seeds.length)
       val b = base.clone()
@@ -875,7 +869,7 @@ class MultimodalSpec extends SparkSpec {
         (i % 3 match { case 0 => r; case 1 => g; case 2 => b }).toByte
       }
       if (nudge) px(0) = math.min(255, (px(0) & 0xff) + 10).toByte
-      Multimodal.encodeBmp24(4, 4, px)
+      ImageFixtures.bmp(4, 4, px)
     }
     val media = asMedia(Seq(
       (1L, img(200, 10, 10, nudge = false), "image/bmp"),
@@ -1022,7 +1016,8 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("GIF LZW round trip: sequential, interlaced, KwKwK runs, 12-bit table freeze") {
-    import graft.multimodal.Gif
+    // the JDK's GIF writer → the engine's pixel path: every layout must
+    // reconstruct the exact source pixels (checksum = FNV of the RGB)
     val rnd = new scala.util.Random(7)
     // small-palette random image
     val (w, h) = (23, 17)
@@ -1031,77 +1026,39 @@ class MultimodalSpec extends SparkSpec {
       Array[Byte](0, 0, 255.toByte), Array[Byte](17, 34, 51),
       Array[Byte](200.toByte, 100, 50))
     val rgb = Array.tabulate(w * h)(_ => pal5(rnd.nextInt(5))).flatten.toArray
-    val seqGif = Gif.encodeRgb(w, h, rgb)
-    val (dw, dh, dch, dpix) = Gif.decode(seqGif)
-    assert((dw, dh, dch) === ((w, h, 3)))
-    assert(dpix.toSeq === rgb.toSeq, "sequential round trip")
-    // interlaced: identical reconstruction (row scatter is lossless)
-    val (_, _, _, ipix) = Gif.decode(Gif.encodeRgb(w, h, rgb, interlaced = true))
-    assert(ipix.toSeq === rgb.toSeq, "interlaced round trip")
     // constant image: back-to-back KwKwK codes (every new code referenced
     // one step before the decoder defines it)
     val flat = Array.fill(64 * 64 * 3)(42.toByte)
-    assert(Gif.decode(Gif.encodeRgb(64, 64, flat))._4.toSeq === flat.toSeq)
     // 250-color noise at 128x128 pushes the dictionary past 4096: codes
     // freeze at 12 bits and both sides must stay in lockstep
     val bigPal = Array.tabulate(250)(i =>
       Array[Byte]((i * 7 % 256).toByte, (i * 13 % 256).toByte, (i * 29 % 256).toByte))
     val big = Array.tabulate(128 * 128)(_ => bigPal(rnd.nextInt(250))).flatten.toArray
-    assert(Gif.decode(Gif.encodeRgb(128, 128, big))._4.toSeq === big.toSeq,
-      "round trip across the table freeze")
-  }
-
-  test("GIF cross-validates against ImageIO both directions") {
-    import graft.multimodal.Gif
-    import java.io.ByteArrayInputStream
-    val rnd = new scala.util.Random(11)
-    val (w, h) = (31, 13)
-    val pal = Array.tabulate(16)(i =>
-      Array[Byte]((i * 16).toByte, (255 - i * 16).toByte, (i * 5 + 3).toByte))
-    val rgb = Array.tabulate(w * h)(_ => pal(rnd.nextInt(16))).flatten.toArray
-    // our encoder → the JDK's independent decoder (incl. the interlaced file)
-    Seq(false, true).foreach { interlaced =>
-      val img = javax.imageio.ImageIO.read(
-        new ByteArrayInputStream(Gif.encodeRgb(w, h, rgb, interlaced)))
-      assert(img.getWidth === w && img.getHeight === h)
-      var p = 0
-      while (p < w * h) {
-        val v = img.getRGB(p % w, p / w)
-        assert(((v >> 16) & 0xff) === (rgb(p * 3) & 0xff) &&
-          ((v >> 8) & 0xff) === (rgb(p * 3 + 1) & 0xff) &&
-          (v & 0xff) === (rgb(p * 3 + 2) & 0xff),
-          s"ImageIO disagrees at pixel $p (interlaced=$interlaced)")
-        p += 1
-      }
+    val cases = Seq(
+      (1L, w, h, rgb, false, "sequential round trip"),
+      (2L, w, h, rgb, true, "interlaced round trip"),
+      (3L, 64, 64, flat, false, "KwKwK runs"),
+      (4L, 128, 128, big, false, "round trip across the table freeze"))
+    val out = Multimodal.decode(spark, asMedia(cases.map { case (id, cw, ch, px, il, _) =>
+      (id, ImageFixtures.gifRgb(cw, ch, px, interlaced = il), "image/gif")
+    })).collect().map(d => d.id -> d).toMap
+    cases.foreach { case (id, cw, ch, px, _, label) =>
+      assert((out(id).format, out(id).width, out(id).height, out(id).channels) ===
+        (("image/gif", cw, ch, 3)), label)
+      assert(out(id).checksum === fnvOf(px), label)
     }
-    // the JDK's independent encoder → our decoder
-    val cm = new java.awt.image.IndexColorModel(
-      4, 16, pal.map(_(0)).toArray, pal.map(_(1)).toArray, pal.map(_(2)).toArray)
-    val bi = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-    (0 until w * h).foreach { p =>
-      val c = rgb.slice(p * 3, p * 3 + 3)
-      bi.setRGB(p % w, p / w,
-        ((c(0) & 0xff) << 16) | ((c(1) & 0xff) << 8) | (c(2) & 0xff))
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(bi, "gif", bos), "JDK GIF writer available")
-    val (jw, jh, jch, jpix) = Gif.decode(bos.toByteArray)
-    assert((jw, jh, jch) === ((w, h, 3)))
-    assert(jpix.toSeq === rgb.toSeq, "our decoder reproduces the JDK encoder's pixels")
   }
 
   test("GIF and PNG of the same pixels produce identical features (cross-format invariant)") {
-    import graft.multimodal.Gif
     val rnd = new scala.util.Random(5)
     val (w, h) = (19, 11)
     val pal = Array.tabulate(8)(i =>
       Array[Byte]((i * 31).toByte, (i * 17 + 5).toByte, (255 - i * 29).toByte))
     val rgb = Array.tabulate(w * h)(_ => pal(rnd.nextInt(8))).flatten.toArray
     val gifF = Multimodal.features(spark,
-      asMedia(Seq((1L, Gif.encodeRgb(w, h, rgb), "image/gif")))).collect().head
+      asMedia(Seq((1L, ImageFixtures.gifRgb(w, h, rgb), "image/gif")))).collect().head
     val pngF = Multimodal.features(spark,
-      asMedia(Seq((2L, Multimodal.encodePng(w, h, rgb), "image/png")))).collect().head
+      asMedia(Seq((2L, ImageFixtures.png(w, h, rgb), "image/png")))).collect().head
     assert(gifF.decoded && pngF.decoded)
     assert((gifF.width, gifF.height, gifF.channels) ===
       ((pngF.width, pngF.height, pngF.channels)))
@@ -1109,38 +1066,49 @@ class MultimodalSpec extends SparkSpec {
       gifF.chanStd.toSeq === pngF.chanStd.toSeq &&
       gifF.lumaHist.toSeq === pngF.lumaHist.toSeq,
       "identical pixels through different containers must featurize identically")
+    // decode(): the same pixels hash identically through all four
+    // containers — BMP stored bottom-up (positive height) and top-down
+    // (negative height) included
+    val bmpUp = ImageFixtures.bmp(w, h, rgb)
+    val bmpDown = ImageFixtures.bmp(w, h, rgb, topDown = true)
+    def le32(b: Array[Byte], o: Int) = java.nio.ByteBuffer.wrap(b, o, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    assert(le32(bmpUp, 22) === h && le32(bmpDown, 22) === -h, "fixtures: both BMP row orders")
+    val dec = Multimodal.decode(spark, asMedia(Seq(
+      (1L, ImageFixtures.gifRgb(w, h, rgb), "image/gif"),
+      (2L, ImageFixtures.png(w, h, rgb), "image/png"),
+      (3L, bmpUp, "image/bmp"), (4L, bmpDown, "image/bmp")))).collect().sortBy(_.id)
+    assert(dec.map(_.format).toSeq === Seq("image/gif", "image/png", "image/bmp", "image/bmp"))
+    assert(dec.map(_.checksum).toSeq === Seq.fill(4)(fnvOf(rgb)),
+      "same pixels, same checksum: GIF, PNG, bottom-up and top-down BMP")
   }
 
   test("GIF transparency, Multimodal dispatch, checksum invariance, corrupt degrade") {
-    import graft.multimodal.Gif
     val pal = Array[Byte](255.toByte, 0, 0, /**/ 0, 255.toByte, 0, /**/ 9, 9, 9)
-    val idx = Array[Byte](0, 1, 2, 2, 1, 0)
+    // 3x6: tall enough that interlaced storage reorders the rows
+    val (w, h) = (3, 6)
+    val idx = Array.tabulate(w * h)(p => ((p + p / w) % 3).toByte)
     // transparent index 2 → RGBA with alpha 0 exactly there
-    val (tw, th, tch, tpix) = Gif.decode(
-      Gif.encodeIndexed(3, 2, idx, pal, transparentIdx = 2))
-    assert((tw, th, tch) === ((3, 2, 4)))
-    idx.zipWithIndex.foreach { case (ix, p) =>
-      assert((tpix(p * 4 + 3) & 0xff) === (if (ix == 2) 0 else 255))
-      assert(tpix(p * 4) === pal(ix * 3) && tpix(p * 4 + 1) === pal(ix * 3 + 1))
-    }
-    // ImageIO referee on the transparent pixel
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
-      Gif.encodeIndexed(3, 2, idx, pal, transparentIdx = 2)))
-    assert(((img.getRGB(2, 0) >>> 24) & 0xff) === 0, "ImageIO sees alpha 0 at idx 2")
-    assert(((img.getRGB(0, 0) >>> 24) & 0xff) === 255)
+    val t = Multimodal.decode(spark, asMedia(Seq((5L, ImageFixtures.gif(
+      ImageFixtures.indexed(w, h, idx, pal, transparentIdx = 2)), "image/gif")))).collect().head
+    assert((t.format, t.width, t.height, t.channels) === (("image/gif", w, h, 4)))
+    assert(t.checksum === fnvOf(idx.flatMap(i =>
+      pal.slice(i * 3, i * 3 + 3) :+ (if (i == 2) 0 else 255).toByte)),
+      "palette expands to RGBA with alpha 0 at the transparent index")
     // dispatch + interlace checksum invariance through the column operator
-    val seqBytes = Gif.encodeIndexed(3, 2, idx, pal)
-    val intBytes = Gif.encodeIndexed(3, 2, idx, pal, interlaced = true)
+    val seqBytes = ImageFixtures.gif(ImageFixtures.indexed(w, h, idx, pal))
+    val intBytes = ImageFixtures.gif(ImageFixtures.indexed(w, h, idx, pal), interlaced = true)
+    assert(!(seqBytes sameElements intBytes), "fixtures: sequential vs interlaced storage")
     val out = Multimodal.decode(spark, asMedia(Seq(
       (1L, seqBytes, "image/gif"), (2L, intBytes, "image/gif"),
       (3L, seqBytes.dropRight(8), "image/gif")))) // truncated → degrade
       .collect().sortBy(_.id)
     assert(out(0).format === "image/gif" && out(0).channels === 3)
-    assert((out(0).width, out(0).height) === ((3, 2)))
+    assert((out(0).width, out(0).height) === ((w, h)))
     assert(out(0).checksum === out(1).checksum,
       "interlaced vs sequential storage hashes identically")
     assert(out(2).format === "image/gif" && out(2).checksum != out(0).checksum,
       "truncated payload degrades to the stub record, task survives")
-    assert(out(2).width != 3, "stub geometry, not a half-parsed frame")
+    assert(out(2).width != w, "stub geometry, not a half-parsed frame")
   }
 }
