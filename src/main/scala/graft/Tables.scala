@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table access (TESTDATA.md / FIXTURES.md).
   *
@@ -8,6 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference: KuduStorageHandler.java:223-278); here every fixture table is a
   * parquet directory and the Spark planner provides splits, locality and
   * projection/predicate pushdown natively (SURVEY.md S1-S5).
+  *
+  * A table's schema is resolved once per file version, never per query, as
+  * the reference reads it from the Hive metastore (DESIGN.md principle 5).
+  * Only a signature and a `StructType` are kept, never a DataFrame, plan,
+  * file index or row, so every query still lists and scans the files.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -26,7 +34,8 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     raw.schema.fields.foldLeft(raw) { (df, f) =>
       f.dataType match {
         case TimestampNTZType =>
@@ -39,9 +48,48 @@ object Tables {
     }
   }
 
+  /** A file version: every file under the table path with its length and
+    * modification time, sorted by path. */
+  private type Signature = Seq[(String, Long, Long)]
+
+  /** The session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
+
+  /** (table path, inference confs) -> the last signature seen and its schema. */
+  private val schemas = new ConcurrentHashMap[(String, Seq[Option[String]]), (Signature, StructType)]()
+
+  private def signature(spark: SparkSession, path: String): Signature = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+    files(fs.getFileStatus(p))
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
+  }
+
+  /** The schema of `path` under this session's inference confs: inferred on
+    * a new signature (replacing the path's entry), reused otherwise. The
+    * signature is taken before inference, so a file rewritten in between
+    * leaves an entry whose signature no longer matches: the next load
+    * infers again rather than trusting a stale schema.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val key = (path, InferenceConfs.map(spark.conf.getOption))
+    val sig = signature(spark, path)
+    Option(schemas.get(key)).collect { case (`sig`, schema) => schema }.getOrElse {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(key, (sig, schema))
+      schema
+    }
+  }
+
   /** Register every fixture table as a temp view so `spark.sql` queries can
-    * name them exactly like the DuckDB oracle does. Lazy — only parquet
-    * footers are touched until an action runs.
+    * name them exactly like the DuckDB oracle does. The first call over a
+    * file version runs one schema-inference job per table; later calls list
+    * the files and run none. Nothing is scanned until an action runs.
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))

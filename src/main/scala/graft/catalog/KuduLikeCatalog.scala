@@ -625,7 +625,7 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
         parts.tail.zip(subs).map { case (v, c) => col(c).cast("string") === v }
           .foldLeft(head)(_ && _)
       }.reduce(_ || _)
-      val hit = pinned.filter(cond).limit(1).count() > 0
+      val hit = pinned.filter(cond).count() > 0
       if (hit) throw new CatalogException(
         s"$name: write targets dropped range partition(s) " +
           s"${dropped.mkString(", ")} — compact() folds the drop into the " +
@@ -2689,7 +2689,7 @@ final class KuduLikeCatalog(spark: SparkSession, root: String,
     */
   private def rejectNullKeys(df: DataFrame, keys: Seq[String]): Unit = {
     val anyNull = keys.map(col(_).isNull).reduce(_ || _)
-    if (df.filter(anyNull).limit(1).count() > 0)
+    if (df.filter(anyNull).count() > 0)
       throw new CatalogException(s"NULL in key column (keys: ${keys.mkString(",")})")
   }
 

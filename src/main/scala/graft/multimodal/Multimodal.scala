@@ -787,7 +787,9 @@ object Multimodal {
     try {
       reader.setInput(in, true, true)
       var warning: Option[String] = None
-      reader.addIIOReadWarningListener((_, w) => warning = Some(w))
+      // the first warning rejects the decode, so stop the read there rather
+      // than decode the rest and throw the pixels away
+      reader.addIIOReadWarningListener { (r, w) => warning = Some(w); r.abort() }
       val (dw, dh) = (reader.getWidth(0), reader.getHeight(0))
       // what `read` allocates (the reader's raster) plus the interleaved
       // copy (at most 4 bytes a pixel); samples are copied one row at a time

@@ -554,11 +554,13 @@ object Dedup {
         // it implies edge-consistency: with symmetric edges, an unchanged
         // pull step means comp(d) ≤ comp(s) along every edge in BOTH
         // directions, i.e. equal labels across every edge. The probe scans
-        // the just-materialized blocks (no join, no shuffle; limit(1)
-        // short-circuits on the first changed label) — the old probe's two
-        // edge-sized joins per round were the dominant per-round cost at
-        // scale, where edges outnumber nodes by the average degree.
-        done = next.filter(col("comp") =!= col("__prev")).limit(1).count() == 0L
+        // the just-materialized blocks (no join, no shuffle) — the old
+        // probe's two edge-sized joins per round were the dominant per-round
+        // cost at scale, where edges outnumber nodes by the average degree.
+        // A filtered count, not limit(1): LimitExec names its counter from a
+        // process-global sequence, so a limit compiles a fresh class per
+        // call, and the last round matches nothing and scans every block.
+        done = next.filter(col("comp") =!= col("__prev")).count() == 0L
         // the superseded round is structurally dead (next is materialized
         // and the probe read next, not labels) — release its blocks NOW;
         // waiting for GC+ContextCleaner leaked one node-sized block set per

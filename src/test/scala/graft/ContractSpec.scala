@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ContractSpec extends AnyFunSuite {
 
+  /** Every engine source file: (file name, text). */
+  private lazy val mainSources: List[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { stream =>
+      stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toList
+    }
+  }
+
   test("query names are unique and well-formed") {
     val names = SparkEntry.all.map(_.name)
     assert(names.distinct.size === names.size,
@@ -64,34 +74,28 @@ class ContractSpec extends AnyFunSuite {
       // bounded: the quantizer model is cells + m*ksub rows by construction
       // (loadModel), and the training sample is capped at maxFit vectors
       "EmbeddingIndex.scala")
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val offenders = scala.util.Using.resource(java.nio.file.Files.walk(root)) { stream =>
-      stream.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => java.nio.file.Files.readString(p).contains(".collect()"))
-        .map(_.getFileName.toString).toSet
-    }
+    val offenders = mainSources.collect { case (f, text) if text.contains(".collect()") => f }.toSet
     assert((offenders -- allowed).isEmpty,
       s"undocumented collect() in: ${(offenders -- allowed).toSeq.sorted.mkString(", ")} — " +
         "either make the operator distributed or document the bound and extend the allowlist")
+  }
+
+  test("engine code probes for existence with a filtered count, not limit(1).count()") {
+    // LimitExec names its counter from a process-global sequence, so every
+    // limit(1).count() compiles a fresh class, and the common no-match case
+    // scans every row anyway
+    val offenders = mainSources.collect { case (f, text) if text.contains(".limit(1).count()") => f }
+    assert(offenders.isEmpty, s"limit(1).count() probes in: ${offenders.sorted.mkString(", ")}")
   }
 
   test("engine code decodes and encodes images on in-memory ImageIO streams only") {
     // ImageIO.read/write and createImage{Input,Output}Stream use ImageIO's
     // default cache, a temp file in java.io.tmpdir for every record; the
     // media path builds MemoryCacheImage{Input,Output}Streams itself
-    import scala.jdk.CollectionConverters._
     val banned = Seq("ImageIO.read(", "ImageIO.write(",
       "ImageIO.createImageInputStream(", "ImageIO.createImageOutputStream(")
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val offenders = scala.util.Using.resource(java.nio.file.Files.walk(root)) { stream =>
-      stream.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val text = java.nio.file.Files.readString(p)
-          banned.filter(text.contains).map(c => s"${p.getFileName}: $c")
-        }.toList
+    val offenders = mainSources.flatMap { case (f, text) =>
+      banned.filter(text.contains).map(c => s"$f: $c")
     }
     assert(offenders.isEmpty, s"file-cached ImageIO calls: ${offenders.mkString(", ")}")
   }

@@ -671,7 +671,7 @@ class MultimodalSpec extends SparkSpec {
     assert(d.checksum === fnvOf(new Array[Byte](w * h * 3)), "black pixels, not the header parse")
   }
 
-  test("progressive JPEG (SOF2): real pixel decode, cross-validated against ImageIO") {
+  test("progressive JPEG (SOF2): pixel decode, error bounded against the source image") {
     // Fixture from the JDK writer's standard progression script (spectral
     // selection AND successive approximation: DC first/refine, AC
     // first/refine with EOB runs). The engine must decode its pixels, not
