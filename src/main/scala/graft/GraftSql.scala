@@ -1,20 +1,40 @@
 package graft
 
 import graft.catalog.{CatalogException, KuduLikeCatalog, TableDef}
+import org.antlr.v4.runtime.{CharStreams, CommonTokenStream, Token}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, UnresolvedAttribute,
+  UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast, Coalesce, Expression,
+  Literal, NamedExpression, Not}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** SQL-text entry point for the keyed-table catalog.
   *
   * The reference's entire user surface is Hive SQL DDL — `CREATE TABLE …
   * STORED BY '…KuduStorageHandler' TBLPROPERTIES('kudu.key_columns'='…')`,
   * `INSERT INTO`, `DROP TABLE` (reference: README.md:22-44) — so the catalog
-  * must be drivable from SQL text, not just the Scala API. Statements the
-  * catalog owns (CREATE / DROP / INSERT / UPSERT / DELETE / MERGE on catalog
-  * tables) are parsed here and routed to [[KuduLikeCatalog]]; every other statement
-  * falls through to `spark.sql` with all catalog tables registered as temp
-  * views, so SELECTs see catalog tables next to anything else in the session.
+  * must be drivable from SQL text, not just the Scala API. As in the
+  * reference, where Hive parses and the handler only acts on its own
+  * tables, Spark parses here and GraftSql only routes: a statement's
+  * logical plan that names a catalog table (CREATE in the reference
+  * dialect, INSERT / UPSERT / UPDATE / DELETE / MERGE, DROP, ALTER,
+  * DESCRIBE, SHOW, TRUNCATE) goes to [[KuduLikeCatalog]]; every other
+  * statement falls through to `spark.sql` with all catalog tables
+  * registered as temp views, so SELECTs see catalog tables next to
+  * anything else in the session. Only the catalog's own verbs, which
+  * Spark's grammar lacks (CLONE, RESTORE, VACUUM, OPTIMIZE, SHOW LITTER,
+  * SHOW COLUMN STATS, DESCRIBE HISTORY, ALTER … RANGE PARTITION, ANALYZE),
+  * are matched by their heads, before the parser sees them. A clause the
+  * parser reports and the catalog does not implement is refused with a
+  * [[CatalogException]] naming it, never dropped.
   *
   * Recognized TBLPROPERTIES:
   *  - `kudu.key_columns`   (required) — comma-separated primary key
@@ -39,48 +59,40 @@ object GraftSql {
 
   def execute(spark: SparkSession, cat: KuduLikeCatalog, sqlText: String): DataFrame = {
     val stmt = stripLeadingComments(sqlText).trim.stripSuffix(";").trim
-    // keyword dispatch on whitespace-collapsed text so multi-line DML is not
-    // misrouted to spark.sql (the statement parsers themselves accept \s+)
-    val upper = stmt.toUpperCase.replaceAll("\\s+", " ")
-    // CREATE routes to the catalog only for the reference's dialect (STORED
-    // BY / kudu.* properties) — plain Spark CREATE (USING/CTAS) falls through
-    val isCatalogCreate = upper.startsWith("CREATE TABLE") &&
-      (upper.contains("STORED BY") || upper.contains("KUDU.KEY_COLUMNS"))
-    if (CloneHead.matches(stmt)) cloneTable(spark, cat, stmt)
-    else if (isCatalogCreate) create(spark, cat, stmt)
-    else if (upper.startsWith("DROP TABLE")) drop(spark, cat, stmt)
-    else if (upper.startsWith("INSERT OVERWRITE")) overwriteInto(spark, cat, stmt)
-    else if (upper.startsWith("INSERT INTO") || upper.startsWith("UPSERT INTO"))
-      writeInto(spark, cat, stmt)
-    else if (upper.startsWith("DELETE FROM")) delete(spark, cat, stmt)
-    else if (upper.startsWith("UPDATE ")) update(spark, cat, stmt)
-    else if (upper.startsWith("MERGE INTO")) merge(spark, cat, stmt)
-    else if (upper.startsWith("ALTER TABLE")) alter(spark, cat, stmt)
-    else if (upper.startsWith("DESCRIBE ") || upper.startsWith("DESC "))
-      describe(spark, cat, stmt)
-    else if (upper == "SHOW TABLES") showTables(spark, cat)
-    else if (upper.startsWith("SHOW CREATE TABLE")) showCreate(spark, cat, stmt)
-    else if (upper.startsWith("SHOW PARTITIONS")) showPartitions(spark, cat, stmt)
-    else if (upper.startsWith("SHOW COLUMN STATS")) showColumnStats(spark, cat, stmt)
-    else if (upper.startsWith("TRUNCATE TABLE")) truncate(spark, cat, stmt)
-    else if (upper.startsWith("OPTIMIZE ")) optimize(spark, cat, stmt)
-    else if (upper == "SHOW LITTER") cat.showLitter()
-    else if (upper == "VACUUM LITTER") {
-      // operator-invoked, retention zero: the SQL form is the explicit
-      // "I know nothing is in flight" sweep (see vacuumLitter's scaladoc)
-      val paths = cat.vacuumLitter(olderThanMs = 0L)
-      import spark.implicits._
-      paths.toDF("reclaimed")
+    stmt match {
+      case CloneHead(dst, src, v) =>
+        cat.cloneTable(src, dst, Option(v).map(_.toInt))
+        status(spark, "CREATE TABLE CLONE", dst, 0L)
+      case RestoreHead(name, v) =>
+        status(spark, "RESTORE TABLE", name, cat.restoreTable(name, v.toInt))
+      case LitterHead(verb) if verb.equalsIgnoreCase("SHOW") => cat.showLitter()
+      case LitterHead(_) =>
+        // operator-invoked, retention zero: the SQL form is the explicit
+        // "I know nothing is in flight" sweep (see vacuumLitter's scaladoc)
+        import spark.implicits._
+        cat.vacuumLitter(olderThanMs = 0L).toDF("reclaimed")
+      case VacuumHead(name) =>
+        cat.vacuum(name)
+        status(spark, "VACUUM", name, 0L)
+      case OptimizeHead(name, incremental, cols) => optimize(spark, cat, name, incremental, cols)
+      case ShowColStatsHead(name) => showColumnStats(spark, cat, name)
+      // `DESCRIBE HISTORY t` — version history for time travel (version,
+      // kind, committed_at, files, rows), straight off the catalog's
+      // footer-only metadata walk. Spark would read it as DESCRIBE of a
+      // column `t` of a table named HISTORY, hence the head match.
+      case DescribeHistoryHead(name) if cat.exists(name) => cat.history(name)
+      case RangePartitionHead(name, op, value, lo, hi) if cat.exists(name) =>
+        rangePartition(spark, cat, name, op.toUpperCase, Option(value), lo, hi)
+      case AnalyzeHead(name, hist) if cat.exists(name) =>
+        status(spark, "ANALYZE TABLE", name, cat.analyze(name, withHistogram = hist != null).numRows)
+      case CatalogVerb(verb) =>
+        throw new CatalogException(s"cannot parse ${verb.toUpperCase}: $stmt")
+      case _ => route(spark, cat, stmt)
     }
-    else if (upper.startsWith("VACUUM ")) vacuum(spark, cat, stmt)
-    else if (upper.startsWith("RESTORE TABLE")) restoreTable(spark, cat, stmt)
-    else if (upper.startsWith("ANALYZE TABLE")) analyzeTable(spark, cat, stmt)
-    else { registerViews(spark, cat); spark.sql(stmt) }
   }
 
-  /** Drop full-line `--` comments at the head of a statement (the parsers
-    * anchor on the first keyword). Comments inside the statement body are
-    * left to the underlying parsers.
+  /** Drop full-line `--` comments at the head of a statement (the verb
+    * heads anchor on the first keyword; the parser reads comments itself).
     */
   private def stripLeadingComments(s: String): String = {
     var t = s.trim
@@ -95,45 +107,171 @@ object GraftSql {
   def registerViews(spark: SparkSession, cat: KuduLikeCatalog): Unit =
     cat.tableNames.foreach(n => cat.table(n).createOrReplaceTempView(n))
 
-  private val CreateHead =
-    """(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s*""".r
-  private val DropHead =
-    """(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?`?([\w.]+)`?$""".r
-  private val WriteHead =
-    """(?is)^(INSERT|UPSERT)\s+INTO\s+(?:TABLE\s+)?`?([\w.]+)`?\s+(.*)$""".r
-  private val OverwriteHead =
-    """(?is)^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?`?([\w.]+)`?\s+(.*)$""".r
-  private val DeleteHead =
-    """(?is)^DELETE\s+FROM\s+`?([\w.]+)`?(?:\s+WHERE\s+(.*))?$""".r
-  private val AlterHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+COLUMNS?\s*(.+)$""".r
-  private val AlterDropHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+COLUMNS?\s*(.+)$""".r
-  private val DescribeHead =
-    """(?is)^DESC(?:RIBE)?\s+(FORMATTED\s+)?(?:TABLE\s+)?`?([\w.]+)`?$""".r
+  /** Spark's own lexer over `sql`: the default-channel tokens, so comments
+    * and whitespace are gone and a literal is one token. EOF excluded.
+    */
+  private[graft] def tokens(sql: String): IndexedSeq[Token] = {
+    val lexer = new SqlBaseLexer(CharStreams.fromString(sql))
+    lexer.removeErrorListeners() // malformed text is the parser's to report
+    val stream = new CommonTokenStream(lexer)
+    stream.fill()
+    stream.getTokens.asScala.toIndexedSeq
+      .filter(t => t.getChannel == Token.DEFAULT_CHANNEL && t.getType != Token.EOF)
+  }
 
-  private def create(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame = {
-    val m = CreateHead.findFirstMatchIn(stmt).getOrElse(
-      throw new CatalogException(s"cannot parse CREATE TABLE: $stmt"))
-    val ifNotExists = m.group(1) != null
-    val name = m.group(2)
-    val tail = stmt.substring(m.end)
-    splitCtas(tail) match {
-      case Some((head, query)) =>
-        return createAsSelect(spark, cat, name, ifNotExists, head, query)
-      case None => ()
+  /** Parse with the session's parser, then route on the plan node. Two
+    * dialect rewrites come first: the reference's `STORED BY '<handler>'`
+    * clause, which Spark rejects, is cut out (and marks the CREATE as the
+    * catalog's), and a leading `UPSERT` becomes `INSERT` (and selects
+    * [[KuduLikeCatalog.upsert]]).
+    */
+  private def route(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame = {
+    val toks = tokens(stmt)
+    def word(i: Int, w: String) = i < toks.length && toks(i).getText.equalsIgnoreCase(w)
+    val storedBy = toks.indices.find(i => word(i, "STORED") && word(i + 1, "BY") &&
+      i + 2 < toks.length && toks(i + 2).getType == SqlBaseLexer.STRING_LITERAL)
+    val upsert = word(0, "UPSERT")
+    val cut = storedBy.fold(stmt) { i =>
+      val from = toks(i).getStartIndex
+      stmt.patch(from, "", toks(i + 2).getStopIndex + 1 - from)
     }
-    val open = stmt.indexOf('(', m.end - 1)
-    if (open < 0) throw new CatalogException(s"CREATE TABLE $name: missing column list")
-    val (colsDdl, afterCols) = balancedParen(stmt, open)
-    val schema = StructType.fromDDL(normalizeTypes(colsDdl))
-    val props = tblProperties(stmt.substring(afterCols))
-    val keyCols = requiredKeyCols(name, props)
-    if (!(ifNotExists && cat.exists(name))) {
-      cat.createTable(tableDefFromProps(name, schema, keyCols, props))
-      registerViews(spark, cat)
+    val plan = spark.sessionState.sqlParser.parsePlan(
+      if (upsert) cut.patch(toks(0).getStartIndex, "INSERT", 6) else cut)
+    def dialect(spec: TableSpecBase) =
+      storedBy.isDefined || spec.properties.contains("kudu.key_columns")
+    object Owned {
+      def unapply(p: LogicalPlan): Option[String] = tableName(p).filter(cat.exists)
     }
-    status(spark, "CREATE TABLE", name, 0L)
+    plan match {
+      case c: CreateTable if dialect(c.tableSpec) =>
+        val name = newName(c.name)
+        val props = properties(name, c.partitioning, c.tableSpec)
+        val keyCols = requiredKeyCols(name, props)
+        refuse("CREATE TABLE", name, "DEFAULT" -> c.columns.exists(_.defaultValue.isDefined),
+          "GENERATED" -> c.columns.exists(d =>
+            d.generationExpression.isDefined || d.identityColumnSpec.isDefined))
+        val schema = StructType(c.columns.map(d => field(d.name, d.dataType, d.nullable, d.comment)))
+        if (!(c.ignoreIfExists && cat.exists(name))) {
+          cat.createTable(tableDefFromProps(name, schema, keyCols, props))
+          registerViews(spark, cat)
+        }
+        status(spark, "CREATE TABLE", name, 0L)
+      case c: CreateTableAsSelect if dialect(c.tableSpec) =>
+        val name = newName(c.name)
+        refuse("CREATE TABLE", name, "OPTIONS" -> c.writeOptions.nonEmpty)
+        createAsSelect(spark, cat, name, c.ignoreIfExists,
+          properties(name, c.partitioning, c.tableSpec), c.query)
+      case i @ InsertIntoStatement(Owned(name), _, _, _, _, _, _) => write(spark, cat, name, i, upsert)
+      case DeleteFromTable(Owned(name), cond) =>
+        val n = cat.delete(name, ColumnBridge.column(cond))
+        registerViews(spark, cat)
+        status(spark, "DELETE FROM", name, n)
+      case UpdateTable(Owned(name), sets, cond) => update(spark, cat, name, sets, cond)
+      case m @ MergeIntoTable(Owned(name), _, _, _, _, _, _) => merge(spark, cat, name, m)
+      case DropTable(Owned(name), _, _) =>
+        cat.dropTable(name)
+        spark.catalog.dropTempView(name)
+        status(spark, "DROP TABLE", name, 0L)
+      case AddColumns(Owned(name), cols) =>
+        // online schema evolution: new columns are non-key, in the closed
+        // type set, and land nullable
+        refuse("ALTER TABLE", name, "a nested column" -> cols.exists(_.path.isDefined),
+          "FIRST / AFTER" -> cols.exists(_.position.isDefined),
+          "DEFAULT" -> cols.exists(_.default.isDefined))
+        val fields = cols.map(c => field(c.colName, c.dataType, c.nullable, c.comment))
+        cat.addColumns(name, fields) // atomic: all-or-nothing
+        registerViews(spark, cat)
+        status(spark, "ALTER TABLE", name, fields.length.toLong)
+      case DropColumns(Owned(name), fields, ifExists) =>
+        // metadata-only evolution; existing file bytes are reclaimed by the
+        // next compact (KuduLikeCatalog.dropColumn)
+        val schema = cat.schemaOf(name)
+        val cols = fields.map(f => column(name, f.name))
+          .filter(c => !ifExists || schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+        cat.dropColumns(name, cols) // atomic: all-or-nothing
+        registerViews(spark, cat)
+        status(spark, "ALTER TABLE", name, cols.length.toLong)
+      case RenameColumn(Owned(name), from, to) =>
+        // the honest O(table) fold+rewrite (no field-ID indirection in this
+        // layout — KuduLikeCatalog.renameColumn)
+        cat.renameColumn(name, column(name, from.name), to)
+        registerViews(spark, cat)
+        status(spark, "ALTER TABLE RENAME COLUMN", name, 1L)
+      case RenameTable(Owned(name), to, false) =>
+        // one atomic directory move (metadata is path-relative)
+        val dst = newName(UnresolvedIdentifier(to))
+        cat.renameTable(name, dst)
+        spark.catalog.dropTempView(name) // the old view must not linger
+        registerViews(spark, cat)
+        status(spark, "ALTER TABLE RENAME", dst, 0L)
+      case DescribeRelation(Owned(name), partition, formatted, _) =>
+        refuse("DESCRIBE", name, "PARTITION (…)" -> partition.nonEmpty)
+        describe(spark, cat, name, formatted)
+      case ShowTables(CurrentNamespace, None, _) =>
+        // bare `SHOW TABLES` only: `SHOW TABLES IN ns` is Spark's, where the
+        // `graftsql` TableCatalog plugin answers for its namespace
+        import spark.implicits._
+        cat.tableNames.sorted.toDF("tab_name")
+      case ShowCreateTable(Owned(name), false, _) => showCreate(spark, cat, name)
+      case ShowPartitions(Owned(name), spec, _) =>
+        refuse("SHOW PARTITIONS", name, "PARTITION (…)" -> spec.isDefined)
+        showPartitions(spark, cat, name)
+      case TruncateTable(Owned(name)) => truncate(spark, cat, name)
+      case _ => { registerViews(spark, cat); spark.sql(stmt) }
+    }
+  }
+
+  /** The one-part name of the table a parsed statement targets. */
+  private def tableName(p: LogicalPlan): Option[String] = {
+    def single(parts: Seq[String]) = Some(parts).collect { case Seq(n) => n }
+    p match {
+      case SubqueryAlias(_, child) => tableName(child)
+      case r: UnresolvedRelation => single(r.multipartIdentifier)
+      case t: UnresolvedTable => single(t.multipartIdentifier)
+      case t: UnresolvedTableOrView => single(t.multipartIdentifier)
+      case i: UnresolvedIdentifier => single(i.nameParts)
+      case _ => None
+    }
+  }
+
+  private def newName(p: LogicalPlan): String = tableName(p).getOrElse(
+    throw new CatalogException(s"catalog table names are one identifier: $p"))
+
+  private def column(table: String, parts: Seq[String]): String = parts match {
+    case Seq(c) => c
+    case _ => throw new CatalogException(s"$table: no nested column ${parts.mkString(".")}")
+  }
+
+  /** Throw for the first clause present that the catalog does not implement. */
+  private def refuse(verb: String, name: String, clauses: (String, Boolean)*): Unit =
+    clauses.collectFirst { case (clause, true) => clause }.foreach { clause =>
+      throw new CatalogException(s"$verb $name: $clause is not supported on a catalog table")
+    }
+
+  /** A dialect CREATE's TBLPROPERTIES, after refusing every other table
+    * clause (layout lives in the properties, storage under the root).
+    */
+  private def properties(name: String, partitioning: Seq[_],
+      spec: TableSpecBase): Map[String, String] = {
+    val options = spec match {
+      case s: UnresolvedTableSpec => s.optionExpression.options.nonEmpty
+      case _ => false
+    }
+    refuse("CREATE TABLE", name, "PARTITIONED BY" -> partitioning.nonEmpty,
+      "USING" -> spec.provider.isDefined, "OPTIONS" -> options,
+      "LOCATION" -> spec.location.isDefined, "COMMENT" -> spec.comment.isDefined,
+      "STORED AS / ROW FORMAT" -> spec.serde.isDefined, "EXTERNAL" -> spec.external)
+    spec.properties
+  }
+
+  /** A declared column, shared by CREATE and ALTER … ADD COLUMNS. The
+    * reference maps CHAR/VARCHAR onto plain STRING
+    * (HiveKuduBridgeUtils.java:38-44).
+    */
+  private def field(name: String, dataType: DataType, nullable: Boolean,
+      comment: Option[String]): StructField = {
+    val f = StructField(name, CharVarcharUtils.replaceCharVarcharWithString(dataType), nullable)
+    comment.fold(f)(f.withComment)
   }
 
   /** Layout TBLPROPERTIES → TableDef, shared by CREATE and CTAS so the two
@@ -175,14 +313,13 @@ object GraftSql {
     * discipline (PK non-null, in-batch dup-ignore). A failed load drops the
     * half-created table — CTAS is create+load or nothing.
     */
-  private def createAsSelect(spark: SparkSession, cat: KuduLikeCatalog,
-      name: String, ifNotExists: Boolean, head: String, query: String): DataFrame = {
+  private def createAsSelect(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      ifNotExists: Boolean, props: Map[String, String], query: LogicalPlan): DataFrame = {
     if (ifNotExists && cat.exists(name))
       return status(spark, "CREATE TABLE AS SELECT", name, 0L)
-    val props = tblProperties(head)
     val keyCols = requiredKeyCols(name, props)
     registerViews(spark, cat) // the SELECT may read catalog tables
-    val src = spark.sql(query)
+    val src = frame(spark, query)
     keyCols.foreach { k =>
       if (!src.columns.contains(k))
         throw new CatalogException(
@@ -196,155 +333,75 @@ object GraftSql {
     status(spark, "CREATE TABLE AS SELECT", name, n)
   }
 
-  /** Find a top-nesting-level `AS <query>` boundary (quote- and paren-aware:
-    * a column list's parens or a quoted handler class can never fake one).
-    * Returns (text before AS, the query text — outer parens stripped).
+  /** `INSERT INTO` / `UPSERT INTO` / `INSERT OVERWRITE` [TABLE] `t` — the
+    * query's columns map positionally onto the table (Hive INSERT
+    * semantics), or by name with a column list or BY NAME, where unlisted
+    * columns land NULL; every value casts to its declared type. OVERWRITE
+    * is Hive's truncate-and-load ([[KuduLikeCatalog.overwrite]]); all three
+    * keep the catalog's key discipline.
     */
-  private def splitCtas(tail: String): Option[(String, String)] = {
-    var i = 0
-    var depth = 0
-    var inQuote = false
-    def isWord(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    while (i < tail.length) {
-      val c = tail.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') {
-          if (i + 1 < tail.length && tail.charAt(i + 1) == '\'') i += 1
-          else inQuote = false
-        }
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'A' | 'a' if depth == 0 && (i == 0 || !isWord(tail.charAt(i - 1))) &&
-            i + 2 < tail.length && (tail.charAt(i + 1) == 'S' || tail.charAt(i + 1) == 's') &&
-            !isWord(tail.charAt(i + 2)) =>
-          val rest = tail.substring(i + 2).trim
-          val up = rest.toUpperCase
-          if (up.startsWith("SELECT") || up.startsWith("WITH") || up.startsWith("VALUES"))
-            return Some((tail.substring(0, i), rest))
-          if (rest.startsWith("(")) {
-            val (inner, _) = balancedParen(rest, 0)
-            return Some((tail.substring(0, i), inner.trim))
-          }
-        case _ => ()
-      }
-      i += 1
-    }
-    None
+  private def write(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      i: InsertIntoStatement, upsert: Boolean): DataFrame = {
+    val verb = if (upsert) "UPSERT INTO" else if (i.overwrite) "INSERT OVERWRITE" else "INSERT INTO"
+    refuse(verb, name, "IF NOT EXISTS" -> i.ifPartitionNotExists,
+      "PARTITION (…)" -> i.partitionSpec.nonEmpty, "OVERWRITE" -> (upsert && i.overwrite))
+    val schema = cat.schemaOf(name)
+    registerViews(spark, cat) // the SELECT form may read catalog tables
+    val src = frame(spark, i.query)
+    val cols =
+      if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+      else if (i.byName) src.columns.toSeq
+      else schema.fieldNames.toSeq
+    val out = src.queryExecution.analyzed.output
+    if (out.length != cols.length)
+      throw new CatalogException(
+        s"$verb $name: the query has ${out.length} columns for ${cols.length} target columns")
+    val row = fullRow(verb, name, schema, Nil, cols.zip(out), f => Literal(null, f.dataType))
+    val rows = src.select(row.map(ColumnBridge.column): _*)
+    val n =
+      if (upsert) cat.upsert(name, rows)
+      else if (i.overwrite) cat.overwrite(name, rows)
+      else cat.insert(name, rows)
+    registerViews(spark, cat)
+    status(spark, verb, name, n)
   }
 
-  private def drop(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case DropHead(_, name) if cat.exists(name) =>
-        cat.dropTable(name)
-        spark.catalog.dropTempView(name)
-        status(spark, "DROP TABLE", name, 0L)
-      case _ =>
-        // not a catalog table — let Spark's own catalog handle it (including
-        // its IF EXISTS no-op; a silent fake-success here would hide a live
-        // Spark table)
-        spark.sql(stmt)
-    }
-
-  private def writeInto(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case WriteHead(op, name, source) if cat.exists(name) =>
-        val schema = cat.schemaOf(name)
-        registerViews(spark, cat) // the SELECT form may read catalog tables
-        val src =
-          if (source.trim.toUpperCase.startsWith("VALUES"))
-            spark.sql(s"SELECT * FROM ${source.trim}")
-          else spark.sql(source.trim)
-        if (src.columns.length != schema.fields.length)
-          throw new CatalogException(
-            s"$op INTO $name: ${src.columns.length} columns, table has ${schema.fields.length}")
-        // positional mapping, cast to the declared types (Hive INSERT semantics)
-        val aligned = src.select(src.columns.zip(schema.fields).map {
-          case (c, f) => col(s"`$c`").cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-        val n =
-          if (op.equalsIgnoreCase("UPSERT")) cat.upsert(name, aligned)
-          else cat.insert(name, aligned)
-        registerViews(spark, cat)
-        status(spark, s"${op.toUpperCase} INTO", name, n)
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
-
-  /** `INSERT OVERWRITE TABLE t <query>` — Hive's truncate-and-load, routed
-    * to [[KuduLikeCatalog.overwrite]] (same positional column mapping and
-    * declared-type casts as INSERT INTO; same dup-ignore key discipline,
-    * applied within the incoming batch).
+  /** One full-schema projection from `assigns` (target column → value):
+    * assigned columns CAST to their declared type, every other column
+    * `rest(f)`. Unknown and twice-assigned columns reject, and so do the
+    * `keys` given (Kudu cannot update a primary key either). Shared by
+    * INSERT, UPDATE and every MERGE branch.
     */
-  private def overwriteInto(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case OverwriteHead(name, source) if cat.exists(name) =>
-        val schema = cat.schemaOf(name)
-        registerViews(spark, cat)
-        val src =
-          if (source.trim.toUpperCase.startsWith("VALUES"))
-            spark.sql(s"SELECT * FROM ${source.trim}")
-          else spark.sql(source.trim)
-        if (src.columns.length != schema.fields.length)
-          throw new CatalogException(
-            s"INSERT OVERWRITE $name: ${src.columns.length} columns, " +
-              s"table has ${schema.fields.length}")
-        val aligned = src.select(src.columns.zip(schema.fields).map {
-          case (c, f) => col(s"`$c`").cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-        val n = cat.overwrite(name, aligned)
-        registerViews(spark, cat)
-        status(spark, "INSERT OVERWRITE", name, n)
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
-
-  private def delete(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case DeleteHead(name, cond) if cat.exists(name) =>
-        val n = cat.delete(name, Option(cond).map(expr).getOrElse(lit(true)))
-        registerViews(spark, cat)
-        status(spark, "DELETE FROM", name, n)
-      case _ => spark.sql(stmt)
-    }
-
-  /** Parse `SET c = expr, …` into a full-schema projection: assigned
-    * columns CAST to their declared type, everything else passed through
-    * qualified by `alias`. Key-column and unknown-column assignment reject
-    * (Kudu cannot update a primary key either) — shared by UPDATE and
-    * MERGE's WHEN MATCHED UPDATE clause.
-    */
-  private def setProjection(name: String, schema: StructType, keys: Seq[String],
-      alias: String, sets: String, verb: String): String = {
-    val assigns = splitTopLevel(sets, ',').map { a =>
-      val eq = """(?is)^\s*(?:`?(\w+)`?\.)?`?(\w+)`?\s*=\s*(.+)$""".r
-      a match {
-        case eq(qual, c, e) =>
-          if (qual != null && qual != alias && qual != name)
-            throw new CatalogException(
-              s"$verb $name: SET targets must be target columns ($qual.$c)")
-          c.toLowerCase -> e.trim
-        case _ => throw new CatalogException(s"$verb $name: cannot parse SET $a")
-      }
-    }.toMap
-    assigns.keys.find(k => keys.exists(_.equalsIgnoreCase(k))).foreach { k =>
+  private def fullRow(verb: String, name: String, schema: StructType, keys: Seq[String],
+      assigns: Seq[(String, Expression)], rest: StructField => Expression): Seq[NamedExpression] = {
+    val byCol = assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
+    if (byCol.size < assigns.size)
+      throw new CatalogException(s"$verb $name: a column is assigned twice")
+    byCol.keys.find(k => keys.exists(_.equalsIgnoreCase(k))).foreach { k =>
       throw new CatalogException(
         s"$verb $name: cannot UPDATE key column $k (delete + insert instead)")
     }
-    assigns.keys.find(k => !schema.fieldNames.exists(_.equalsIgnoreCase(k))).foreach { k =>
-      throw new CatalogException(s"$verb $name: unknown SET column $k")
+    byCol.keys.find(k => !schema.fieldNames.exists(_.equalsIgnoreCase(k))).foreach { k =>
+      throw new CatalogException(s"$verb $name: unknown column $k")
     }
-    schema.fields.map { f =>
-      assigns.get(f.name.toLowerCase) match {
-        case Some(e) => s"CAST(($e) AS ${f.dataType.sql}) AS `${f.name}`"
-        case None    => s"`$alias`.`${f.name}` AS `${f.name}`"
-      }
-    }.mkString(", ")
+    schema.fields.toSeq.map { f =>
+      Alias(byCol.get(f.name.toLowerCase).fold(rest(f))(Cast(_, f.dataType)), f.name)()
+    }
   }
 
-  private val UpdateHead =
-    """(?is)^UPDATE\s+`?([\w.]+)`?\s+SET\s+(.+)$""".r
-  private val TopWhere = """(?i)\bWHERE\b""".r
+  /** An assignment's target column: bare, or qualified by the table's
+    * name or alias.
+    */
+  private def setColumn(verb: String, name: String, alias: String)(
+      a: Assignment): (String, Expression) = a.key match {
+    case UnresolvedAttribute(Seq(c)) => c -> a.value
+    case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(alias) || q.equalsIgnoreCase(name) =>
+      c -> a.value
+    case k => throw new CatalogException(s"$verb $name: SET targets must be target columns ($k)")
+  }
+
+  private def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    DatasetBridge.ofRows(spark, plan)
 
   /** `UPDATE t SET c = expr, … [WHERE cond]` — the remaining row-level DML
     * verb after DELETE and MERGE. Compiles onto the catalog's upsert: one
@@ -355,58 +412,17 @@ object GraftSql {
     * HiveKuduTableOutputFormat.java:155-312). Snapshot semantics are free —
     * the projection evaluates against the pre-update snapshot, nothing
     * mutates until the layer's atomic rename, so `SET a = b WHERE a < b`
-    * cannot observe itself. The SET/WHERE cut is [[topLevelMatches]]-anchored,
-    * so a `WHERE` inside a string literal, a subquery, or a CASE expression
-    * is SET content, not the predicate boundary.
+    * cannot observe itself.
     */
-  private def update(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case UpdateHead(name, setsAndWhere) if cat.exists(name) =>
-        registerViews(spark, cat)
-        val (sets, cond) = topLevelMatches(setsAndWhere, TopWhere).headOption match {
-          case Some(m) =>
-            (setsAndWhere.substring(0, m.start).trim,
-             Some(setsAndWhere.substring(m.end).trim))
-          case None => (setsAndWhere.trim, None)
-        }
-        val schema = cat.schemaOf(name)
-        val keys = cat.keyColsOf(name)
-        val proj = setProjection(name, schema, keys, name, sets, "UPDATE")
-        val w = cond.map(c => s" WHERE $c").getOrElse("")
-        val rows = spark.sql(s"SELECT $proj FROM `$name`$w")
-        val n = cat.upsert(name, rows)
-        registerViews(spark, cat)
-        status(spark, "UPDATE", name, n)
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
-
-  private val MergeHead =
-    """(?is)^MERGE\s+INTO\s+`?([\w.]+)`?(?:\s+AS\s+(\w+)|\s+(?!USING\b)(\w+))?\s+USING\s+(.*)$""".r
-  private val SourceAliasOn =
-    """(?is)^\s*(?:(?:AS\s+)?(?!ON\b)(\w+)\s+)?ON\s+(.*)$""".r
-  private val WhenSplit = """(?i)\bWHEN\s+(?:NOT\s+)?MATCHED\b""".r
-  private val TopThen = """(?i)\bTHEN\b""".r
-  private val ClauseHead =
-    """(?is)^WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\s+(.+))?$""".r
-  private val UpdateAction = """(?is)^UPDATE\s+SET\s+(.+)$""".r
-  private val InsertAction = """(?is)^INSERT\s+(.+)$""".r
-
-  /** A merge clause split at its top-level THEN: `matched`/optional guard
-    * from the head, the action verb text after. The THEN anchor comes from
-    * [[topLevelMatches]], so a THEN inside a guard's CASE expression, a
-    * parenthesized subquery, or a string literal cannot end the guard —
-    * the failure mode the old first-THEN regexes documented as a caveat.
-    */
-  private def parseMergeClause(name: String, c: String): (Boolean, Option[String], String) = {
-    val thenM = topLevelMatches(c, TopThen).headOption.getOrElse(
-      throw new CatalogException(s"MERGE INTO $name: clause has no THEN: $c"))
-    val action = c.substring(thenM.end).trim
-    c.substring(0, thenM.start).trim match {
-      case ClauseHead(not, guard) =>
-        (not == null, Option(guard).map(_.trim), action)
-      case head =>
-        throw new CatalogException(s"MERGE INTO $name: cannot parse clause: $head")
-    }
+  private def update(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      sets: Seq[Assignment], cond: Option[Expression]): DataFrame = {
+    registerViews(spark, cat)
+    val row = fullRow("UPDATE", name, cat.schemaOf(name), cat.keyColsOf(name),
+      sets.map(setColumn("UPDATE", name, name)), f => UnresolvedAttribute(Seq(name, f.name)))
+    val table = UnresolvedRelation(Seq(name))
+    val n = cat.upsert(name, frame(spark, Project(row, cond.fold[LogicalPlan](table)(Filter(_, table)))))
+    registerViews(spark, cat)
+    status(spark, "UPDATE", name, n)
   }
 
   /** `MERGE INTO t USING src ON cond WHEN …` — the one DML verb a Hive/Kudu
@@ -424,7 +440,9 @@ object GraftSql {
     *    rows (`INSERT *` by name, or a column list with VALUES; unlisted
     *    non-key columns land NULL), dup-ignored against the live key set.
     *
-    * All branches land in ONE delta layer via
+    * Each branch is one plan, `Project(row, Filter(guard ∧ ¬priors,
+    * Join(target, source, cond)))` (a left anti join for inserts), turned
+    * into a frame once. All branches land in ONE delta layer via
     * [[KuduLikeCatalog.applyChangeset]] — one evaluation job against the
     * pre-merge snapshot, one shuffle, one atomic layer commit.
     *
@@ -437,108 +455,53 @@ object GraftSql {
     * Several source rows hitting one target key resolve last-wins through
     * the catalog's in-batch dedup (standard SQL raises a cardinality error;
     * Kudu's upsert — the semantic this catalog mirrors — takes last-wins).
-    * Clause anchoring (WHEN/THEN cuts) is [[topLevelMatches]]-based: a
-    * `WHEN MATCHED` or `THEN` inside a string literal, a parenthesized
-    * subquery, or a guard's CASE expression is expression content, not a
-    * clause boundary.
     */
-  private def merge(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame = {
-    val m = MergeHead.findFirstMatchIn(stmt).getOrElse(
-      throw new CatalogException(s"cannot parse MERGE INTO: $stmt"))
-    val name = m.group(1)
-    if (!cat.exists(name)) { registerViews(spark, cat); return spark.sql(stmt) }
-    val tAlias = Option(m.group(2)).orElse(Option(m.group(3))).getOrElse(name)
-    val tail = m.group(4).trim
-    val (srcRef, srcName, afterSrc) =
-      if (tail.startsWith("(")) {
-        val (inner, end) = balancedParen(tail, 0)
-        (s"( $inner )", None, tail.substring(end))
-      } else {
-        val mm = """(?is)^`?([\w.]+)`?""".r.findFirstMatchIn(tail).getOrElse(
-          throw new CatalogException(s"MERGE INTO $name: cannot parse USING source"))
-        (s"`${mm.group(1)}`", Some(mm.group(1)), tail.substring(mm.end))
-      }
-    val am = SourceAliasOn.findFirstMatchIn(afterSrc).getOrElse(
-      throw new CatalogException(s"MERGE INTO $name: expected [AS alias] ON <condition>"))
-    val sAlias = Option(am.group(1)).orElse(srcName).getOrElse(
-      throw new CatalogException(s"MERGE INTO $name: a subquery source needs an alias"))
-    val rest = am.group(2)
-    val whenStarts = topLevelMatches(rest, WhenSplit).map(_.start)
-    if (whenStarts.isEmpty)
-      throw new CatalogException(s"MERGE INTO $name: no WHEN clauses")
-    val cond = rest.substring(0, whenStarts.head).trim
-    val clauses = (whenStarts :+ rest.length).sliding(2).map {
-      case List(a, b) => rest.substring(a, b).trim
-    }.toList
-
+  private def merge(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      m: MergeIntoTable): DataFrame = {
+    refuse("MERGE INTO", name,
+      "WHEN NOT MATCHED BY SOURCE" -> m.notMatchedBySourceActions.nonEmpty,
+      "WITH SCHEMA EVOLUTION" -> m.withSchemaEvolution)
     registerViews(spark, cat)
     val schema = cat.schemaOf(name)
     val keys = cat.keyColsOf(name)
-    val matchedFrom = s"FROM `$name` AS `$tAlias` JOIN $srcRef AS `$sAlias` ON $cond"
-    val antiFrom = s"FROM $srcRef AS `$sAlias` LEFT ANTI JOIN `$name` AS `$tAlias` ON $cond"
-    def where(cur: Option[String], priors: Seq[String]): String = {
-      val parts = cur.map(g => s"coalesce(($g), false)").toSeq ++
-        priors.map(g => s"NOT coalesce(($g), false)")
-      if (parts.isEmpty) "" else parts.mkString("WHERE ", " AND ", "")
+    val alias = m.targetTable match {
+      case SubqueryAlias(id, _) => id.name
+      case _ => name
     }
-
-    var matchedPriors = Vector.empty[String]
-    var notMatchedPriors = Vector.empty[String]
-    val actions: Seq[(String, DataFrame)] = clauses.map(parseMergeClause(name, _)).map {
-      case (true, guard, UpdateAction(sets)) =>
-        val proj = setProjection(name, schema, keys, tAlias, sets, "MERGE INTO")
-        val w = where(guard, matchedPriors)
-        matchedPriors :+= guard.getOrElse("true")
-        "update" -> spark.sql(s"SELECT $proj $matchedFrom $w")
-      case (true, guard, action) if action.equalsIgnoreCase("DELETE") =>
-        // full target row, not just keys: the matched join already holds
-        // the payload the tombstone must carry, so DELETE costs no second
-        // scan + semi-join against the table
-        val proj = schema.fields.map(f =>
-          s"`$tAlias`.`${f.name}` AS `${f.name}`").mkString(", ")
-        val w = where(guard, matchedPriors)
-        matchedPriors :+= guard.getOrElse("true")
-        "delete" -> spark.sql(s"SELECT $proj $matchedFrom $w")
-      case (false, guard, InsertAction(insSpec)) =>
-        val spec = insSpec.trim
-        val proj =
-          if (spec == "*")
-            schema.fields.map(f =>
-              s"CAST(`$sAlias`.`${f.name}` AS ${f.dataType.sql}) AS `${f.name}`")
-              .mkString(", ")
-          else {
-            if (!spec.startsWith("("))
-              throw new CatalogException(
-                s"MERGE INTO $name: INSERT expects * or (cols) VALUES (exprs)")
-            val (colsTxt, afterCols) = balancedParen(spec, 0)
-            val valsM = """(?is)^\s*VALUES\s*""".r.findFirstMatchIn(spec.substring(afterCols))
-              .getOrElse(throw new CatalogException(
-                s"MERGE INTO $name: INSERT (cols) needs VALUES (exprs)"))
-            val (valsTxt, _) = balancedParen(spec.substring(afterCols), valsM.end)
-            val cols = colsTxt.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
-            val exprs = splitTopLevel(valsTxt, ',').map(_.trim)
-            if (cols.length != exprs.length)
-              throw new CatalogException(
-                s"MERGE INTO $name: INSERT has ${cols.length} columns, ${exprs.length} values")
-            val byCol = cols.map(_.toLowerCase).zip(exprs).toMap
-            cols.find(c => !schema.fieldNames.exists(_.equalsIgnoreCase(c))).foreach { c =>
-              throw new CatalogException(s"MERGE INTO $name: unknown INSERT column $c")
-            }
-            schema.fields.map { f =>
-              byCol.get(f.name.toLowerCase) match {
-                case Some(e) => s"CAST(($e) AS ${f.dataType.sql}) AS `${f.name}`"
-                case None    => s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`"
-              }
-            }.mkString(", ")
-          }
-        val w = where(guard, notMatchedPriors)
-        notMatchedPriors :+= guard.getOrElse("true")
-        "insert" -> spark.sql(s"SELECT $proj $antiFrom $w")
-      case (matched, _, action) =>
-        throw new CatalogException(
-          s"MERGE INTO $name: WHEN ${if (matched) "MATCHED" else "NOT MATCHED"} " +
-            s"cannot take action: $action")
-    }
+    val table = SubqueryAlias(alias, UnresolvedRelation(Seq(name)))
+    val cond = Some(m.mergeCondition)
+    val matched = Join(table, m.sourceTable, Inner, cond, JoinHint.NONE)
+    val unmatched = Join(m.sourceTable, table, LeftAnti, cond, JoinHint.NONE)
+    val targetRow = (f: StructField) => UnresolvedAttribute(Seq(alias, f.name))
+    val nulls = (f: StructField) => Literal(null, f.dataType)
+    def isTrue(g: Expression): Expression = Coalesce(Seq(g, Literal(false)))
+    def branches(from: LogicalPlan, clauses: Seq[MergeAction]): Seq[(String, DataFrame)] =
+      clauses.indices.map { i =>
+        val (verb, row) = clauses(i) match {
+          case _: DeleteAction =>
+            // full target row, not just keys: the matched join already holds
+            // the payload the tombstone must carry, so DELETE costs no second
+            // scan + semi-join against the table
+            "delete" -> schema.fields.toSeq.map(f => Alias(targetRow(f), f.name)())
+          case UpdateAction(_, sets, _) =>
+            "update" -> fullRow("MERGE INTO", name, schema, keys,
+              sets.map(setColumn("MERGE INTO", name, alias)), targetRow)
+          case InsertAction(_, values) =>
+            "insert" -> fullRow("MERGE INTO", name, schema, Nil,
+              values.map(setColumn("MERGE INTO", name, alias)), nulls)
+          case _: InsertStarAction =>
+            // the anti join's output is the source's alone: names resolve there
+            "insert" -> fullRow("MERGE INTO", name, schema, Nil,
+              schema.fieldNames.toSeq.map(c => c -> UnresolvedAttribute.quoted(c)), nulls)
+          case _: UpdateStarAction =>
+            throw new CatalogException(
+              s"MERGE INTO $name: UPDATE SET * is not supported on a catalog table")
+        }
+        val guard = clauses(i).condition.map(isTrue).toSeq ++
+          clauses.take(i).map(p => Not(isTrue(p.condition.getOrElse(Literal(true)))))
+        verb -> frame(spark, Project(row, guard.reduceOption(And).fold(from)(Filter(_, from))))
+      }
+    val actions = branches(matched, m.matchedActions) ++ branches(unmatched, m.notMatchedActions)
 
     // Single-changeset application: every branch row-set lands in ONE
     // delta layer through [[KuduLikeCatalog.applyChangeset]]. One job
@@ -577,169 +540,38 @@ object GraftSql {
     status(spark, "MERGE INTO", name, total)
   }
 
-  /** Occurrences of keyword regex `kw` in `s` that sit at paren depth 0,
-    * CASE depth 0, and outside string literals — the anchor discipline the
-    * DML clause cuts (UPDATE's WHERE, MERGE's WHEN/THEN) need and a bare
-    * regex cannot enforce. Literal quoting rules match [[balancedParen]]:
-    * `''` and `\'` are content. CASE depth treats `CASE … END` as one
-    * opaque expression so its internal WHEN/THEN never read as clause
-    * keywords; a stray END outside any CASE is left to Spark's parser to
-    * reject in the compiled statement.
-    */
-  private def topLevelMatches(
-      s: String, kw: scala.util.matching.Regex): List[scala.util.matching.Regex.Match] = {
-    val all = kw.findAllMatchIn(s).toList
-    if (all.isEmpty) return Nil
-    val valid = new Array[Boolean](s.length)
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    def isToken(i: Int, w: String) =
-      s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + w.length >= s.length || !isWordChar(s.charAt(i + w.length)))
-    var depth = 0
-    var caseDepth = 0
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-          else inQuote = false
-        }
-      } else {
-        valid(i) = depth == 0 && caseDepth == 0
-        c match {
-          case '\'' => inQuote = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-            if (isToken(i, "CASE")) caseDepth += 1
-            else if (caseDepth > 0 && isToken(i, "END")) caseDepth -= 1
-        }
-      }
-      i += 1
-    }
-    all.filter(m => m.start < s.length && valid(m.start))
-  }
+  // ALTER TABLE t ADD|DROP RANGE PARTITION '<value>' | lo <= VALUES < hi
+  private val RangePartitionHead =
+    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+(ADD|DROP)\s+RANGE\s+PARTITION\s+(?:'([^']+)'|(-?\d+)\s*<=\s*VALUES\s*<\s*(-?\d+))$""".r
 
-  /** Split on `sep` at paren depth 0 outside string literals. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var inQuote = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-          else inQuote = false
-        }
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case `sep` if depth == 0 =>
-          out += s.substring(start, i)
-          start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
-  /** ALTER TABLE … ADD COLUMN(S) — online schema evolution (new column must
-    * be non-key, in the closed type set; lands nullable).
+  /** `ALTER TABLE t DROP RANGE PARTITION '<value>'` is Kudu's instant
+    * retention: one metadata write excludes the partition from every read;
+    * no rewrite, no tombstones. ADD re-opens a dropped range EMPTY without
+    * the O(table) compact (hardlink generation swap — KuduLikeCatalog).
+    * Kudu's bound-pair forms work on numeric-bounds range tables: ADD
+    * declares a new `lower <= VALUES < upper` range (or re-opens a dropped
+    * one); DROP excludes it after checking the pair matches the
+    * declaration.
     */
-  private def alter(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case AlterHead(name, colsDdl) if cat.exists(name) =>
-        val raw = colsDdl.trim
-        val inner = // optional wrapping parens: ADD COLUMNS (a int, b string)
-          if (raw.startsWith("(") && raw.endsWith(")")) raw.substring(1, raw.length - 1)
-          else raw
-        val fields = StructType.fromDDL(normalizeTypes(inner)).fields
-        cat.addColumns(name, fields.toSeq) // atomic: all-or-nothing
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE", name, fields.length.toLong)
-      // DROP COLUMN(S): metadata-only evolution; existing file bytes are
-      // reclaimed by the next compact (KuduLikeCatalog.dropColumn)
-      case AlterDropHead(name, colsTxt) if cat.exists(name) =>
-        val raw = colsTxt.trim
-        val inner =
-          if (raw.startsWith("(") && raw.endsWith(")")) raw.substring(1, raw.length - 1)
-          else raw
-        val cols = inner.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
-          .filter(_.nonEmpty).toSeq
-        cat.dropColumns(name, cols) // atomic: all-or-nothing
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE", name, cols.length.toLong)
-      // DROP RANGE PARTITION: Kudu's instant retention — one metadata write
-      // excludes the partition from every read; no rewrite, no tombstones
-      case AlterDropRangeHead(name, value) if cat.exists(name) =>
-        cat.dropRangePartition(name, value)
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE DROP RANGE PARTITION", name, 1L)
-      // ADD RANGE PARTITION: re-open a dropped range EMPTY without the
-      // O(table) compact (hardlink generation swap — KuduLikeCatalog)
-      case AlterAddRangeHead(name, value) if cat.exists(name) =>
-        cat.addRangePartition(name, value)
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE ADD RANGE PARTITION", name, 1L)
-      // Kudu bound-pair forms on numeric-bounds range tables: ADD declares
-      // a new `lower <= VALUES < upper` range (or re-opens a dropped one);
-      // DROP excludes it after validating the pair matches the declaration
-      case AlterAddRangeBoundsHead(name, lo, hi) if cat.exists(name) =>
-        cat.addRangePartitionBounds(name, lo.toLong, hi.toLong)
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE ADD RANGE PARTITION", name, 1L)
-      case AlterDropRangeBoundsHead(name, lo, hi) if cat.exists(name) =>
+  private def rangePartition(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      op: String, value: Option[String], lo: String, hi: String): DataFrame = {
+    (op, value) match {
+      case ("ADD", Some(v)) => cat.addRangePartition(name, v)
+      case ("DROP", Some(v)) => cat.dropRangePartition(name, v)
+      case ("ADD", None) => cat.addRangePartitionBounds(name, lo.toLong, hi.toLong)
+      case _ =>
         if (!cat.rangeBoundsOf(name).contains((lo.toLong, hi.toLong)))
           throw new CatalogException(
             s"DROP RANGE PARTITION $name: no declared range " +
-              s"[$lo,$hi) (have ${graft.catalog.KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))})")
+              s"[$lo,$hi) (have ${KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))})")
         cat.dropRangePartition(name, lo)
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE DROP RANGE PARTITION", name, 1L)
-      // RENAME COLUMN: the honest O(table) fold+rewrite (no field-ID
-      // indirection in this layout — KuduLikeCatalog.renameColumn)
-      case AlterRenameColHead(name, from, to) if cat.exists(name) =>
-        cat.renameColumn(name, from, to)
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE RENAME COLUMN", name, 1L)
-      // RENAME TO: one atomic directory move (metadata is path-relative)
-      case AlterRenameHead(name, newName) if cat.exists(name) =>
-        cat.renameTable(name, newName)
-        spark.catalog.dropTempView(name) // the old view must not linger
-        registerViews(spark, cat)
-        status(spark, "ALTER TABLE RENAME", newName, 0L)
-      case _ => spark.sql(stmt)
     }
+    registerViews(spark, cat)
+    status(spark, s"ALTER TABLE $op RANGE PARTITION", name, 1L)
+  }
 
-  private val AlterDropRangeHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+RANGE\s+PARTITION\s+'([^']+)'$""".r
-
-  private val AlterAddRangeHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+RANGE\s+PARTITION\s+'([^']+)'$""".r
-
-  // Kudu's own bound-pair syntax: ... RANGE PARTITION 0 <= VALUES < 1000
-  private val AlterAddRangeBoundsHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+RANGE\s+PARTITION\s+(-?\d+)\s*<=\s*VALUES\s*<\s*(-?\d+)$""".r
-
-  private val AlterDropRangeBoundsHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+RANGE\s+PARTITION\s+(-?\d+)\s*<=\s*VALUES\s*<\s*(-?\d+)$""".r
-
-  private val AlterRenameColHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+RENAME\s+COLUMN\s+`?(\w+)`?\s+TO\s+`?(\w+)`?$""".r
-
-  private val AlterRenameHead =
-    """(?is)^ALTER\s+TABLE\s+`?([\w.]+)`?\s+RENAME\s+TO\s+`?([\w.]+)`?$""".r
+  private val DescribeHistoryHead =
+    """(?is)^DESC(?:RIBE)?\s+HISTORY\s+`?([\w.]+)`?$""".r
 
   /** DESCRIBE [FORMATTED] <table> for catalog tables — the reference
     * transcript's step 2 (`describe formatted test_drop`, README.md:33 and
@@ -749,138 +581,61 @@ object GraftSql {
     * parameters, and the bucket/range partitioning. Non-catalog tables fall
     * through to Spark's own DESCRIBE.
     */
-  private val DescribeHistoryHead =
-    """(?is)^DESC(?:RIBE)?\s+HISTORY\s+`?([\w.]+)`?$""".r
-
-  private def describe(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      // `DESCRIBE HISTORY t` — version history for time travel (version,
-      // kind, committed_at, files, rows), straight off the catalog's
-      // footer-only metadata walk
-      case DescribeHistoryHead(name) if cat.exists(name) =>
-        cat.history(name)
-      case DescribeHead(fmt, name) if cat.exists(name) =>
-        import spark.implicits._
-        val schema = cat.schemaOf(name)
-        val keys = cat.keyColsOf(name)
-        val cols = schema.fields.toSeq.map { f =>
-          (f.name, f.dataType.simpleString,
-            if (keys.contains(f.name)) "primary key" else "")
-        }
-        val rows =
-          if (fmt == null) cols
-          else {
-            val buckets = cat.bucketsOf(name)
-            val range = cat.rangeColOf(name)
-            cols ++ Seq(
-              ("", "", ""),
-              ("# Detailed Table Information", "", ""),
-              ("Location:", cat.location(name), ""),
-              ("Table Type:", "MANAGED_TABLE", ""),
-              ("Table Parameters:", "", ""),
-              ("", "kudu.table_name", name),
-              ("", "kudu.key_columns", keys.mkString(",")),
-              ("", "storage_handler", "graft.catalog.KuduLikeCatalog")) ++
-              (if (buckets > 0) Seq(("", "graft.hash_buckets", buckets.toString)) else Nil) ++
-              (if (buckets > 0 && cat.hashColsOf(name) != cat.keyColsOf(name))
-                 Seq(("", "graft.hash_columns", cat.hashColsOf(name).mkString(",")))
-               else Nil) ++
-              range.map { rc =>
-                val subs = cat.rangeSubColsOf(name)
-                if (subs.isEmpty) ("", "graft.range_column", rc)
-                else ("", "graft.range_columns", (rc +: subs).mkString(","))
-              }.toSeq ++
-              cat.zoneOf(name).map(z => ("", "graft.range_zone", z)).toSeq ++
-              (if (cat.rangeBoundsOf(name).nonEmpty)
-                 Seq(("", "graft.range_bounds",
-                   graft.catalog.KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))))
-               else Nil) ++
-              (if (cat.bloomColsOf(name).nonEmpty)
-                 Seq(("", "graft.bloom_columns", cat.bloomColsOf(name).mkString(",")))
-               else Nil) ++
-              Seq(
-                ("", "", ""),
-                ("# Storage Information", "", ""),
-                ("Num Buckets:", if (buckets > 0) buckets.toString else "-1", ""),
-                ("Bucket Columns:",
-                  if (buckets > 0) keys.mkString("[", ", ", "]") else "[]", "")) ++
-              // Hive surfaces numRows under Table Parameters after ANALYZE;
-              // shown here only while the record is provably fresh
-              cat.statsOf(name).toSeq.flatMap(st => Seq(
-                ("", "", ""),
-                ("# Statistics (ANALYZE)", "", ""),
-                ("", "numRows", st.numRows.toString),
-                ("", "analyzedAtVersion", st.analyzedAtVersion.toString)))
-          }
-        rows.toDF("col_name", "data_type", "comment")
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
-
-  /** The reference maps CHAR/VARCHAR onto plain STRING
-    * (HiveKuduBridgeUtils.java:38-44) — one normalization shared by
-    * CREATE and ALTER so the two can never accept different column DDL.
-    */
-  private def normalizeTypes(ddl: String): String = ddl
-    .replaceAll("(?i)\\bvarchar\\s*\\(\\s*\\d+\\s*\\)", "string")
-    .replaceAll("(?i)\\bchar\\s*\\(\\s*\\d+\\s*\\)", "string")
-
-  /** Substring inside the balanced paren at `open` (quote-aware) and the
-    * index just past its close. Inside a literal, a doubled `''` and a
-    * backslash-escaped `\'` are CONTENT, not a closing quote — otherwise
-    * `('it''s')` would flip the quote state and mis-track the parens.
-    */
-  private def balancedParen(s: String, open: Int): (String, Int) = {
-    var depth = 0
-    var i = open
-    var inQuote = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1 // escaped next char (incl. \') is literal
-        else if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1 // '' literal
-          else inQuote = false
-        }
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return (s.substring(open + 1, i), i + 1)
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new CatalogException(s"unbalanced parentheses in: $s")
-  }
-
-  private def tblProperties(tail: String): Map[String, String] =
-    "(?i)TBLPROPERTIES".r.findFirstMatchIn(tail) match {
-      case Some(kw) =>
-        val open = tail.indexOf('(', kw.end)
-        if (open < 0) Map.empty
-        else {
-          val (blob, _) = balancedParen(tail, open)
-          """'([^']+)'\s*=\s*'([^']*)'""".r.findAllMatchIn(blob)
-            .map(p => p.group(1) -> p.group(2)).toMap
-        }
-      case None => Map.empty
-    }
-
-  private val ShowPartitionsHead =
-    """(?is)^SHOW\s+PARTITIONS\s+`?([\w.]+)`?$""".r
-  private val ShowCreateHead =
-    """(?is)^SHOW\s+CREATE\s+TABLE\s+`?([\w.]+)`?$""".r
-  private val TruncateHead =
-    """(?is)^TRUNCATE\s+TABLE\s+`?([\w.]+)`?$""".r
-
-  /** Bare `SHOW TABLES`: the catalog's table list in Hive's one-column
-    * shape. Namespaced forms (`SHOW TABLES IN ns`) fall through to Spark,
-    * where the `graftsql` TableCatalog plugin answers for its namespace.
-    */
-  private def showTables(spark: SparkSession, cat: KuduLikeCatalog): DataFrame = {
+  private def describe(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      formatted: Boolean): DataFrame = {
     import spark.implicits._
-    cat.tableNames.sorted.toDF("tab_name")
+    val schema = cat.schemaOf(name)
+    val keys = cat.keyColsOf(name)
+    val cols = schema.fields.toSeq.map { f =>
+      (f.name, f.dataType.simpleString,
+        if (keys.contains(f.name)) "primary key" else "")
+    }
+    val rows =
+      if (!formatted) cols
+      else {
+        val buckets = cat.bucketsOf(name)
+        val range = cat.rangeColOf(name)
+        cols ++ Seq(
+          ("", "", ""),
+          ("# Detailed Table Information", "", ""),
+          ("Location:", cat.location(name), ""),
+          ("Table Type:", "MANAGED_TABLE", ""),
+          ("Table Parameters:", "", ""),
+          ("", "kudu.table_name", name),
+          ("", "kudu.key_columns", keys.mkString(",")),
+          ("", "storage_handler", "graft.catalog.KuduLikeCatalog")) ++
+          (if (buckets > 0) Seq(("", "graft.hash_buckets", buckets.toString)) else Nil) ++
+          (if (buckets > 0 && cat.hashColsOf(name) != cat.keyColsOf(name))
+             Seq(("", "graft.hash_columns", cat.hashColsOf(name).mkString(",")))
+           else Nil) ++
+          range.map { rc =>
+            val subs = cat.rangeSubColsOf(name)
+            if (subs.isEmpty) ("", "graft.range_column", rc)
+            else ("", "graft.range_columns", (rc +: subs).mkString(","))
+          }.toSeq ++
+          cat.zoneOf(name).map(z => ("", "graft.range_zone", z)).toSeq ++
+          (if (cat.rangeBoundsOf(name).nonEmpty)
+             Seq(("", "graft.range_bounds",
+               KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))))
+           else Nil) ++
+          (if (cat.bloomColsOf(name).nonEmpty)
+             Seq(("", "graft.bloom_columns", cat.bloomColsOf(name).mkString(",")))
+           else Nil) ++
+          Seq(
+            ("", "", ""),
+            ("# Storage Information", "", ""),
+            ("Num Buckets:", if (buckets > 0) buckets.toString else "-1", ""),
+            ("Bucket Columns:",
+              if (buckets > 0) keys.mkString("[", ", ", "]") else "[]", "")) ++
+          // Hive surfaces numRows under Table Parameters after ANALYZE;
+          // shown here only while the record is provably fresh
+          cat.statsOf(name).toSeq.flatMap(st => Seq(
+            ("", "", ""),
+            ("# Statistics (ANALYZE)", "", ""),
+            ("", "numRows", st.numRows.toString),
+            ("", "analyzedAtVersion", st.analyzedAtVersion.toString)))
+      }
+    rows.toDF("col_name", "data_type", "comment")
   }
 
   /** `SHOW PARTITIONS t` — Hive's partition listing over the range+bucket
@@ -890,60 +645,54 @@ object GraftSql {
     * would read as "partitioned but empty". Metadata-only: lists the
     * manifest-live base directory, never opens data.
     */
-  private def showPartitions(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case ShowPartitionsHead(name) if cat.exists(name) =>
-        import spark.implicits._
-        if (cat.bucketsOf(name) == 0 && cat.rangeColOf(name).isEmpty)
-          throw new CatalogException(
-            s"SHOW PARTITIONS $name: table is not partitioned (no buckets, no range column)")
-        cat.partitionsOf(name).toDF("partition")
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
+  private def showPartitions(spark: SparkSession, cat: KuduLikeCatalog, name: String): DataFrame = {
+    import spark.implicits._
+    if (cat.bucketsOf(name) == 0 && cat.rangeColOf(name).isEmpty)
+      throw new CatalogException(
+        s"SHOW PARTITIONS $name: table is not partitioned (no buckets, no range column)")
+    cat.partitionsOf(name).toDF("partition")
+  }
 
   /** `SHOW CREATE TABLE t` — reconstructs DDL in the reference's dialect
     * (STORED BY + TBLPROPERTIES, README.md:22-31) that ROUND-TRIPS through
-    * [[create]]: executing the emitted statement yields a table with the
+    * [[execute]]: executing the emitted statement yields a table with the
     * same schema, keys, buckets, and range column.
     */
-  private def showCreate(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case ShowCreateHead(name) if cat.exists(name) =>
-        import spark.implicits._
-        val keys = cat.keyColsOf(name)
-        val cols = cat.schemaOf(name).fields
-          .map(f => s"  `${f.name}` ${f.dataType.sql}").mkString(",\n")
-        val buckets = cat.bucketsOf(name)
-        val props =
-          Seq(s"'kudu.key_columns' = '${keys.mkString(",")}'") ++
-          (if (buckets > 0) Seq(s"'graft.hash_buckets' = '$buckets'") else Nil) ++
-          (if (buckets > 0 && cat.hashColsOf(name) != cat.keyColsOf(name))
-             Seq(s"'graft.hash_columns' = '${cat.hashColsOf(name).mkString(",")}'")
-           else Nil) ++
-          cat.rangeColOf(name).map { rc =>
-            val subs = cat.rangeSubColsOf(name)
-            if (subs.isEmpty) s"'graft.range_column' = '$rc'"
-            else s"'graft.range_columns' = '${(rc +: subs).mkString(",")}'"
-          } ++
-          (if (cat.rangeColOf(name).isDefined && cat.rangeBoundsOf(name).isEmpty &&
-               cat.rangeGranularityOf(name) != "month")
-             Seq(s"'graft.range_granularity' = '${cat.rangeGranularityOf(name)}'")
-           else Nil) ++
-          (if (cat.rangeBoundsOf(name).nonEmpty)
-             Seq(s"'graft.range_bounds' = '${graft.catalog.KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))}'")
-           else Nil) ++
-          (if (cat.bloomColsOf(name).nonEmpty)
-             Seq(s"'graft.bloom_columns' = '${cat.bloomColsOf(name).mkString(",")}'")
-           else Nil)
-        val ddl =
-          s"""CREATE TABLE `$name` (
-             |$cols)
-             |STORED BY 'graft.catalog.KuduLikeCatalog'
-             |TBLPROPERTIES (
-             |  ${props.mkString(",\n  ")})""".stripMargin
-        Seq(ddl).toDF("createtab_stmt")
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
+  private def showCreate(spark: SparkSession, cat: KuduLikeCatalog, name: String): DataFrame = {
+    import spark.implicits._
+    val keys = cat.keyColsOf(name)
+    val cols = cat.schemaOf(name).fields
+      .map(f => s"  `${f.name}` ${f.dataType.sql}").mkString(",\n")
+    val buckets = cat.bucketsOf(name)
+    val props =
+      Seq(s"'kudu.key_columns' = '${keys.mkString(",")}'") ++
+      (if (buckets > 0) Seq(s"'graft.hash_buckets' = '$buckets'") else Nil) ++
+      (if (buckets > 0 && cat.hashColsOf(name) != cat.keyColsOf(name))
+         Seq(s"'graft.hash_columns' = '${cat.hashColsOf(name).mkString(",")}'")
+       else Nil) ++
+      cat.rangeColOf(name).map { rc =>
+        val subs = cat.rangeSubColsOf(name)
+        if (subs.isEmpty) s"'graft.range_column' = '$rc'"
+        else s"'graft.range_columns' = '${(rc +: subs).mkString(",")}'"
+      } ++
+      (if (cat.rangeColOf(name).isDefined && cat.rangeBoundsOf(name).isEmpty &&
+           cat.rangeGranularityOf(name) != "month")
+         Seq(s"'graft.range_granularity' = '${cat.rangeGranularityOf(name)}'")
+       else Nil) ++
+      (if (cat.rangeBoundsOf(name).nonEmpty)
+         Seq(s"'graft.range_bounds' = '${KuduLikeCatalog.encodeBounds(cat.rangeBoundsOf(name))}'")
+       else Nil) ++
+      (if (cat.bloomColsOf(name).nonEmpty)
+         Seq(s"'graft.bloom_columns' = '${cat.bloomColsOf(name).mkString(",")}'")
+       else Nil)
+    val ddl =
+      s"""CREATE TABLE `$name` (
+         |$cols)
+         |STORED BY 'graft.catalog.KuduLikeCatalog'
+         |TBLPROPERTIES (
+         |  ${props.mkString(",\n  ")})""".stripMargin
+    Seq(ddl).toDF("createtab_stmt")
+  }
 
   /** `TRUNCATE TABLE t` — an atomic empty overwrite: schema, keys, and
     * layout survive; readers see the full old state until the one-swap
@@ -951,39 +700,31 @@ object GraftSql {
     * [[KuduLikeCatalog.overwrite]]). Delta layers are floored away by the
     * same commit, so no pre-truncate mutation can resurface.
     */
-  private def truncate(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case TruncateHead(name) if cat.exists(name) =>
-        val empty = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          cat.schemaOf(name))
-        cat.overwrite(name, empty)
-        registerViews(spark, cat)
-        status(spark, "TRUNCATE TABLE", name, 0L)
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
+  private def truncate(spark: SparkSession, cat: KuduLikeCatalog, name: String): DataFrame = {
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), cat.schemaOf(name))
+    cat.overwrite(name, empty)
+    registerViews(spark, cat)
+    status(spark, "TRUNCATE TABLE", name, 0L)
+  }
 
   private def status(spark: SparkSession, op: String, table: String, rows: Long): DataFrame = {
     import spark.implicits._
     Seq((op, table, rows)).toDF("operation", "table", "rows")
   }
 
-  private val VacuumHead = """(?is)^VACUUM\s+`?([\w.]+)`?$""".r
+  // A malformed form of a verb Spark's grammar lacks: the catalog's error,
+  // not Spark's syntax error at the verb
+  private val CatalogVerb = """(?is)^(OPTIMIZE|VACUUM|RESTORE|SHOW\s+COLUMN\s+STATS)\b.*""".r
+
+  // `SHOW LITTER` lists and `VACUUM LITTER` sweeps orphaned job litter
+  private val LitterHead = """(?i)^(SHOW|VACUUM)\s+LITTER$""".r
 
   /** `VACUUM t`: reclaim manifest-unreferenced storage (displaced base
     * generation + floored delta layers) — cuts the one-cycle snapshot
     * grace, so it is an explicit operator verb.
     */
-  private def vacuum(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case VacuumHead(name) =>
-        cat.vacuum(name)
-        status(spark, "VACUUM", name, 0L)
-      case _ => throw new CatalogException(s"cannot parse VACUUM: $stmt")
-    }
-
-  private val CloneHead =
-    """(?is)^CREATE\s+TABLE\s+`?([\w.]+)`?\s+CLONE\s+`?([\w.]+)`?(?:\s+VERSION\s+AS\s+OF\s+(\d+))?$""".r
+  private val VacuumHead = """(?is)^VACUUM\s+`?([\w.]+)`?$""".r
 
   /** `CREATE TABLE dst CLONE src [VERSION AS OF v]` — the zero-copy
     * snapshot-clone verb (Delta SHALLOW CLONE's shape, hardlink-backed
@@ -991,31 +732,14 @@ object GraftSql {
     * branch to a mutation version — time travel materialized as a
     * writable table.
     */
-  private def cloneTable(spark: SparkSession, cat: KuduLikeCatalog,
-      stmt: String): DataFrame =
-    stmt match {
-      case CloneHead(dst, src, v) =>
-        cat.cloneTable(src, dst, Option(v).map(_.toInt))
-        status(spark, "CREATE TABLE CLONE", dst, 0L)
-      case _ => throw new CatalogException(s"cannot parse CLONE: $stmt")
-    }
-
-  private val RestoreHead =
-    """(?is)^RESTORE\s+TABLE\s+`?([\w.]+)`?\s+VERSION\s+AS\s+OF\s+(\d+)$""".r
+  private val CloneHead =
+    """(?is)^CREATE\s+TABLE\s+`?([\w.]+)`?\s+CLONE\s+`?([\w.]+)`?(?:\s+VERSION\s+AS\s+OF\s+(\d+))?$""".r
 
   /** `RESTORE TABLE t VERSION AS OF v` — in-place history truncation (the
     * write-back face of time travel; see [[KuduLikeCatalog.restoreTable]]).
     */
-  private def restoreTable(spark: SparkSession, cat: KuduLikeCatalog,
-      stmt: String): DataFrame =
-    stmt match {
-      case RestoreHead(name, v) =>
-        status(spark, "RESTORE TABLE", name, cat.restoreTable(name, v.toInt))
-      case _ => throw new CatalogException(s"cannot parse RESTORE: $stmt")
-    }
-
-  private val AnalyzeHead =
-    """(?is)^ANALYZE\s+TABLE\s+`?([\w.]+)`?\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+ALL\s+COLUMNS)?(\s+WITH\s+HISTOGRAM)?$""".r
+  private val RestoreHead =
+    """(?is)^RESTORE\s+TABLE\s+`?([\w.]+)`?\s+VERSION\s+AS\s+OF\s+(\d+)$""".r
 
   /** `ANALYZE TABLE t COMPUTE STATISTICS [FOR ALL COLUMNS] [WITH
     * HISTOGRAM]` — the Hive/Impala stats verb (Impala's COMPUTE STATS is
@@ -1027,13 +751,8 @@ object GraftSql {
     * CBO through the connector until the next mutation stales it
     * ([[KuduLikeCatalog.analyze]]).
     */
-  private def analyzeTable(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case AnalyzeHead(name, hist) if cat.exists(name) =>
-        val st = cat.analyze(name, withHistogram = hist != null)
-        status(spark, "ANALYZE TABLE", name, st.numRows)
-      case _ => { registerViews(spark, cat); spark.sql(stmt) }
-    }
+  private val AnalyzeHead =
+    """(?is)^ANALYZE\s+TABLE\s+`?([\w.]+)`?\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+ALL\s+COLUMNS)?(\s+WITH\s+HISTOGRAM)?$""".r
 
   private val ShowColStatsHead =
     """(?is)^SHOW\s+COLUMN\s+STATS\s+`?([\w.]+)`?$""".r
@@ -1046,30 +765,25 @@ object GraftSql {
     * from before a mutation is exactly what the fingerprint discipline
     * is there to prevent.
     */
-  private def showColumnStats(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case ShowColStatsHead(name) if cat.exists(name) =>
-        val rec = cat.statsOf(name).getOrElse(throw new CatalogException(
-          s"SHOW COLUMN STATS $name: no fresh statistics — run " +
-            s"ANALYZE TABLE $name COMPUTE STATISTICS (the table has been " +
-            "mutated or altered since the last analyze, or never analyzed)"))
-        val schema = cat.schemaOf(name)
-        val rows = schema.fields.toSeq.flatMap { f =>
-          rec.cols.get(f.name).map { cs =>
-            (f.name, f.dataType.simpleString, cs.ndv, cs.nullCount,
-              cs.min.getOrElse(""), cs.max.getOrElse(""),
-              cs.avgLen.map(_.toString).getOrElse(""),
-              cs.maxLen.map(_.toString).getOrElse(""))
-          }
-        }
-        import spark.implicits._
-        rows.toDF("column", "type", "ndv", "nulls", "min_internal",
-          "max_internal", "avg_len", "max_len")
-      case ShowColStatsHead(name) =>
-        throw new CatalogException(s"SHOW COLUMN STATS $name: table does not exist")
-      case _ =>
-        throw new CatalogException(s"cannot parse SHOW COLUMN STATS: $stmt")
+  private def showColumnStats(spark: SparkSession, cat: KuduLikeCatalog, name: String): DataFrame = {
+    if (!cat.exists(name))
+      throw new CatalogException(s"SHOW COLUMN STATS $name: table does not exist")
+    val rec = cat.statsOf(name).getOrElse(throw new CatalogException(
+      s"SHOW COLUMN STATS $name: no fresh statistics — run " +
+        s"ANALYZE TABLE $name COMPUTE STATISTICS (the table has been " +
+        "mutated or altered since the last analyze, or never analyzed)"))
+    val rows = cat.schemaOf(name).fields.toSeq.flatMap { f =>
+      rec.cols.get(f.name).map { cs =>
+        (f.name, f.dataType.simpleString, cs.ndv, cs.nullCount,
+          cs.min.getOrElse(""), cs.max.getOrElse(""),
+          cs.avgLen.map(_.toString).getOrElse(""),
+          cs.maxLen.map(_.toString).getOrElse(""))
+      }
     }
+    import spark.implicits._
+    rows.toDF("column", "type", "ndv", "nulls", "min_internal",
+      "max_internal", "avg_len", "max_len")
+  }
 
   private val OptimizeHead =
     """(?is)^OPTIMIZE\s+`?([\w.]+)`?(?:\s+(INCREMENTAL)|\s+ZORDER\s+BY\s*\(\s*([\w\s,`]+?)\s*\))?$""".r
@@ -1082,28 +796,24 @@ object GraftSql {
     * linear cluster column routes to plain clustered compaction (z-order
     * of one dimension IS a sort).
     */
-  private def optimize(spark: SparkSession, cat: KuduLikeCatalog, stmt: String): DataFrame =
-    stmt match {
-      case OptimizeHead(name, incremental, cols) =>
-        if (!cat.exists(name))
-          throw new CatalogException(s"OPTIMIZE $name: table does not exist")
-        val zorder = Option(cols).map(
-          _.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq)
-          .getOrElse(Seq.empty)
-        if (incremental != null) cat.compactIncremental(name)
-        else zorder match {
-          case Seq() => cat.compact(name)
-          case Seq(one) => cat.compact(name, Seq(one))
-          case many => cat.compactZOrdered(name, many)
-        }
-        registerViews(spark, cat)
-        val verb =
-          if (incremental != null) "OPTIMIZE INCREMENTAL"
-          else if (zorder.size >= 2) "OPTIMIZE ZORDER"
-          else "OPTIMIZE"
-        status(spark, verb, name, 0L)
-      case _ =>
-        throw new CatalogException(
-          s"cannot parse OPTIMIZE (expected: OPTIMIZE t [INCREMENTAL | ZORDER BY (c1, c2…)]): $stmt")
+  private def optimize(spark: SparkSession, cat: KuduLikeCatalog, name: String,
+      incremental: String, cols: String): DataFrame = {
+    if (!cat.exists(name))
+      throw new CatalogException(s"OPTIMIZE $name: table does not exist")
+    val zorder = Option(cols).map(
+      _.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq)
+      .getOrElse(Seq.empty)
+    if (incremental != null) cat.compactIncremental(name)
+    else zorder match {
+      case Seq() => cat.compact(name)
+      case Seq(one) => cat.compact(name, Seq(one))
+      case many => cat.compactZOrdered(name, many)
     }
+    registerViews(spark, cat)
+    val verb =
+      if (incremental != null) "OPTIMIZE INCREMENTAL"
+      else if (zorder.size >= 2) "OPTIMIZE ZORDER"
+      else "OPTIMIZE"
+    status(spark, verb, name, 0L)
+  }
 }

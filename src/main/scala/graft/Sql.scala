@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+
 /** Ad-hoc SQL runner over the fixture tables and the keyed-table catalog —
   * the analog of the Hive CLI session in the reference's demo
   * (reference: README.md:46-218).
   *
   * `tools/graft.sh Sql <sfDir> "<sql>[; <sql>…]"` — registers every fixture
   * table as a view plus the graft SQL functions, then executes each
-  * statement through [[GraftSql]]: catalog DDL/DML (`CREATE TABLE … STORED
-  * BY … TBLPROPERTIES('kudu.key_columns'=…)`, `INSERT INTO`, `UPSERT INTO`,
-  * `DELETE FROM`, `DROP TABLE`) routes to the [[graft.catalog.KuduLikeCatalog]]
-  * rooted at `$GRAFT_CATALOG_ROOT` (default `/tmp/graft_catalog`); anything
+  * statement through [[GraftSql]]: Spark parses it, and a plan that names
+  * a table of the [[graft.catalog.KuduLikeCatalog]] rooted at
+  * `$GRAFT_CATALOG_ROOT` (default `/tmp/graft_catalog`) routes there
+  * (`CREATE TABLE … STORED BY … TBLPROPERTIES('kudu.key_columns'=…)`,
+  * `INSERT INTO`, `UPSERT INTO`, `DELETE FROM`, `DROP TABLE`, …); anything
   * else runs as plain Spark SQL with the catalog tables in scope as views.
   */
 object Sql {
@@ -28,29 +31,16 @@ object Sql {
     spark.stop()
   }
 
-  /** Split on `;` outside single-quoted literals (a `';'` inside a string
-    * constant must not end the statement). Escaped quotes inside a literal —
-    * the SQL-standard doubled `''` and backslash `\'` — are content, so
-    * `VALUES (1, 'it''s; x')` stays one statement.
+  /** Split on the `;` tokens of Spark's own lexer, so a `;` inside a
+    * literal (single- or double-quoted, with `''` or `\'` escapes) or a
+    * comment never ends a statement. Each statement runs from its first
+    * token to its last; empty statements are dropped.
     */
   private[graft] def splitStatements(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\' && i + 1 < s.length) { cur.append(c).append(s.charAt(i + 1)); i += 1 }
-        else if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') {
-          cur.append("''"); i += 1
-        } else { if (c == '\'') inQuote = false; cur.append(c) }
-      } else if (c == '\'') { inQuote = true; cur.append(c) }
-      else if (c == ';') { out += cur.toString; cur.clear() }
-      else cur.append(c)
-      i += 1
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+    val toks = GraftSql.tokens(s)
+    val cuts = -1 +: toks.indices.filter(toks(_).getType == SqlBaseLexer.SEMICOLON) :+ toks.length
+    cuts.sliding(2).collect { case Seq(a, b) if b - a > 1 =>
+      s.substring(toks(a + 1).getStartIndex, toks(b - 1).getStopIndex + 1)
+    }.toSeq
   }
 }

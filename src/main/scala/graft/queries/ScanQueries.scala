@@ -470,7 +470,8 @@ object ScanQueries {
           .orderBy("version", "doc_id")
       }),
 
-    // SQL MERGE INTO through the dialect router (GraftSql.merge): one
+    // SQL MERGE INTO through GraftSql, which routes Spark's parsed
+    // MergeIntoTable to the catalog, each WHEN branch one plan: one
     // statement drives all three branches — guarded DELETE, UPDATE SET,
     // INSERT * — against a CTAS-loaded keyed table. The oracle reproduces
     // the post-merge state algebraically over the source table, so clause
@@ -529,9 +530,10 @@ object ScanQueries {
         cat.table("docs_m").orderBy("doc_id")
       }),
 
-    // SQL UPDATE through the dialect router (GraftSql.update): assignments
-    // evaluate against the pre-update snapshot with declared-type casts and
-    // land as one upsert delta layer. The oracle reproduces the post-update
+    // SQL UPDATE through GraftSql, which routes Spark's parsed UpdateTable
+    // to the catalog as one projection plan: assignments evaluate against
+    // the pre-update snapshot with declared-type casts and land as one
+    // upsert delta layer. The oracle reproduces the post-update
     // state algebraically, so the WHERE slice, the expression evaluation,
     // and the untouched remainder are all hash-gated.
     QDef("s19_update",

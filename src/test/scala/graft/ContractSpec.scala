@@ -99,4 +99,12 @@ class ContractSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, s"file-cached ImageIO calls: ${offenders.mkString(", ")}")
   }
+
+  test("GraftSql builds no SQL text from statement fragments") {
+    // Spark parses each statement; GraftSql routes the plan and builds the
+    // catalog's frames from its nodes, so no cut of the text is re-spliced
+    // into a new statement
+    val (_, text) = mainSources.find(_._1 == "GraftSql.scala").get
+    assert(!text.contains("spark.sql(s\""), "GraftSql.scala splices SQL text into spark.sql")
+  }
 }

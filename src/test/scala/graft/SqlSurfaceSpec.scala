@@ -177,6 +177,58 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(rows(2) === "x THEN y")
     assert(rows(9) === "WHEN NOT MATCHED")
     assert(cat.table("q").where("id = 9").head().getInt(1) === 9)
+    def a(id: Int) = cat.table("q").where(s"id = $id").head().getInt(1)
+    // a WHERE inside a line comment is not the predicate
+    sql("UPDATE q SET a = 7 -- not WHERE id = 2\nWHERE id = 3")
+    assert((a(2), a(3)) === (20, 7))
+    // a double-quoted literal is a literal: its WHERE is content
+    assert(sql("""UPDATE q SET tag = "a WHERE b" WHERE id = 1""").head().getLong(2) === 1L)
+    assert(cat.table("q").where("tag = 'a WHERE b'").collect().map(_.getInt(0)).toSeq === Seq(1))
+    // nor is a WHERE inside a block comment
+    sql("UPDATE q SET a = 5 /* WHERE id = 1 */ WHERE id = 2")
+    assert((a(1), a(2)) === (-1, 5))
+    // a commented-out clause is no clause
+    sql("""MERGE INTO q USING (SELECT * FROM VALUES (3, 30) AS v(id, n)) AS s
+          |ON q.id = s.id
+          |-- WHEN MATCHED THEN DELETE is not wanted here
+          |WHEN MATCHED THEN UPDATE SET a = s.n
+          |""".stripMargin)
+    assert(a(3) === 30)
+    // a comment between table and WHERE still leaves a catalog DELETE
+    assert(sql("DELETE FROM q -- all of it?\nWHERE id = 3").head().getLong(2) === 1L)
+    assert(cat.table("q").orderBy("id").collect().map(r => r.getInt(0) -> r.getInt(1)).toSeq
+      === Seq(1 -> -1, 2 -> 5, 9 -> 9))
+  }
+
+  test("INSERT INTO t (cols) maps by name; clauses the catalog lacks are refused by name") {
+    val (cat, sql) = fresh()
+    sql("""CREATE TABLE n (id INT, a INT, tag STRING)
+          |TBLPROPERTIES('kudu.key_columns'='id')""".stripMargin)
+    // listed columns land by name, in any order, cast to the declared
+    // type; unlisted columns land NULL (MERGE's INSERT (cols) rule)
+    assert(sql("INSERT INTO n (tag, id) VALUES ('x', 1), ('y', 2L)").head().getLong(2) === 2L)
+    assert(sql("UPSERT INTO n (id, a) VALUES (2, 20)").head().getString(0) === "UPSERT INTO")
+    def state() = cat.table("n").orderBy("id").collect()
+      .map(r => (r.getInt(0), Option(r.get(1)), Option(r.getString(2)))).toSeq
+    val expected = Seq((1, None, Some("x")), (2, Some(20), None))
+    assert(state() === expected)
+    // an unknown column, or a column list the query does not fill, lands nothing
+    intercept[CatalogException](sql("INSERT INTO n (id, nope) VALUES (3, 1)"))
+    intercept[CatalogException](sql("INSERT INTO n (id, a) VALUES (3, 1, 'z')"))
+    // what the parser reports and the catalog does not implement is
+    // refused by name, never dropped
+    def refused(stmt: String, clause: String): Unit = {
+      val e = intercept[CatalogException](sql(stmt))
+      assert(e.getMessage.contains(clause), e.getMessage)
+    }
+    refused("INSERT INTO n PARTITION (a = 1) VALUES (3, 'z')", "PARTITION")
+    refused("INSERT OVERWRITE TABLE n PARTITION (a = 1) IF NOT EXISTS SELECT 3, 'z'",
+      "IF NOT EXISTS")
+    refused("""MERGE INTO n USING (SELECT 1 AS id) AS s ON n.id = s.id
+              |WHEN MATCHED THEN DELETE
+              |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin,
+      "WHEN NOT MATCHED BY SOURCE")
+    assert(state() === expected)
   }
 
   test("INSERT INTO … SELECT reads other views, casts positionally") {
@@ -336,6 +388,14 @@ class SqlSurfaceSpec extends SparkSpec {
       === Seq("SELECT 1", "SELECT 'a;b'", "SELECT 2"))
     assert(Sql.splitStatements("INSERT INTO t VALUES (1, ';')")
       === Seq("INSERT INTO t VALUES (1, ';')"))
+    // double quotes and comments hide semicolons too; escaped quotes stay
+    // inside their literal
+    assert(Sql.splitStatements("SELECT \"a;b\"; SELECT 1") === Seq("SELECT \"a;b\"", "SELECT 1"))
+    assert(Sql.splitStatements("SELECT 1 -- c;d\n; SELECT 'x;y'")
+      === Seq("SELECT 1", "SELECT 'x;y'"))
+    assert(Sql.splitStatements("SELECT /* ; */ 2") === Seq("SELECT /* ; */ 2"))
+    assert(Sql.splitStatements("VALUES ('it''s; x'); VALUES ('a\\';b')")
+      === Seq("VALUES ('it''s; x')", "VALUES ('a\\';b')"))
   }
 
   test("SHOW TABLES lists the catalog; SHOW CREATE TABLE round-trips the DDL") {
